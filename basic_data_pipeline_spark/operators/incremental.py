@@ -24,7 +24,8 @@ whole index's bands (O(corpus) shuffle per batch); with it, the per-batch
 cost is O(increment) shuffle + an in-place index scan — increment-cost
 dedup instead of corpus-cost. The bucket spec is persisted in
 `_meta.json` so appends always match, and a fresh session re-registers
-the tables from disk (`_ensure_registered`).
+the tables from disk (the layout is declared once in
+operators/indexspec.py).
 
 An increment of n docs costs: shingle+sign n docs, ONE banded equi-join
 against the index bands (only the increment side shuffles to the bucket
@@ -50,8 +51,6 @@ keep-lowest-id to mean keep-oldest.
 
 from __future__ import annotations
 
-import hashlib
-import json
 import os
 import shutil
 import uuid
@@ -62,41 +61,10 @@ from pyspark.sql import functions as F
 
 from basic_data_pipeline_spark.caching import tracked_persist
 from basic_data_pipeline_spark.streaming import swapstore as _swapstore
-from basic_data_pipeline_spark.operators import dedup
-from basic_data_pipeline_spark.sources import tables
+from basic_data_pipeline_spark.operators import dedup, indexspec
 
-DEFAULT_INDEX_BUCKETS = 16
-
-
-def _p(index_path: str, name: str) -> str:
-    return os.path.join(index_path, name)
-
-
-def _table_names(index_path: str) -> tuple[str, str]:
-    """Catalog table names derived from the index location — stable across
-    sessions (md5 of the absolute path, not Python's seeded hash())."""
-    h = hashlib.md5(os.path.abspath(index_path).encode()).hexdigest()[:12]
-    return f"dedup_idx_{h}_bands", f"dedup_idx_{h}_shingles"
-
-
-def _write_meta(index_path: str, meta: dict) -> None:
-    os.makedirs(index_path, exist_ok=True)
-    with open(_p(index_path, "_meta.json"), "w") as f:
-        json.dump(meta, f)
-
-
-def _read_meta(index_path: str) -> dict:
-    try:
-        with open(_p(index_path, "_meta.json")) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        raise RuntimeError(
-            f"dedup index at {index_path!r} has no _meta.json — either the "
-            "path is not an index, or it predates the bucketed index format "
-            "(which stores its bucket spec there). Rebuild it with "
-            "build_index(); appending to an unbucketed layout would "
-            "silently lose the zero-shuffle join property."
-        ) from None
+SPEC = indexspec.DEDUP
+DEFAULT_INDEX_BUCKETS = SPEC.n_buckets
 
 
 def _prune_staging(index_path: str, meta: dict) -> None:
@@ -107,49 +75,19 @@ def _prune_staging(index_path: str, meta: dict) -> None:
     before then."""
     staged = meta.get("staging", [])
     for rel in staged[:-1]:
-        shutil.rmtree(_p(index_path, rel), ignore_errors=True)
+        shutil.rmtree(os.path.join(index_path, rel), ignore_errors=True)
     meta["staging"] = staged[-1:]
 
 
-def _ensure_registered(
-    spark: SparkSession,
-    table: str,
-    path: str,
-    bucket_cols: list[str],
-    n_buckets: int,
-) -> DataFrame:
-    """Return the bucketed index table, re-registering it in the catalog
-    from the on-disk files if this session has never seen it (bucketing
-    metadata lives in the catalog; the parquet files alone don't carry
-    it). The bucket spec comes from _meta.json, so the registration
-    always matches what write_bucketed laid down."""
-    if not spark.catalog.tableExists(table):
-        schema = spark.read.parquet(path).schema
-        cols = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
-        )
-        bcols = ", ".join(f"`{c}`" for c in bucket_cols)
-        spark.sql(
-            f"CREATE TABLE {table} ({cols}) USING PARQUET "
-            f"CLUSTERED BY ({bcols}) SORTED BY ({bcols}) "
-            f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
-        )
-    return spark.table(table)
-
-
 def _index_tables(
-    spark: SparkSession, index_path: str, id_col: str
+    spark: SparkSession, index_path: str
 ) -> tuple[DataFrame, DataFrame, dict]:
-    meta = _read_meta(index_path)
-    bands_t, sh_t = _table_names(index_path)
-    idx_bands = _ensure_registered(
-        spark, bands_t, _p(index_path, "bands"), ["band", "bandkey"],
-        meta["n_buckets"],
+    meta = SPEC.read_meta(spark, index_path)
+    return (
+        SPEC.register(spark, index_path, "bands", meta),
+        SPEC.register(spark, index_path, "shingles", meta),
+        meta,
     )
-    idx_sh = _ensure_registered(
-        spark, sh_t, _p(index_path, "shingles"), [id_col], meta["n_buckets"]
-    )
-    return idx_bands, idx_sh, meta
 
 
 def _cross_candidates(
@@ -184,7 +122,7 @@ def _materialized_dropped(
     frame and the index-relative staging path (for meta tracking /
     pruning by later calls — see _prune_staging)."""
     rel = os.path.join("_staging", uuid.uuid4().hex)
-    staging = _p(index_path, rel)
+    staging = os.path.join(index_path, rel)
     dropped_src.write.mode("overwrite").parquet(staging)
     return spark.read.parquet(staging), rel
 
@@ -241,39 +179,21 @@ def build_index(
 
     # a rebuild invalidates any staged dropped-id parquets from a prior
     # index at the same path
-    shutil.rmtree(_p(index_path, "_staging"), ignore_errors=True)
-    bands_t, sh_t = _table_names(index_path)
-    tables.write_bucketed(
-        idx_bands.select(id_col, "band", "bandkey"),
-        bands_t,
-        ["band", "bandkey"],
-        n_buckets,
-        sort_cols=["band", "bandkey"],
-        path=_p(index_path, "bands"),
-    )
-    tables.write_bucketed(
-        idx_sh.select(id_col, "shingle"),
-        sh_t,
-        [id_col],
-        n_buckets,
-        sort_cols=[id_col],
-        path=_p(index_path, "shingles"),
-    )
-    _write_meta(
-        index_path,
-        {
-            "n_buckets": n_buckets,
-            "survivor_policy": survivor_policy,
-            "staging": [],
-            # id column + the base corpus's max id (a column-pruned
-            # aggregate): with ids monotone across batches, every index
-            # row with id <= max_id belongs to the BASE build — the
-            # anchor the streaming rebuild helper filters against when
-            # no epoch has completed yet (streaming/rebuild.py)
-            "id_col": id_col,
-            "max_id": docs.agg(F.max(id_col)).first()[0],
-        },
-    )
+    shutil.rmtree(os.path.join(index_path, "_staging"), ignore_errors=True)
+    meta = {
+        "n_buckets": n_buckets,
+        "survivor_policy": survivor_policy,
+        "staging": [],
+        "id_col": id_col,
+    }
+    SPEC.write(idx_bands.select(id_col, "band", "bandkey"), index_path,
+               "bands", meta, mode="overwrite")
+    SPEC.write(idx_sh.select(id_col, "shingle"), index_path, "shingles",
+               meta, mode="overwrite")
+    # the base corpus's max id (a column-pruned aggregate) anchors the
+    # watermark cut before any epoch completes (operators/indexspec.py)
+    meta["max_id"] = docs.agg(F.max(id_col)).first()[0]
+    SPEC.write_meta(index_path, meta)
     return survivors
 
 
@@ -282,23 +202,15 @@ def read_dedup_index(
 ) -> dict[str, DataFrame]:
     """{'bands', 'shingles'}: the index content, for external readers.
     ``as_of_completed=True`` pins both tables to the last COMPLETED
-    epoch's id watermark (operators/indexsnap.py — the same cut the
+    epoch's id watermark (operators/indexspec.py — the same cut the
     crash rebuild makes), so a read concurrent with an in-flight append
     sees a consistent snapshot instead of a partial epoch. Two codegen
     filters, no extra pass; the bucketed layout is preserved."""
-    from basic_data_pipeline_spark.operators import indexsnap
-
-    meta = _read_meta(index_path)
-    id_col = meta.get("id_col")
-    if id_col is None:  # legacy meta: the non-key column of bands
-        cols = set(spark.read.parquet(_p(index_path, "bands")).columns)
-        id_col = (cols - {"band", "bandkey"}).pop()
-    bands, shingles, _ = _index_tables(spark, index_path, id_col)
-    if as_of_completed:
-        wm = indexsnap.require_watermark(index_path, meta)
-        bands = bands.filter(F.col(id_col) <= F.lit(wm))
-        shingles = shingles.filter(F.col(id_col) <= F.lit(wm))
-    return {"bands": bands, "shingles": shingles}
+    meta, cut = SPEC.pinned(spark, index_path, as_of_completed)
+    return {
+        t: SPEC.read(spark, index_path, t, meta, cut)
+        for t in ("bands", "shingles")
+    }
 
 
 @_swapstore.leased("index_path", owner="batch:incremental.incremental_dedup")
@@ -333,7 +245,7 @@ def incremental_dedup(
     mixing append semantics (``cluster`` retains dropped docs, ``greedy``
     doesn't) would silently break the index's invariant for every later
     batch. Rebuild with build_index(survivor_policy=...) to switch."""
-    idx_bands, idx_sh, meta = _index_tables(spark, index_path, id_col)
+    idx_bands, idx_sh, meta = _index_tables(spark, index_path)
     built_with = meta.get("survivor_policy", "greedy")
     if survivor_policy is not None and survivor_policy != built_with:
         raise ValueError(
@@ -365,7 +277,7 @@ def incremental_dedup(
         spark, _dropped_ids(pairs, id_col, policy), index_path, id_col
     )
     meta["staging"] = meta.get("staging", []) + [staging_rel]
-    _write_meta(index_path, meta)
+    SPEC.write_meta(index_path, meta)
     # surface the hot-bucket cap's drop counts (one tiny aggregate over
     # the still-cached pre-cap bands) so a corpus whose organic buckets
     # exceed max_bucket is noticed rather than silently under-deduped
@@ -390,51 +302,15 @@ def incremental_dedup(
             keep = survivors.select(id_col)
             add_bands = new_bands.join(keep, id_col)
             add_sh = new_sh.join(keep, id_col)
-        bands_t, sh_t = _table_names(index_path)
-        tables.write_bucketed(
-            add_bands.select(id_col, "band", "bandkey"),
-            bands_t,
-            ["band", "bandkey"],
-            meta["n_buckets"],
-            sort_cols=["band", "bandkey"],
-            mode="append",
-            path=_p(index_path, "bands"),
-        )
-        tables.write_bucketed(
-            add_sh.select(id_col, "shingle"),
-            sh_t,
-            [id_col],
-            meta["n_buckets"],
-            sort_cols=[id_col],
-            mode="append",
-            path=_p(index_path, "shingles"),
-        )
+        SPEC.write(add_bands.select(id_col, "band", "bandkey"), index_path,
+                   "bands", meta)
+        SPEC.write(add_sh.select(id_col, "shingle"), index_path,
+                   "shingles", meta)
     return survivors
 
 
-@_swapstore.leased("index_path", owner="batch:incremental.compact_index")
 def compact_index(spark: SparkSession, index_path: str) -> dict:
-    """Fold the bands/shingles tables back to one file per bucket —
-    every epoch append lays down n_buckets more files, so a long-lived
-    stream accretes files linearly (maintenance.compact_bucketed; plain
-    compact_parquet would break the bucket-file naming the zero-exchange
-    membership joins rely on). Refuses while a crashed epoch's intent
-    marker is pending. Returns {table: {rows, files_before,
-    files_after}}."""
-    from basic_data_pipeline_spark.operators import maintenance
-
-    maintenance.assert_clean_stream_ledger(index_path)
-    meta = _read_meta(index_path)
-    bands_t, sh_t = _table_names(index_path)
-    id_col = meta["id_col"]
-    return {
-        "bands": maintenance.compact_bucketed(
-            spark, _p(index_path, "bands"), bands_t,
-            ["band", "bandkey"], meta["n_buckets"],
-            sort_cols=["band", "bandkey"],
-        ),
-        "shingles": maintenance.compact_bucketed(
-            spark, _p(index_path, "shingles"), sh_t,
-            [id_col], meta["n_buckets"], sort_cols=[id_col],
-        ),
-    }
+    """Fold the bands/shingles tables back to one file per bucket
+    (IndexSpec.compact: writer lease, intent guard). Returns {table:
+    {rows, files_before, files_after}}."""
+    return SPEC.compact(spark, index_path)

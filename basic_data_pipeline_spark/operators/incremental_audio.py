@@ -36,10 +36,6 @@ be capped at build time by the same parameter.
 
 from __future__ import annotations
 
-import hashlib
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -48,61 +44,10 @@ from basic_data_pipeline_spark.caching import (
     free_local_checkpoint,
     tracked_local_checkpoint,
 )
-from basic_data_pipeline_spark.operators import audio
-from basic_data_pipeline_spark.sources import tables
+from basic_data_pipeline_spark.operators import audio, indexspec
 
-DEFAULT_INDEX_BUCKETS = 16
-
-
-def _p(index_path: str, name: str) -> str:
-    return os.path.join(index_path, name)
-
-
-def _table_name(index_path: str) -> str:
-    h = hashlib.md5(os.path.abspath(index_path).encode()).hexdigest()[:12]
-    return f"aud_idx_{h}_fps"
-
-
-def _meta_rw(index_path: str, meta: dict | None = None) -> dict:
-    path = _p(index_path, "_meta.json")
-    if meta is not None:
-        os.makedirs(index_path, exist_ok=True)
-        with open(path, "w") as f:
-            json.dump(meta, f)
-        return meta
-    with open(path) as f:
-        return json.load(f)
-
-
-def _registered_fps(
-    spark: SparkSession, index_path: str, n_buckets: int
-) -> DataFrame:
-    table = _table_name(index_path)
-    if not spark.catalog.tableExists(table):
-        schema = spark.read.parquet(_p(index_path, "fps")).schema
-        cols = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
-        )
-        spark.sql(
-            f"CREATE TABLE {table} ({cols}) USING PARQUET "
-            "CLUSTERED BY (fhash) SORTED BY (fhash) "
-            f"INTO {n_buckets} BUCKETS LOCATION '{_p(index_path, 'fps')}'"
-        )
-    return spark.table(table)
-
-
-def _write_fps(
-    fps: DataFrame, index_path: str, n_buckets: int, mode: str = "append"
-) -> None:
-    tables.write_bucketed(
-        fps,
-        _table_name(index_path),
-        ["fhash"],
-        n_buckets,
-        sort_cols=["fhash"],
-        mode=mode,
-        path=_p(index_path, "fps"),
-    )
+SPEC = indexspec.AUDIO
+DEFAULT_INDEX_BUCKETS = SPEC.n_buckets
 
 
 def _cap_hot(fps: DataFrame, max_hash_df: int | None) -> DataFrame:
@@ -145,15 +90,10 @@ def build_audio_index(
     survivors = tracked_local_checkpoint(
         fps.join(dropped, "media_id", "left_anti")
     )
-    _write_fps(survivors, index_path, n_buckets, mode="overwrite")
-    _meta_rw(
-        index_path,
-        {
-            "n_buckets": n_buckets,
-            "id_col": id_col,
-            "max_id": media.agg(F.max(id_col)).first()[0],
-        },
-    )
+    meta = {"n_buckets": n_buckets, "id_col": id_col}
+    SPEC.write(survivors, index_path, "fps", meta, mode="overwrite")
+    meta["max_id"] = media.agg(F.max(id_col)).first()[0]
+    SPEC.write_meta(index_path, meta)
     free_local_checkpoint(fps)
     return survivors
 
@@ -163,18 +103,12 @@ def read_audio_index(
 ) -> DataFrame:
     """The constellation fingerprint table (fhash, id, t), for external
     readers. ``as_of_completed=True`` pins the read to the last
-    COMPLETED epoch's id watermark (operators/indexsnap.py — the
+    COMPLETED epoch's id watermark (operators/indexspec.py — the
     rebuild cut), so a read concurrent with an in-flight append sees a
     consistent snapshot. One codegen filter; bucketed layout
     preserved."""
-    from basic_data_pipeline_spark.operators import indexsnap
-
-    meta = _meta_rw(index_path)
-    fps = _registered_fps(spark, index_path, meta["n_buckets"])
-    if as_of_completed:
-        wm = indexsnap.require_watermark(index_path, meta)
-        fps = fps.filter(F.col(meta["id_col"]) <= F.lit(wm))
-    return fps
+    meta, cut = SPEC.pinned(spark, index_path, as_of_completed)
+    return SPEC.read(spark, index_path, "fps", meta, cut)
 
 
 @_swapstore.leased("index_path", owner="batch:incremental_audio.incremental_audio_dedup")
@@ -196,9 +130,9 @@ def incremental_audio_dedup(
     any one corpus recording collects ≥ ``min_votes`` collisions at a
     single consistent offset. The corpus side always wins; within the
     batch the lower id wins (audio.audio_match_pairs)."""
-    meta = _meta_rw(index_path)
+    meta = SPEC.read_meta(spark, index_path)
     id_col = meta["id_col"]
-    idx = _registered_fps(spark, index_path, meta["n_buckets"])
+    idx = SPEC.register(spark, index_path, "fps", meta)
 
     raw = (
         new_media
@@ -235,26 +169,13 @@ def incremental_audio_dedup(
         fps.join(dropped, "media_id", "left_anti")
     )
     if update_index:
-        _write_fps(survivors, index_path, meta["n_buckets"])
+        SPEC.write(survivors, index_path, "fps", meta)
     free_local_checkpoint(fps)
     free_local_checkpoint(dropped)
     return survivors
 
 
-@_swapstore.leased("index_path", owner="batch:incremental_audio.compact_audio_index")
 def compact_audio_index(spark: SparkSession, index_path: str) -> dict:
-    """Fold the fingerprint table back to one file per bucket —
-    bucket-preserving, via the shared maintenance.compact_bucketed."""
-    from basic_data_pipeline_spark.operators.maintenance import (
-        compact_bucketed,
-    )
-
-    meta = _meta_rw(index_path)
-    return compact_bucketed(
-        spark,
-        _p(index_path, "fps"),
-        _table_name(index_path),
-        ["fhash"],
-        meta["n_buckets"],
-        sort_cols=["fhash"],
-    )
+    """Fold the fingerprint table back to one file per bucket
+    (IndexSpec.compact). Returns {rows, files_before, files_after}."""
+    return SPEC.compact(spark, index_path)["fps"]

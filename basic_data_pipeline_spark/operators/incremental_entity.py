@@ -42,10 +42,6 @@ minimum" always means "the oldest record wins" across any batch split.
 
 from __future__ import annotations
 
-import hashlib
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
@@ -53,48 +49,11 @@ from pyspark.sql.window import Window as W
 from basic_data_pipeline_spark.caching import tracked_persist
 from basic_data_pipeline_spark.streaming import swapstore as _swapstore
 from basic_data_pipeline_spark.operators import entity as E
+from basic_data_pipeline_spark.operators import indexspec
 from basic_data_pipeline_spark.operators.dedup import duplicate_clusters
-from basic_data_pipeline_spark.sources import tables
 
-DEFAULT_BUCKETS = 8
-
-
-def _p(index_path: str, name: str) -> str:
-    return os.path.join(index_path, name)
-
-
-def _tnames(index_path: str) -> tuple[str, str]:
-    h = hashlib.md5(os.path.abspath(index_path).encode()).hexdigest()[:12]
-    return f"ent_idx_{h}_grams", f"ent_idx_{h}_strings"
-
-
-def _meta_rw(index_path: str, meta: dict | None = None) -> dict:
-    path = _p(index_path, "_meta.json")
-    if meta is not None:
-        os.makedirs(index_path, exist_ok=True)
-        with open(path, "w") as f:
-            json.dump(meta, f)
-        return meta
-    with open(path) as f:
-        return json.load(f)
-
-
-def _register(
-    spark: SparkSession, table: str, path: str, bucket_cols: list[str],
-    n_buckets: int,
-) -> DataFrame:
-    if not spark.catalog.tableExists(table):
-        schema = spark.read.parquet(path).schema
-        cols = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
-        )
-        bcols = ", ".join(f"`{c}`" for c in bucket_cols)
-        spark.sql(
-            f"CREATE TABLE {table} ({cols}) USING PARQUET "
-            f"CLUSTERED BY ({bcols}) SORTED BY ({bcols}) "
-            f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
-        )
-    return spark.table(table)
+SPEC = indexspec.ENTITY
+DEFAULT_BUCKETS = SPEC.n_buckets
 
 
 def _prefix_with_frozen_freq(
@@ -152,40 +111,30 @@ def build_entity_index(
         .groupBy("gram")
         .agg(F.count(F.lit(1)).alias("f"))
     )
-    freq.write.mode("overwrite").parquet(_p(index_path, "freq"))
-    freq = spark.read.parquet(_p(index_path, "freq"))
+    freq.write.mode("overwrite").parquet(SPEC.path(index_path, "freq"))
+    freq = spark.read.parquet(SPEC.path(index_path, "freq"))
 
-    grams_t, strings_t = _tnames(index_path)
+    meta = {"id_col": id_col, "text_col": text_col, "max_edit": max_edit,
+            "q": q, "n_buckets": n_buckets}
     pg = _prefix_with_frozen_freq(norm, freq, max_edit, q).select(
         "gram", F.col("_id").alias("id"), "_len"
     )
-    tables.write_bucketed(
-        pg, grams_t, ["gram"], n_buckets, path=_p(index_path, "grams")
-    )
+    SPEC.write(pg, index_path, "grams", meta, mode="overwrite")
     strings = norm.join(
         assigned.select(
             F.col(id_col).alias("_id"), F.col("entity_id").alias("entity")
         ),
         "_id",
     ).select(F.col("_id").alias("id"), F.col("_txt").alias("text"), "entity")
-    tables.write_bucketed(
-        strings, strings_t, ["id"], n_buckets, path=_p(index_path, "strings")
-    )
+    SPEC.write(strings, index_path, "strings", meta, mode="overwrite")
     # alias rows carry the stream epoch that appended them (_epoch;
-    # null for batch callers) so the rebuild helper can drop a crashed
-    # epoch's half-appended merges — see streaming/rebuild.py
+    # null for batch callers): the watermark cut of a crashed epoch's
+    # half-appended merges
     spark.createDataFrame(
         [], "entity long, canonical long, _epoch int"
-    ).write.mode("overwrite").parquet(_p(index_path, "aliases"))
-    _meta_rw(
-        index_path,
-        {
-            "id_col": id_col, "text_col": text_col, "max_edit": max_edit,
-            "q": q, "n_buckets": n_buckets,
-            # base-corpus id watermark for the streaming rebuild helper
-            "max_id": records.agg(F.max(id_col)).first()[0],
-        },
-    )
+    ).write.mode("overwrite").parquet(SPEC.path(index_path, "aliases"))
+    meta["max_id"] = records.agg(F.max(id_col)).first()[0]
+    SPEC.write_meta(index_path, meta)
     return assigned
 
 
@@ -235,20 +184,15 @@ def incremental_resolve(
     edges → canonical = component minimum (the oldest id). Old entities
     bridged into one component are merged via the append-only alias log,
     never by rewriting index rows."""
-    meta = _meta_rw(index_path)
+    meta = SPEC.read_meta(spark, index_path)
     id_col, text_col = meta["id_col"], meta["text_col"]
-    k, q, n_buckets = meta["max_edit"], meta["q"], meta["n_buckets"]
-    grams_t, strings_t = _tnames(index_path)
-    idx_grams = _register(
-        spark, grams_t, _p(index_path, "grams"), ["gram"], n_buckets
-    )
-    idx_strings = _register(
-        spark, strings_t, _p(index_path, "strings"), ["id"], n_buckets
-    )
-    freq = spark.read.parquet(_p(index_path, "freq"))
+    k, q = meta["max_edit"], meta["q"]
+    idx_grams = SPEC.register(spark, index_path, "grams", meta)
+    idx_strings = SPEC.register(spark, index_path, "strings", meta)
+    freq = spark.read.parquet(SPEC.path(index_path, "freq"))
     # select the two logical columns: legacy alias dirs lack _epoch and
     # post-upgrade dirs carry it — neither shape may leak into joins
-    aliases = spark.read.parquet(_p(index_path, "aliases")).select(
+    aliases = spark.read.parquet(SPEC.path(index_path, "aliases")).select(
         "entity", "canonical"
     )
 
@@ -315,17 +259,14 @@ def incremental_resolve(
             .distinct()
             .withColumn("_epoch", F.lit(epoch).cast("int"))
         )
-        merges.write.mode("append").parquet(_p(index_path, "aliases"))
+        merges.write.mode("append").parquet(SPEC.path(index_path, "aliases"))
     assigned = tracked_persist(assigned)
     assigned.count()  # pin assignments BEFORE the index grows
 
     # fold the batch into the index
-    tables.write_bucketed(
-        pg.select("gram", F.col("_id").alias("id"), "_len"),
-        grams_t, ["gram"], n_buckets, mode="append",
-        path=_p(index_path, "grams"),
-    )
-    tables.write_bucketed(
+    SPEC.write(pg.select("gram", F.col("_id").alias("id"), "_len"),
+               index_path, "grams", meta)
+    SPEC.write(
         norm.join(
             assigned.select(
                 F.col(id_col).alias("_id"), F.col("entity_id").alias("entity")
@@ -334,8 +275,7 @@ def incremental_resolve(
         ).select(
             F.col("_id").alias("id"), F.col("_txt").alias("text"), "entity"
         ),
-        strings_t, ["id"], n_buckets, mode="append",
-        path=_p(index_path, "strings"),
+        index_path, "strings", meta,
     )
     return assigned
 
@@ -347,58 +287,26 @@ def current_entities(
     user-facing dump of the maintained resolution.
 
     ``as_of_completed=True`` pins the read to the last COMPLETED epoch
-    (operators/indexsnap.py): strings above the id watermark and alias
+    (operators/indexspec.py): strings above the id watermark and alias
     rows tagged with a later epoch are filtered out — the same cuts the
     crash rebuild makes — so a read concurrent with an in-flight append
     resolves against a consistent snapshot. Legacy alias logs without
     the _epoch column keep all rows (their in-flight merges cannot be
     identified; alias reads are distinct-ed so the worst case is seeing
     a merge early, never a torn one)."""
-    meta = _meta_rw(index_path)
-    _, strings_t = _tnames(index_path)
-    strings = _register(
-        spark, strings_t, _p(index_path, "strings"), ["id"],
-        meta["n_buckets"],
+    meta, cut = SPEC.pinned(spark, index_path, as_of_completed)
+    strings = SPEC.read(spark, index_path, "strings", meta, cut)
+    aliases = SPEC.read(spark, index_path, "aliases", meta, cut).select(
+        "entity", "canonical"
     )
-    al = spark.read.option("mergeSchema", "true").parquet(
-        _p(index_path, "aliases")
-    )
-    if as_of_completed:
-        from basic_data_pipeline_spark.operators import indexsnap
-
-        wm = indexsnap.require_watermark(index_path, meta)
-        strings = strings.filter(F.col("id") <= F.lit(wm))
-        if "_epoch" in al.columns:
-            last = indexsnap.last_completed_epoch(index_path)
-            al = al.filter(
-                F.col("_epoch").isNull() | (F.col("_epoch") <= F.lit(last))
-            )
-    aliases = al.select("entity", "canonical")
     out = strings.select(
         F.col("id").alias(meta["id_col"]), F.col("entity").alias("entity_id")
     )
     return _resolve_aliases(out, aliases, "entity_id")
 
 
-@_swapstore.leased("index_path", owner="batch:incremental_entity.compact_index")
 def compact_index(spark: SparkSession, index_path: str) -> dict:
-    """Fold the grams/strings tables back to one file per bucket (see
-    incremental.compact_index — same epoch-accretion rationale, same
-    intent guard). The frozen freq table and the alias log are left
-    alone: freq is write-once, and the alias log is a plain (epoch-
-    tagged) parquet dir — compact_parquet applies to it directly."""
-    from basic_data_pipeline_spark.operators import maintenance
-
-    maintenance.assert_clean_stream_ledger(index_path)
-    meta = _meta_rw(index_path)
-    grams_t, strings_t = _tnames(index_path)
-    return {
-        "grams": maintenance.compact_bucketed(
-            spark, _p(index_path, "grams"), grams_t,
-            ["gram"], meta["n_buckets"],
-        ),
-        "strings": maintenance.compact_bucketed(
-            spark, _p(index_path, "strings"), strings_t,
-            ["id"], meta["n_buckets"],
-        ),
-    }
+    """Fold the grams/strings tables back to one file per bucket
+    (IndexSpec.compact). The frozen freq table and the epoch-tagged
+    alias log are plain parquet dirs, left alone."""
+    return SPEC.compact(spark, index_path)

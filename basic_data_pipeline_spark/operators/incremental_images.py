@@ -36,10 +36,6 @@ band rows never shuffle.
 
 from __future__ import annotations
 
-import hashlib
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -48,50 +44,10 @@ from basic_data_pipeline_spark.caching import (
     free_local_checkpoint,
     tracked_local_checkpoint,
 )
-from basic_data_pipeline_spark.operators import images
-from basic_data_pipeline_spark.sources import tables
+from basic_data_pipeline_spark.operators import images, indexspec
 
-DEFAULT_INDEX_BUCKETS = 16
-
-
-def _p(index_path: str, name: str) -> str:
-    return os.path.join(index_path, name)
-
-
-def _table_name(index_path: str) -> str:
-    h = hashlib.md5(os.path.abspath(index_path).encode()).hexdigest()[:12]
-    return f"img_idx_{h}_bands"
-
-
-def _meta_rw(index_path: str, meta: dict | None = None) -> dict:
-    path = _p(index_path, "_meta.json")
-    if meta is not None:
-        os.makedirs(index_path, exist_ok=True)
-        with open(path, "w") as f:
-            json.dump(meta, f)
-        return meta
-    with open(path) as f:
-        return json.load(f)
-
-
-def _registered_bands(
-    spark: SparkSession, index_path: str, n_buckets: int, id_col: str
-) -> DataFrame:
-    """The bucketed band table, re-registered from the on-disk files if
-    this session has never seen it (schema FROM the parquet, so the id
-    column keeps its native type)."""
-    table = _table_name(index_path)
-    if not spark.catalog.tableExists(table):
-        schema = spark.read.parquet(_p(index_path, "bands")).schema
-        cols = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
-        )
-        spark.sql(
-            f"CREATE TABLE {table} ({cols}) USING PARQUET "
-            "CLUSTERED BY (bi, bv) SORTED BY (bi, bv) "
-            f"INTO {n_buckets} BUCKETS LOCATION '{_p(index_path, 'bands')}'"
-        )
-    return spark.table(table)
+SPEC = indexspec.IMAGE
+DEFAULT_INDEX_BUCKETS = SPEC.n_buckets
 
 
 def _hash_or_passthrough(media: DataFrame, id_col: str) -> DataFrame:
@@ -102,20 +58,6 @@ def _hash_or_passthrough(media: DataFrame, id_col: str) -> DataFrame:
             id_col, "width", "height", "ihash"
         )
     return images.image_hashes(media, id_col=id_col)
-
-
-def _write_bands(
-    bands: DataFrame, index_path: str, n_buckets: int, mode: str = "append"
-) -> None:
-    tables.write_bucketed(
-        bands,
-        _table_name(index_path),
-        ["bi", "bv"],
-        n_buckets,
-        sort_cols=["bi", "bv"],
-        mode=mode,
-        path=_p(index_path, "bands"),
-    )
 
 
 @_swapstore.leased("index_path", owner="batch:incremental_images.build_image_index")
@@ -150,22 +92,12 @@ def build_image_index(
     pairs = images.image_near_dup_pairs(hashes, max_hamming, id_col=id_col)
     dropped = pairs.select(F.col("id_b").alias(id_col)).distinct()
     survivors = hashes.join(dropped, id_col, "left_anti")
-    _write_bands(
-        images.hash_bands(survivors, max_hamming, id_col=id_col),
-        index_path,
-        n_buckets,
-        mode="overwrite",
-    )
-    _meta_rw(
-        index_path,
-        {
-            "max_hamming": max_hamming,
-            "method": method,
-            "n_buckets": n_buckets,
-            "id_col": id_col,
-            "max_id": media.agg(F.max(id_col)).first()[0],
-        },
-    )
+    meta = {"max_hamming": max_hamming, "method": method,
+            "n_buckets": n_buckets, "id_col": id_col}
+    SPEC.write(images.hash_bands(survivors, max_hamming, id_col=id_col),
+               index_path, "bands", meta, mode="overwrite")
+    meta["max_id"] = media.agg(F.max(id_col)).first()[0]
+    SPEC.write_meta(index_path, meta)
     out = tracked_local_checkpoint(survivors)
     free_local_checkpoint(hashes)
     return out
@@ -176,20 +108,12 @@ def read_image_index(
 ) -> DataFrame:
     """The perceptual band table (bi, bv, id, full hash), for external
     readers. ``as_of_completed=True`` pins the read to the last
-    COMPLETED epoch's id watermark (operators/indexsnap.py — the
+    COMPLETED epoch's id watermark (operators/indexspec.py — the
     rebuild cut), so a read concurrent with an in-flight append sees a
     consistent snapshot. One codegen filter; bucketed layout
     preserved."""
-    from basic_data_pipeline_spark.operators import indexsnap
-
-    meta = _meta_rw(index_path)
-    bands = _registered_bands(
-        spark, index_path, meta["n_buckets"], meta["id_col"]
-    )
-    if as_of_completed:
-        wm = indexsnap.require_watermark(index_path, meta)
-        bands = bands.filter(F.col(meta["id_col"]) <= F.lit(wm))
-    return bands
+    meta, cut = SPEC.pinned(spark, index_path, as_of_completed)
+    return SPEC.read(spark, index_path, "bands", meta, cut)
 
 
 @_swapstore.leased("index_path", owner="batch:incremental_images.incremental_image_dedup")
@@ -208,9 +132,9 @@ def incremental_image_dedup(
     verify inline with ``bit_count(corpus_hash XOR new_hash)`` (each
     band row carries its full hash; no second lookup). The corpus side
     always wins; within the batch the lower id wins."""
-    meta = _meta_rw(index_path)
+    meta = SPEC.read_meta(spark, index_path)
     id_col, mh = meta["id_col"], meta["max_hamming"]
-    idx = _registered_bands(spark, index_path, meta["n_buckets"], id_col)
+    idx = SPEC.register(spark, index_path, "bands", meta)
 
     hashes = tracked_local_checkpoint(
         _hash_or_passthrough(new_media, id_col)
@@ -246,31 +170,14 @@ def incremental_image_dedup(
         hashes.join(dropped, id_col, "left_anti")
     )
     if update_index:
-        _write_bands(
-            images.hash_bands(survivors, mh, id_col=id_col),
-            index_path,
-            meta["n_buckets"],
-        )
+        SPEC.write(images.hash_bands(survivors, mh, id_col=id_col),
+                   index_path, "bands", meta)
     free_local_checkpoint(hashes)
     free_local_checkpoint(dropped)
     return survivors
 
 
-@_swapstore.leased("index_path", owner="batch:incremental_images.compact_image_index")
 def compact_image_index(spark: SparkSession, index_path: str) -> dict:
-    """Fold the band table back to one file per bucket (every epoch
-    append lays down n_buckets more files) — bucket-preserving, via the
-    shared maintenance.compact_bucketed."""
-    from basic_data_pipeline_spark.operators.maintenance import (
-        compact_bucketed,
-    )
-
-    meta = _meta_rw(index_path)
-    return compact_bucketed(
-        spark,
-        _p(index_path, "bands"),
-        _table_name(index_path),
-        ["bi", "bv"],
-        meta["n_buckets"],
-        sort_cols=["bi", "bv"],
-    )
+    """Fold the band table back to one file per bucket
+    (IndexSpec.compact). Returns {rows, files_before, files_after}."""
+    return SPEC.compact(spark, index_path)["bands"]

@@ -2,7 +2,7 @@
 components maintained across appends at INCREMENT cost.
 
 The graph sibling of operators/incremental.py (and the index behind
-streaming/graph_stream.py): a crawl discovers edges continuously; the
+streaming/dedup_stream.py): a crawl discovers edges continuously; the
 questions a curation pipeline asks of the graph — "which site cluster
 is this page in?", "how big is its component?" — must not require
 re-running connected components over every edge ever seen. This index
@@ -45,7 +45,7 @@ all completed watermarks (the crawl convention: src is the newly
 fetched page) — and all three tables cut back to a watermark with one
 filter (edges on src, labels and merges on _wm), which is what
 streaming/rebuild.py:rebuild_graph_index does after a mid-append crash
-(the guarded stream twin is streaming/graph_stream.py).
+(the guarded stream twin is streaming/dedup_stream.py).
 
 Per-batch cost: one distinct + bucketed anti-join for edge dedup, one
 bucketed join of the batch's ENDPOINTS against labels/, one
@@ -57,10 +57,6 @@ Corpus edges and corpus labels never shuffle.
 
 from __future__ import annotations
 
-import hashlib
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -69,47 +65,10 @@ from basic_data_pipeline_spark.caching import (
     free_local_checkpoint,
     tracked_local_checkpoint,
 )
-from basic_data_pipeline_spark.sources import tables
+from basic_data_pipeline_spark.operators import indexspec
 
-DEFAULT_INDEX_BUCKETS = 16
-
-
-def _p(index_path: str, name: str) -> str:
-    return os.path.join(index_path, name)
-
-
-def _tname(index_path: str, which: str) -> str:
-    h = hashlib.md5(os.path.abspath(index_path).encode()).hexdigest()[:12]
-    return f"graph_idx_{h}_{which}"
-
-
-def _meta_rw(index_path: str, meta: dict | None = None) -> dict:
-    path = _p(index_path, "_meta.json")
-    if meta is not None:
-        os.makedirs(index_path, exist_ok=True)
-        with open(path, "w") as f:
-            json.dump(meta, f)
-        return meta
-    with open(path) as f:
-        return json.load(f)
-
-
-def _registered(
-    spark: SparkSession, index_path: str, which: str, bucket_col: str,
-    n_buckets: int,
-) -> DataFrame:
-    table = _tname(index_path, which)
-    if not spark.catalog.tableExists(table):
-        schema = spark.read.parquet(_p(index_path, which)).schema
-        cols = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
-        )
-        spark.sql(
-            f"CREATE TABLE {table} ({cols}) USING PARQUET "
-            f"CLUSTERED BY ({bucket_col}) SORTED BY ({bucket_col}) "
-            f"INTO {n_buckets} BUCKETS LOCATION '{_p(index_path, which)}'"
-        )
-    return spark.table(table)
+SPEC = indexspec.GRAPH
+DEFAULT_INDEX_BUCKETS = SPEC.n_buckets
 
 
 def _norm_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -126,9 +85,9 @@ def load_alias_map(
     merge-bounded and cleared at compaction — the BPE-collect class.
     ``as_of`` (an id watermark) drops merge rows written after it —
     the snapshot-read cut (base rows carry _wm NULL and are kept)."""
-    mg = spark.read.parquet(_p(index_path, "merges"))
+    mg = spark.read.parquet(SPEC.path(index_path, "merges"))
     if as_of is not None:
-        mg = mg.filter(F.col("_wm").isNull() | (F.col("_wm") <= F.lit(as_of)))
+        mg = SPEC.keep_rows(mg, "merges", indexspec.Cut(as_of, -1, None))
     rows = mg.orderBy("_wm", "old").collect()
     fold: dict = {}
     for r in rows:
@@ -148,6 +107,14 @@ def load_alias_map(
 def _alias_df(spark: SparkSession, fold: dict, node_t: str) -> DataFrame:
     return spark.createDataFrame(
         list(fold.items()) or [], f"a_old {node_t}, a_new {node_t}"
+    )
+
+
+def _empty_merges(spark: SparkSession, index_path: str, node_t: str) -> None:
+    spark.createDataFrame(
+        [], f"old {node_t}, new {node_t}, _wm long"
+    ).coalesce(1).write.mode("overwrite").parquet(
+        SPEC.path(index_path, "merges")
     )
 
 
@@ -173,21 +140,12 @@ def build_graph_index(
         F.col("component").alias("label"),
         F.lit(None).cast("long").alias("_wm"),
     )
-    tables.write_bucketed(
-        e, _tname(index_path, "edges"), ["src"], n_buckets,
-        sort_cols=["src"], mode="overwrite", path=_p(index_path, "edges"),
-    )
-    tables.write_bucketed(
-        labels, _tname(index_path, "labels"), ["node"], n_buckets,
-        sort_cols=["node"], mode="overwrite",
-        path=_p(index_path, "labels"),
-    )
-    node_t = dict(e.dtypes)["src"]
-    spark.createDataFrame(
-        [], f"old {node_t}, new {node_t}, _wm long"
-    ).coalesce(1).write.mode("overwrite").parquet(_p(index_path, "merges"))
-    base_wm = e.agg(F.max(F.greatest("src", "dst"))).first()[0]
-    _meta_rw(index_path, {"n_buckets": n_buckets, "max_id": base_wm})
+    meta = {"n_buckets": n_buckets}
+    SPEC.write(e, index_path, "edges", meta, mode="overwrite")
+    SPEC.write(labels, index_path, "labels", meta, mode="overwrite")
+    _empty_merges(spark, index_path, dict(e.dtypes)["src"])
+    meta["max_id"] = e.agg(F.max(F.greatest("src", "dst"))).first()[0]
+    SPEC.write_meta(index_path, meta)
     free_local_checkpoint(e)
     return labels.select("node", "label")
 
@@ -209,10 +167,9 @@ def add_edges(
     the guarded stream."""
     from basic_data_pipeline_spark.operators.dedup import duplicate_clusters
 
-    meta = _meta_rw(index_path)
-    nb = meta["n_buckets"]
-    idx_e = _registered(spark, index_path, "edges", "src", nb)
-    idx_l = _registered(spark, index_path, "labels", "node", nb)
+    meta = SPEC.read_meta(spark, index_path)
+    idx_e = SPEC.register(spark, index_path, "edges", meta)
+    idx_l = SPEC.register(spark, index_path, "labels", meta)
 
     fresh = tracked_local_checkpoint(
         _norm_edges(new_edges, src, dst).join(
@@ -279,19 +236,13 @@ def add_edges(
         )
     )
     # -- index mutations: all appends, all cut by one watermark --------
-    tables.write_bucketed(
-        fresh, _tname(index_path, "edges"), ["src"], nb,
-        sort_cols=["src"], mode="append", path=_p(index_path, "edges"),
-    )
+    SPEC.write(fresh, index_path, "edges", meta)
     new_labels = resolved.where("is_new").select(
         "node",
         F.col("component").alias("label"),
         F.lit(wm).cast("long").alias("_wm"),
     )
-    tables.write_bucketed(
-        new_labels, _tname(index_path, "labels"), ["node"], nb,
-        sort_cols=["node"], mode="append", path=_p(index_path, "labels"),
-    )
+    SPEC.write(new_labels, index_path, "labels", meta)
     # merge-log append: only for superseded labels that can appear in
     # labels/ — a brand-new node's label row was appended already
     # resolved, so its id never needs an alias entry
@@ -302,7 +253,9 @@ def add_edges(
         F.col("m_old").alias("old"),
         F.col("m_new").alias("new"),
         F.lit(wm).cast("long").alias("_wm"),
-    ).coalesce(1).write.mode("append").parquet(_p(index_path, "merges"))
+    ).coalesce(1).write.mode("append").parquet(
+        SPEC.path(index_path, "merges")
+    )
     out = resolved.select("node", "component")
     free_local_checkpoint(fresh)
     free_local_checkpoint(cur)
@@ -318,26 +271,24 @@ def components(
     no corpus shuffle.
 
     ``as_of_completed=True`` pins the read to the last COMPLETED
-    epoch's id watermark (operators/indexsnap.py — the rebuild cuts):
+    epoch's id watermark (operators/indexspec.py — the rebuild cuts):
     label rows written after it and merge-log rows tagged after it drop
     out, so a read concurrent with an in-flight add_edges resolves a
     consistent snapshot (base rows carry _wm NULL and always stay)."""
-    meta = _meta_rw(index_path)
-    idx_l = _registered(
-        spark, index_path, "labels", "node", meta["n_buckets"]
-    )
-    wm = None
-    if as_of_completed:
-        from basic_data_pipeline_spark.operators import indexsnap
+    meta, cut = SPEC.pinned(spark, index_path, as_of_completed)
+    idx_l = SPEC.read(spark, index_path, "labels", meta, cut)
+    return _resolve(spark, idx_l, index_path, cut.wm if cut else None)
 
-        wm = indexsnap.require_watermark(index_path, meta)
-        idx_l = idx_l.filter(
-            F.col("_wm").isNull() | (F.col("_wm") <= F.lit(wm))
-        )
-    node_t = dict(idx_l.dtypes)["node"]
-    al = _alias_df(spark, load_alias_map(spark, index_path, as_of=wm), node_t)
+
+def _resolve(
+    spark: SparkSession, labels: DataFrame, index_path: str, as_of=None
+) -> DataFrame:
+    """(node, component): ``labels`` resolved through the merge log
+    folded as of the id watermark ``as_of`` (None: all of it)."""
+    node_t = dict(labels.dtypes)["node"]
+    al = _alias_df(spark, load_alias_map(spark, index_path, as_of), node_t)
     return (
-        idx_l.select("node", "label")
+        labels.select("node", "label")
         .join(
             F.broadcast(al).withColumnRenamed("a_old", "label"),
             "label",
@@ -357,49 +308,27 @@ def graph_edges(
     ``as_of_completed=True`` pins to the last completed epoch's id
     watermark via the monotone-src crawl convention (the rebuild
     cut)."""
-    meta = _meta_rw(index_path)
-    edges = _registered(spark, index_path, "edges", "src", meta["n_buckets"])
-    if as_of_completed:
-        from basic_data_pipeline_spark.operators import indexsnap
-
-        wm = indexsnap.require_watermark(index_path, meta)
-        edges = edges.filter(F.col("src") <= F.lit(wm))
+    meta, cut = SPEC.pinned(spark, index_path, as_of_completed)
+    edges = SPEC.read(spark, index_path, "edges", meta, cut)
     return edges.select("src", "dst")
 
 
 @_swapstore.leased("index_path", owner="batch:incremental_linkgraph.compact_graph_index")
 def compact_graph_index(spark: SparkSession, index_path: str) -> dict:
     """Fold the merge log into labels/ (rewrite with resolved labels,
-    empty the log) and re-compact both bucketed tables to one file per
-    bucket — the read-side fold disappears until the next merge."""
-    from basic_data_pipeline_spark.operators.maintenance import (
-        compact_bucketed,
-    )
+    then empty the log) while re-compacting both bucketed tables to one
+    file per bucket (IndexSpec.compact, so the clean-ledger guard runs
+    before the fold) — the read-side fold disappears until the next
+    merge."""
 
-    meta = _meta_rw(index_path)
-    nb = meta["n_buckets"]
-    resolved = components(spark, index_path).select(
-        "node",
-        F.col("component").alias("label"),
-        F.lit(None).cast("long").alias("_wm"),
-    )
-    # labels/ rewrite reads what it replaces: stage via checkpoint
-    staged = tracked_local_checkpoint(resolved)
-    tables.write_bucketed(
-        staged, _tname(index_path, "labels"), ["node"], nb,
-        sort_cols=["node"], mode="overwrite",
-        path=_p(index_path, "labels"),
-    )
-    spark.catalog.refreshByPath(_p(index_path, "labels"))
-    node_t = dict(staged.dtypes)["node"]
-    spark.createDataFrame(
-        [], f"old {node_t}, new {node_t}, _wm long"
-    ).coalesce(1).write.mode("overwrite").parquet(_p(index_path, "merges"))
-    free_local_checkpoint(staged)
-    stats = {}
-    for which, col in (("edges", "src"), ("labels", "node")):
-        stats[which] = compact_bucketed(
-            spark, _p(index_path, which), _tname(index_path, which),
-            [col], nb, sort_cols=[col],
+    def fold(labels: DataFrame) -> DataFrame:
+        return _resolve(spark, labels, index_path).select(
+            "node",
+            F.col("component").alias("label"),
+            F.lit(None).cast("long").alias("_wm"),
         )
-    return stats
+
+    out = SPEC.compact(spark, index_path, folds={"labels": fold})
+    labels = spark.read.parquet(SPEC.path(index_path, "labels"))
+    _empty_merges(spark, index_path, dict(labels.dtypes)["node"])
+    return out

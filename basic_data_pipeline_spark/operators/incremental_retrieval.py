@@ -71,62 +71,15 @@ corpus never re-read.
 
 from __future__ import annotations
 
-import hashlib
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from basic_data_pipeline_spark.caching import tracked_persist
 from basic_data_pipeline_spark.streaming import swapstore as _swapstore
-from basic_data_pipeline_spark.operators import retrieval
-from basic_data_pipeline_spark.sources import tables
+from basic_data_pipeline_spark.operators import indexspec, retrieval
 
-DEFAULT_INDEX_BUCKETS = 16
-
-
-def _p(index_path: str, name: str) -> str:
-    return os.path.join(index_path, name)
-
-
-def _table_names(index_path: str) -> tuple[str, str]:
-    h = hashlib.md5(os.path.abspath(index_path).encode()).hexdigest()[:12]
-    return f"retr_idx_{h}_postings", f"retr_idx_{h}_dfreq"
-
-
-def _meta_rw(index_path: str, meta: dict | None = None) -> dict:
-    path = _p(index_path, "_meta.json")
-    if meta is not None:
-        os.makedirs(index_path, exist_ok=True)
-        with open(path, "w") as f:
-            json.dump(meta, f)
-        return meta
-    with open(path) as f:
-        return json.load(f)
-
-
-def _registered(
-    spark: SparkSession,
-    index_path: str,
-    sub: str,
-    table: str,
-    n_buckets: int,
-) -> DataFrame:
-    """Re-register one bucketed index table from its on-disk files if
-    this session has never seen it (schema from the parquet — ids keep
-    their corpus-native type, same rationale as the gram index)."""
-    if not spark.catalog.tableExists(table):
-        schema = spark.read.parquet(_p(index_path, sub)).schema
-        cols = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
-        )
-        spark.sql(
-            f"CREATE TABLE {table} ({cols}) USING PARQUET "
-            "CLUSTERED BY (term) SORTED BY (term) "
-            f"INTO {n_buckets} BUCKETS LOCATION '{_p(index_path, sub)}'"
-        )
-    return spark.table(table)
+SPEC = indexspec.RETRIEVAL
+DEFAULT_INDEX_BUCKETS = SPEC.n_buckets
 
 
 def _postings_of(
@@ -164,54 +117,29 @@ def _stats_row(
 
 
 def _write_increment(
-    spark: SparkSession,
-    docs: DataFrame,
-    index_path: str,
-    id_col: str,
-    text_col: str,
-    n_buckets: int,
-    mode: str,
+    docs: DataFrame, index_path: str, meta: dict, mode: str
 ) -> tuple[DataFrame, object]:
     """Postings + dfreq delta + stats row for ``docs``, written in that
     order (all three are watermark-cut on rebuild, so partial-write
     order doesn't matter). Returns (persisted postings, watermark)."""
+    id_col, text_col = meta["id_col"], meta["text_col"]
     wm = docs.agg(F.max(id_col)).first()[0]
     # _wm always carries the id column's OWN type: a base corpus whose
     # max id happens to fit an int32 must not freeze the column as INT
-    # and overflow when a later batch's BIGINT watermark appends (found
-    # by the 16x probe, whose increment ids sit above 10^10)
+    # and overflow when a later batch's BIGINT watermark appends
     wm_col = F.lit(wm).cast(docs.schema[id_col].dataType)
-    postings_t, dfreq_t = _table_names(index_path)
-    if mode == "append":
-        # a fresh session appending to an on-disk index: re-register the
-        # catalog entries first (metadata-only) so saveAsTable appends
-        # against the recorded bucket spec instead of re-deriving it
-        _registered(spark, index_path, "postings", postings_t, n_buckets)
-        _registered(spark, index_path, "dfreq", dfreq_t, n_buckets)
     postings = tracked_persist(_postings_of(docs, id_col, text_col))
-    tables.write_bucketed(
-        postings.select("term", "neighbor_id", "dl", "tf"),
-        postings_t,
-        ["term"],
-        n_buckets,
-        sort_cols=["term"],
-        mode=mode,
-        path=_p(index_path, "postings"),
-    )
-    tables.write_bucketed(
+    SPEC.write(postings.select("term", "neighbor_id", "dl", "tf"),
+               index_path, "postings", meta, mode)
+    SPEC.write(
         postings.groupBy("term")
         .agg(F.count(F.lit(1)).alias("df"))
         .select("term", "df", wm_col.alias("_wm")),
-        dfreq_t,
-        ["term"],
-        n_buckets,
-        sort_cols=["term"],
-        mode=mode,
-        path=_p(index_path, "dfreq"),
+        index_path, "dfreq", meta, mode,
     )
-    _stats_row(docs, text_col, wm_col).write.mode(
-        "overwrite" if mode == "overwrite" else "append"
-    ).parquet(_p(index_path, "stats"))
+    _stats_row(docs, text_col, wm_col).write.mode(mode).parquet(
+        SPEC.path(index_path, "stats")
+    )
     return postings, wm
 
 
@@ -226,17 +154,13 @@ def build_retrieval_index(
 ) -> dict:
     """Index the base corpus. Returns a summary dict {n_docs, sum_dl,
     n_postings}."""
-    postings, wm = _write_increment(
-        spark, docs, index_path, id_col, text_col, n_buckets, "overwrite"
+    meta = {"id_col": id_col, "text_col": text_col, "n_buckets": n_buckets}
+    postings, meta["max_id"] = _write_increment(
+        docs, index_path, meta, "overwrite"
     )
     n_postings = postings.count()
-    row = spark.read.parquet(_p(index_path, "stats")).first()
-    _meta_rw(
-        index_path,
-        {"id_col": id_col, "text_col": text_col, "n_buckets": n_buckets,
-         # base-corpus id watermark for streaming/rebuild.py
-         "max_id": wm},
-    )
+    row = spark.read.parquet(SPEC.path(index_path, "stats")).first()
+    SPEC.write_meta(index_path, meta)
     return {
         "n_docs": row["n_docs"],
         "sum_dl": row["sum_dl"],
@@ -255,11 +179,8 @@ def incremental_retrieval_append(
     receipt (neighbor_id, dl, n_terms): one row per batch document,
     computed from the batch alone (a zero-shuffle projection) — the
     natural per-epoch output for the streaming twin."""
-    meta = _meta_rw(index_path)
-    _write_increment(
-        spark, batch, index_path, meta["id_col"], meta["text_col"],
-        meta["n_buckets"], "append",
-    )
+    meta = SPEC.read_meta(spark, index_path)
+    _write_increment(batch, index_path, meta, "append")
     toks = retrieval._clean_tokens(F.col(meta["text_col"]))
     return batch.select(
         F.col(meta["id_col"]).alias("neighbor_id"),
@@ -272,7 +193,7 @@ def index_stats(spark: SparkSession, index_path: str) -> dict:
     """Current global (n_docs, sum_dl) — the exact integer sums of the
     additive stats rows."""
     row = (
-        spark.read.parquet(_p(index_path, "stats"))
+        spark.read.parquet(SPEC.path(index_path, "stats"))
         .agg(F.sum("n_docs").alias("n_docs"), F.sum("sum_dl").alias("sum_dl"))
         .first()
     )
@@ -321,30 +242,11 @@ def search_retrieval_index(
     completed epoch — instead of partial postings whose df/stats
     haven't landed. The serving-path read-isolation knob for a live
     streaming index; costs three codegen filters, no extra pass."""
-    meta = _meta_rw(index_path)
-    postings_t, dfreq_t = _table_names(index_path)
-    idx = _registered(
-        spark, index_path, "postings", postings_t, meta["n_buckets"]
+    meta, cut = SPEC.pinned(spark, index_path, as_of_completed)
+    idx, dlog, stats_src = (
+        SPEC.read(spark, index_path, t, meta, cut)
+        for t in ("postings", "dfreq", "stats")
     )
-    dlog = _registered(spark, index_path, "dfreq", dfreq_t, meta["n_buckets"])
-    wm_cut = None
-    if as_of_completed:
-        ledger_path = _p(index_path, "_stream_ledger.json")
-        wm_cut = meta.get("max_id")
-        if os.path.exists(ledger_path):
-            with open(ledger_path) as f:
-                for state in json.load(f).values():
-                    if isinstance(state, dict) and state.get("max_id") is not None:
-                        m = state["max_id"]
-                        wm_cut = m if wm_cut is None else max(wm_cut, m)
-        if wm_cut is None:
-            raise ValueError(
-                "as_of_completed needs an id watermark: the index "
-                "predates watermark recording and no stream epoch has "
-                "completed"
-            )
-        idx = idx.filter(F.col("neighbor_id") <= F.lit(wm_cut))
-        dlog = dlog.filter(F.col("_wm") <= F.lit(wm_cut))
 
     qterms = queries.select(
         F.col(query_id_col).alias("query_id"),
@@ -363,9 +265,6 @@ def search_retrieval_index(
         postings = idx.join(tset, "term", "left_semi")
         dfreq = dlog.join(tset, "term", "left_semi")
     dfreq = dfreq.groupBy("term").agg(F.sum("df").alias("df"))
-    stats_src = spark.read.parquet(_p(index_path, "stats"))
-    if wm_cut is not None:
-        stats_src = stats_src.filter(F.col("_wm") <= F.lit(wm_cut))
     stats = stats_src.agg(
         F.sum("n_docs").alias("n_docs"),
         F.sum("sum_dl").alias("sum_dl"),
@@ -453,51 +352,30 @@ def hybrid_index_search(
     )
 
 
-@_swapstore.leased("index_path", owner="batch:incremental_retrieval.compact_dfreq")
+def _fold_dfreq(df: DataFrame) -> DataFrame:
+    return (
+        df.groupBy("term")
+        .agg(F.sum("df").alias("df"), F.max("_wm").alias("_wm"))
+        .select("term", "df", "_wm")
+    )
+
+
 def compact_dfreq(spark: SparkSession, index_path: str) -> dict:
     """Fold the df delta log to one row per term (keeping each term's
     max watermark, so rebuild semantics survive compaction: folded rows
     cover completed appends only, so every future rebuild cutoff sits at
     or above their watermark). Run BETWEEN appends when many small
     epochs have accumulated; searches stay correct without it — this
-    trades a one-off bucket shuffle for shorter delta scans. Refuses to
-    run while a guarded stream's intent marker is pending (folding a
-    crashed epoch's partial rows would make them unrecoverable — run
-    streaming.rebuild.rebuild_retrieval_index first). Returns
-    {rows_before, rows_after}."""
-    from basic_data_pipeline_spark.operators import maintenance
-
-    maintenance.assert_clean_stream_ledger(index_path)
-    meta = _meta_rw(index_path)
-    _, dfreq_t = _table_names(index_path)
-    src = _p(index_path, "dfreq")
-    before = spark.read.parquet(src).count()
-    rep = maintenance.compact_bucketed(
-        spark, src, dfreq_t, ["term"], meta["n_buckets"],
-        sort_cols=["term"],
-        fold=lambda df: df.groupBy("term")
-        .agg(F.sum("df").alias("df"), F.max("_wm").alias("_wm"))
-        .select("term", "df", "_wm"),
-    )
-    return {"rows_before": before, "rows_after": rep["rows"]}
+    trades a one-off bucket shuffle for shorter delta scans. Refuses
+    while a guarded stream's intent marker is pending
+    (IndexSpec.compact). Returns {rows_before, rows_after, ...}."""
+    return SPEC.compact(
+        spark, index_path, ("dfreq",), {"dfreq": _fold_dfreq}
+    )["dfreq"]
 
 
-@_swapstore.leased("index_path", owner="batch:incremental_retrieval.compact_index")
 def compact_index(spark: SparkSession, index_path: str) -> dict:
-    """Full index maintenance: fold the df delta log (compact_dfreq)
-    AND rewrite the postings table back to one file per bucket — every
-    epoch append lays down n_buckets more postings files, so a
-    long-lived stream accretes files linearly. Same intent guard as
-    every compaction here."""
-    from basic_data_pipeline_spark.operators import maintenance
-
-    maintenance.assert_clean_stream_ledger(index_path)
-    meta = _meta_rw(index_path)
-    postings_t, _ = _table_names(index_path)
-    return {
-        "postings": maintenance.compact_bucketed(
-            spark, _p(index_path, "postings"), postings_t,
-            ["term"], meta["n_buckets"], sort_cols=["term"],
-        ),
-        "dfreq": compact_dfreq(spark, index_path),
-    }
+    """Full index maintenance: rewrite the postings table back to one
+    file per bucket AND fold the df delta log (compact_dfreq) —
+    IndexSpec.compact with the dfreq fold."""
+    return SPEC.compact(spark, index_path, folds={"dfreq": _fold_dfreq})

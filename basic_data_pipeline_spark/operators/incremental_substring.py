@@ -46,10 +46,6 @@ text is never re-read.
 
 from __future__ import annotations
 
-import hashlib
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -59,52 +55,10 @@ from basic_data_pipeline_spark.caching import (
     tracked_local_checkpoint,
     tracked_persist,
 )
-from basic_data_pipeline_spark.operators import substring
-from basic_data_pipeline_spark.sources import tables
+from basic_data_pipeline_spark.operators import indexspec, substring
 
-DEFAULT_INDEX_BUCKETS = 16
-
-
-def _p(index_path: str, name: str) -> str:
-    return os.path.join(index_path, name)
-
-
-def _table_name(index_path: str) -> str:
-    h = hashlib.md5(os.path.abspath(index_path).encode()).hexdigest()[:12]
-    return f"substr_idx_{h}_grams"
-
-
-def _meta_rw(index_path: str, meta: dict | None = None) -> dict:
-    path = _p(index_path, "_meta.json")
-    if meta is not None:
-        os.makedirs(index_path, exist_ok=True)
-        with open(path, "w") as f:
-            json.dump(meta, f)
-        return meta
-    with open(path) as f:
-        return json.load(f)
-
-
-def _registered_grams(
-    spark: SparkSession, index_path: str, n_buckets: int
-) -> DataFrame:
-    """The bucketed gram table, re-registered from the on-disk files if
-    this session has never seen it. The schema comes FROM THE PARQUET —
-    the doc column keeps the corpus id column's native type (a
-    hard-coded BIGINT would NULL-out string ids on write and silently
-    break the first-occurrence rule)."""
-    table = _table_name(index_path)
-    if not spark.catalog.tableExists(table):
-        schema = spark.read.parquet(_p(index_path, "grams")).schema
-        cols = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
-        )
-        spark.sql(
-            f"CREATE TABLE {table} ({cols}) USING PARQUET "
-            "CLUSTERED BY (gram) SORTED BY (gram) "
-            f"INTO {n_buckets} BUCKETS LOCATION '{_p(index_path, 'grams')}'"
-        )
-    return spark.table(table)
+SPEC = indexspec.SUBSTRING
+DEFAULT_INDEX_BUCKETS = SPEC.n_buckets
 
 
 def _first_per_gram(occ: DataFrame, id_col: str) -> DataFrame:
@@ -137,23 +91,12 @@ def build_substring_index(
     see module docstring for why that is the equivalence-preserving
     choice)."""
     occ = substring.gram_occurrences(docs, id_col, text_col, k)
-    tables.write_bucketed(
-        _first_per_gram(occ, id_col),
-        _table_name(index_path),
-        ["gram"],
-        n_buckets,
-        sort_cols=["gram"],
-        path=_p(index_path, "grams"),
-    )
-    _meta_rw(
-        index_path,
-        {"id_col": id_col, "text_col": text_col, "k": k,
-         "n_buckets": n_buckets,
-         # base-corpus id watermark for the streaming rebuild helper
-         # (streaming/rebuild.py): index rows with doc <= max_id belong
-         # to the base build
-         "max_id": docs.agg(F.max(id_col)).first()[0]},
-    )
+    meta = {"id_col": id_col, "text_col": text_col, "k": k,
+            "n_buckets": n_buckets}
+    SPEC.write(_first_per_gram(occ, id_col), index_path, "grams", meta,
+               mode="overwrite")
+    meta["max_id"] = docs.agg(F.max(id_col)).first()[0]
+    SPEC.write_meta(index_path, meta)
     return substring.substring_dedup_corpus(docs, id_col, text_col, k)
 
 
@@ -164,16 +107,10 @@ def read_substring_index(
     readers. ``as_of_completed=True`` pins the read to the last
     COMPLETED epoch's id watermark via the first-occurrence ``doc``
     column — a crashed/in-flight epoch's new grams all carry its doc
-    ids (the rebuild cut, streaming/rebuild.py). One codegen filter;
-    bucketed layout preserved."""
-    from basic_data_pipeline_spark.operators import indexsnap
-
-    meta = _meta_rw(index_path)
-    grams = _registered_grams(spark, index_path, meta["n_buckets"])
-    if as_of_completed:
-        wm = indexsnap.require_watermark(index_path, meta)
-        grams = grams.filter(F.col("doc") <= F.lit(wm))
-    return grams
+    ids (the rebuild cut). One codegen filter; bucketed layout
+    preserved."""
+    meta, cut = SPEC.pinned(spark, index_path, as_of_completed)
+    return SPEC.read(spark, index_path, "grams", meta, cut)
 
 
 @_swapstore.leased("index_path", owner="batch:incremental_substring.incremental_substring_dedup")
@@ -186,9 +123,9 @@ def incremental_substring_dedup(
     its new grams in. Returns the batch's surviving (id, text,
     n_tokens_kept) rows — identical to what the one-shot operator would
     emit for these documents over corpus ∪ batch."""
-    meta = _meta_rw(index_path)
+    meta = SPEC.read_meta(spark, index_path)
     id_col, text_col, k = meta["id_col"], meta["text_col"], meta["k"]
-    idx = _registered_grams(spark, index_path, meta["n_buckets"])
+    idx = SPEC.register(spark, index_path, "grams", meta)
 
     occ = tracked_persist(
         substring.gram_occurrences(batch, id_col, text_col, k)
@@ -233,15 +170,7 @@ def incremental_substring_dedup(
     # firsts feeds the append next; checkpoint it off the table plan too
     # so writing it cannot race its own invalidation mid-job
     firsts = tracked_local_checkpoint(firsts)
-    tables.write_bucketed(
-        firsts,
-        _table_name(index_path),
-        ["gram"],
-        meta["n_buckets"],
-        sort_cols=["gram"],
-        mode="append",
-        path=_p(index_path, "grams"),
-    )
+    SPEC.write(firsts, index_path, "grams", meta)
     # the append consumed firsts — free its checkpoint blocks now; out's
     # are freed by the streaming skeleton after the epoch output write
     # (batch callers keep out alive until they drop the frame)
@@ -249,18 +178,7 @@ def incremental_substring_dedup(
     return out
 
 
-@_swapstore.leased("index_path", owner="batch:incremental_substring.compact_index")
 def compact_index(spark: SparkSession, index_path: str) -> dict:
-    """Fold the gram table back to one file per bucket (see
-    incremental.compact_index — same epoch-accretion rationale, same
-    intent guard)."""
-    from basic_data_pipeline_spark.operators import maintenance
-
-    maintenance.assert_clean_stream_ledger(index_path)
-    meta = _meta_rw(index_path)
-    return {
-        "grams": maintenance.compact_bucketed(
-            spark, _p(index_path, "grams"), _table_name(index_path),
-            ["gram"], meta["n_buckets"], sort_cols=["gram"],
-        )
-    }
+    """Fold the gram table back to one file per bucket
+    (IndexSpec.compact)."""
+    return SPEC.compact(spark, index_path)

@@ -90,19 +90,15 @@ def assert_clean_stream_ledger(index_path: str) -> None:
     pending: the index may hold a crashed epoch's PARTIAL append, and a
     rewrite would fold those rows in beyond the reach of the watermark
     rebuild (run the matching streaming.rebuild helper first)."""
-    ledger_path = os.path.join(index_path, "_stream_ledger.json")
-    if not os.path.exists(ledger_path):
-        return
-    import json
+    from basic_data_pipeline_spark.operators.indexspec import read_ledger
 
-    with open(ledger_path) as f:
-        for tag, state in json.load(f).items():
-            if isinstance(state, dict) and state.get("intent") is not None:
-                raise RuntimeError(
-                    f"stream {tag!r} crashed mid-append (intent epoch "
-                    f"{state['intent']}) — run the matching "
-                    "streaming.rebuild helper before compacting"
-                )
+    for tag, state in read_ledger(index_path).items():
+        if isinstance(state, dict) and state.get("intent") is not None:
+            raise RuntimeError(
+                f"stream {tag!r} crashed mid-append (intent epoch "
+                f"{state['intent']}) — run the matching "
+                "streaming.rebuild helper before compacting"
+            )
 
 
 @_swapstore.leased("src_path", owner="batch:maintenance.compact_bucketed")

@@ -1,13 +1,13 @@
-"""Streaming near-dedup: readStream → foreachBatch(incremental_dedup).
+"""Guarded streaming twins of the persisted-index families:
+readStream → foreachBatch(<family append kernel>).
 
-Continuously deduplicates an incoming document stream against the
-persisted corpus index (operators/incremental.py): each micro-batch is
-LSH-candidated against the bucketed index (only the increment shuffles),
-verified, appended to the index, and its survivors written to an
-epoch-tagged output directory. This is the streaming face of the same
-batch operator — one code path, driven either by the streaming engine
-(`dedup_files`, file source standing in for Kafka as in ingest.py) or by
-explicit micro-batches in tests (`run_dedup_batches`).
+Each family (operators/indexspec.py) gets ``make_<family>_batch_fn``,
+``<family>_files`` and ``run_<family>_batches`` bound below from
+``make_guarded_batch_fn``: each micro-batch runs the family's batch
+append operator against its persisted index and writes the epoch's
+output to an epoch-tagged directory. One code path, driven either by the
+streaming engine (``*_files``, a file source standing in for Kafka as in
+ingest.py) or by explicit micro-batches in tests (``run_*_batches``).
 
 Delivery semantics, stated precisely: foreachBatch is at-least-once, and
 a replayed index APPEND is not harmless here — duplicate (doc_id,
@@ -44,7 +44,8 @@ from basic_data_pipeline_spark.caching import (
     free_local_checkpoint,
     release_persisted,
 )
-from basic_data_pipeline_spark.operators.incremental import incremental_dedup
+from basic_data_pipeline_spark.operators import indexspec
+from basic_data_pipeline_spark.operators.indexspec import read_ledger
 from basic_data_pipeline_spark.streaming import swapstore
 
 
@@ -52,23 +53,15 @@ class DirtyIndexError(RuntimeError):
     """A previous run crashed between the index append and the epoch
     ledger write: the bucketed index may contain a partial append for
     that epoch, and set-semantics consumers (jaccard_verify) would be
-    corrupted by re-appending. Run the matching recovery helper —
-    streaming/rebuild.py rebuild_dedup_index / rebuild_entity_index /
-    rebuild_substring_index — which drops the partial append exactly
-    (id-watermark filter) and clears the marker; then resume the
-    stream."""
+    corrupted by re-appending. Run the family's recovery helper, which
+    the message names — streaming/rebuild.py ``rebuild_<family>_index``
+    for each family in operators/indexspec.py — which drops the partial
+    append exactly (id-watermark filter) and clears the marker; then
+    resume the stream."""
 
 
 def _ledger_path(index_path: str) -> str:
-    return os.path.join(index_path, "_stream_ledger.json")
-
-
-def _read_ledger(index_path: str) -> dict:
-    try:
-        with open(_ledger_path(index_path)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return {}
+    return os.path.join(index_path, indexspec.LEDGER)
 
 
 def _write_ledger(index_path: str, ledger: dict) -> None:
@@ -83,23 +76,23 @@ def make_guarded_batch_fn(
     index_path: str,
     out_root: str,
     body: Callable[[DataFrame, int], DataFrame],
+    spec: indexspec.IndexSpec,
     tag: str = "stream",
-    what: str = "index",
     max_id_of: Callable[[DataFrame], object] | None = None,
     compact_every: int | None = None,
     compact_fn: Callable[[SparkSession], object] | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """The SHARED foreachBatch skeleton for every stream that maintains
-    a persisted index whose appends are not replay-safe (incremental
-    dedup, entity resolution, substring dedup — one delivery-semantics
-    contract, one implementation):
+    a persisted index whose appends are not replay-safe (one
+    delivery-semantics contract, one implementation). ``spec`` is the
+    index's family: DirtyIndexError names its exact rebuild helper.
 
     * epoch ≤ ledger watermark → full replay of completed work, skipped
       outright including the output write;
     * an INTENT marker brackets ``body`` (which mutates the index); a
       stale marker on entry means a crash landed mid-append and the only
       safe continuation is an index rebuild — DirtyIndexError, never a
-      silent double-append; the matching streaming/rebuild.py helper
+      silent double-append; the family's streaming/rebuild.py helper
       performs that rebuild and clears the marker;
     * ``body``'s result lands in an epoch-subdir OVERWRITE (idempotent
       by construction); the ledger advances strictly after;
@@ -110,10 +103,12 @@ def make_guarded_batch_fn(
       ``id <= max_id`` filter (ids are monotone across batches — the
       standing convention of every incremental index here);
     * tracked persists accumulated by the body's operators are released
-      once the epoch completes — foreachBatch has no @query wrapper to
-      do it, and without this a long stream caches frames without bound;
-      a localCheckpoint'ed ``out`` (tracked_local_checkpoint) is freed
-      too — plain unpersist is a no-op for checkpoint blocks;
+      once the epoch ends, also when the body throws — foreachBatch has
+      no @query wrapper to do it, and without this a long stream caches
+      frames without bound; a localCheckpoint'ed ``out``
+      (tracked_local_checkpoint) is freed too — plain unpersist is a
+      no-op for checkpoint blocks. A throwing epoch leaves its intent
+      marker set;
     * SINGLE WRITER (r9): the factory takes the swapstore writer lease
       on the index dir and renews it per batch — a double-launched
       second stream on the same index raises WriterLeaseHeld at
@@ -144,15 +139,16 @@ def make_guarded_batch_fn(
 
     def fn(batch_df: DataFrame, epoch_id: int) -> None:
         swapstore.renew_lease(index_path, lease_token)
-        ledger = _read_ledger(index_path)
+        ledger = read_ledger(index_path)
         state = ledger.get(tag, {"last_epoch": -1, "intent": None})
         if epoch_id <= state["last_epoch"]:
             return  # full replay of completed work — drop it
         if state["intent"] is not None:
             raise DirtyIndexError(
                 f"epoch {state['intent']} of stream {tag!r} crashed "
-                f"mid-append into the {what} at {index_path!r}; run the "
-                "matching streaming.rebuild helper before resuming"
+                f"mid-append into the {spec.what} at {index_path!r}; run "
+                f"streaming.rebuild.{spec.rebuild_name}(spark, "
+                f"{index_path!r}) before resuming"
             )
         if batch_df.isEmpty():
             state["last_epoch"] = epoch_id
@@ -164,29 +160,31 @@ def make_guarded_batch_fn(
         ledger[tag] = state
         _write_ledger(index_path, ledger)
 
-        # the body's batch operators (incremental_* appends) take the
-        # batch writer_lease themselves (r10); mark this chain as the
-        # live holder so the nested guard passes through instead of
-        # deadlocking against its own stream's lease
-        with swapstore.reentrant_scope(index_path, lease_token):
-            out = body(batch_df, epoch_id)
-            out.write.mode("overwrite").parquet(
-                os.path.join(out_root, f"epoch={epoch_id}")
-            )
+        try:
+            # the body's batch operators (incremental_* appends) take the
+            # batch writer_lease themselves; mark this chain as the live
+            # holder so the nested guard passes through instead of
+            # deadlocking against its own stream's lease
+            with swapstore.reentrant_scope(index_path, lease_token):
+                out = body(batch_df, epoch_id)
+                out.write.mode("overwrite").parquet(
+                    os.path.join(out_root, f"epoch={epoch_id}")
+                )
 
-        state["last_epoch"] = epoch_id
-        state["intent"] = None
-        if max_id_of is not None:
-            wm = max_id_of(batch_df)
-            prev = state.get("max_id")
-            if wm is not None:
-                state["max_id"] = wm if prev is None else max(prev, wm)
-        if compact_every:
-            state["since_compact"] = state.get("since_compact", 0) + 1
-        ledger[tag] = state
-        _write_ledger(index_path, ledger)
-        free_local_checkpoint(out)
-        release_persisted()
+            state["last_epoch"] = epoch_id
+            state["intent"] = None
+            if max_id_of is not None:
+                wm = max_id_of(batch_df)
+                prev = state.get("max_id")
+                if wm is not None:
+                    state["max_id"] = wm if prev is None else max(prev, wm)
+            if compact_every:
+                state["since_compact"] = state.get("since_compact", 0) + 1
+            ledger[tag] = state
+            _write_ledger(index_path, ledger)
+            free_local_checkpoint(out)
+        finally:
+            release_persisted()
 
         if (
             compact_every
@@ -205,6 +203,37 @@ def make_guarded_batch_fn(
     return swapstore.attach_release(fn, index_path, lease_token)
 
 
+def _guarded(
+    spec: indexspec.IndexSpec,
+    index_path: str,
+    out_root: str,
+    tag: str,
+    compact_every: int | None,
+    append: Callable[[SparkSession, DataFrame, int], DataFrame],
+    compact: Callable[[SparkSession, str], object],
+    id_col: str | None = None,
+) -> Callable[[DataFrame, int], None]:
+    """The guarded skeleton around one family's append kernel: the
+    ledger records the batch max of ``id_col`` (default: the index's
+    recorded id column), auto-compaction runs the family's public
+    compaction."""
+    return make_guarded_batch_fn(
+        index_path,
+        out_root,
+        lambda b, epoch: append(b.sparkSession, b, epoch),
+        spec,
+        tag=tag,
+        max_id_of=lambda b: b.agg(
+            F.max(
+                id_col
+                or spec.read_meta(b.sparkSession, index_path)["id_col"]
+            )
+        ).first()[0],
+        compact_every=compact_every,
+        compact_fn=lambda spark: compact(spark, index_path),
+    )
+
+
 def make_dedup_batch_fn(
     index_path: str,
     out_root: str,
@@ -214,67 +243,191 @@ def make_dedup_batch_fn(
     compact_every: int | None = None,
     **dedup_kw,
 ) -> Callable[[DataFrame, int], None]:
-    """Build the foreachBatch body: epoch-guarded incremental dedup with
-    epoch-tagged survivor output under ``out_root/epoch=N/``.
-    ``compact_every=N`` folds the bucketed index back to one file per
-    bucket every N epochs (the r11 probe's file-accretion remedy —
-    dedup's candidate join re-reads the index each epoch, so its wall
-    drifts ~0.7 s/epoch unbounded without it; ~6-16 is the measured
-    sweet spot, see make_guarded_batch_fn)."""
-    from basic_data_pipeline_spark.operators import incremental as _inc
+    """Epoch-guarded incremental dedup (operators/incremental.py); epoch
+    output: the surviving docs. ``compact_every=N`` folds the bucketed
+    index back to one file per bucket every N epochs — dedup's candidate
+    join re-reads the index each epoch, so its wall drifts ~0.7 s/epoch
+    unbounded without it; ~6-16 is the measured sweet spot (see
+    make_guarded_batch_fn)."""
+    from basic_data_pipeline_spark.operators import incremental as M
 
-    return make_guarded_batch_fn(
-        index_path,
-        out_root,
-        lambda batch_df, _epoch: incremental_dedup(
-            batch_df.sparkSession,
-            batch_df,
-            index_path,
-            id_col=id_col,
-            text_col=text_col,
+    return _guarded(
+        M.SPEC, index_path, out_root, tag, compact_every,
+        lambda spark, b, _e: M.incremental_dedup(
+            spark, b, index_path, id_col=id_col, text_col=text_col,
             **dedup_kw,
         ),
-        tag=tag,
-        max_id_of=lambda b: b.agg(F.max(id_col)).first()[0],
-        compact_every=compact_every,
-        compact_fn=lambda spark: _inc.compact_index(spark, index_path),
+        M.compact_index, id_col,
     )
 
 
-def dedup_files(
-    spark: SparkSession,
-    source_dir: str,
+def make_substring_batch_fn(
     index_path: str,
     out_root: str,
-    checkpoint: str,
-    schema: str = "doc_id long, text string",
-    **kw,
-):
-    """Drive the streaming dedup through the real streaming engine off a
-    file source (the in-container stand-in for Kafka, as in
-    ingest.ingest_files); availableNow drains what exists and stops."""
-    fn = make_dedup_batch_fn(index_path, out_root, **kw)
-    raw = spark.readStream.schema(schema).json(source_dir)
-    return (
-        raw.writeStream.foreachBatch(fn)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def run_dedup_batches(
-    spark: SparkSession,
-    batches: list[DataFrame],
-    index_path: str,
-    out_root: str,
-    start_epoch: int = 0,
-    **kw,
+    tag: str = "stream",
+    compact_every: int | None = None,
 ) -> Callable[[DataFrame, int], None]:
-    """Drive the foreachBatch body over explicit micro-batches (tests
-    needing precise batch boundaries / simulated replays). Returns the
-    body so callers can replay epochs explicitly."""
-    fn = make_dedup_batch_fn(index_path, out_root, **kw)
-    for i, b in enumerate(batches):
-        fn(b, start_epoch + i)
-    return fn
+    """Epoch-guarded incremental substring dedup; epoch output: the
+    rewritten documents."""
+    from basic_data_pipeline_spark.operators import incremental_substring as M
+
+    return _guarded(
+        M.SPEC, index_path, out_root, tag, compact_every,
+        lambda spark, b, _e: M.incremental_substring_dedup(spark, b, index_path),
+        M.compact_index,
+    )
+
+
+def make_entity_batch_fn(
+    index_path: str,
+    out_root: str,
+    tag: str = "stream",
+    compact_every: int | None = None,
+) -> Callable[[DataFrame, int], None]:
+    """Epoch-guarded incremental entity resolution; epoch output: the
+    batch's (id, entity_id) assignments. The epoch rides into the alias
+    log (_epoch) so a rebuild can drop a crashed epoch's merges."""
+    from basic_data_pipeline_spark.operators import incremental_entity as M
+
+    return _guarded(
+        M.SPEC, index_path, out_root, tag, compact_every,
+        lambda spark, b, epoch: M.incremental_resolve(
+            spark, b, index_path, epoch=epoch
+        ),
+        M.compact_index,
+    )
+
+
+def make_retrieval_batch_fn(
+    index_path: str,
+    out_root: str,
+    tag: str = "stream",
+    compact_every: int | None = None,
+) -> Callable[[DataFrame, int], None]:
+    """Epoch-guarded BM25 index append; epoch output: the per-document
+    indexing receipt."""
+    from basic_data_pipeline_spark.operators import incremental_retrieval as M
+
+    return _guarded(
+        M.SPEC, index_path, out_root, tag, compact_every,
+        lambda spark, b, _e: M.incremental_retrieval_append(spark, b, index_path),
+        M.compact_index,
+    )
+
+
+def make_image_batch_fn(
+    index_path: str,
+    out_root: str,
+    tag: str = "stream",
+    compact_every: int | None = None,
+) -> Callable[[DataFrame, int], None]:
+    """Epoch-guarded perceptual image dedup; epoch output: the surviving
+    (id, width, height, ihash) frame, not the pixel bytes (join back to
+    the source by id downstream)."""
+    from basic_data_pipeline_spark.operators import incremental_images as M
+
+    return _guarded(
+        M.SPEC, index_path, out_root, tag, compact_every,
+        lambda spark, b, _e: M.incremental_image_dedup(spark, b, index_path),
+        M.compact_image_index,
+    )
+
+
+def make_audio_batch_fn(
+    index_path: str,
+    out_root: str,
+    tag: str = "stream",
+    compact_every: int | None = None,
+    **match_kw,
+) -> Callable[[DataFrame, int], None]:
+    """Epoch-guarded audio dedup; epoch output: the surviving
+    fingerprints. ``match_kw`` (min_votes, max_hash_df) passes through
+    to incremental_audio_dedup."""
+    from basic_data_pipeline_spark.operators import incremental_audio as M
+
+    return _guarded(
+        M.SPEC, index_path, out_root, tag, compact_every,
+        lambda spark, b, _e: M.incremental_audio_dedup(
+            spark, b, index_path, **match_kw
+        ),
+        M.compact_audio_index,
+    )
+
+
+def make_graph_batch_fn(
+    index_path: str,
+    out_root: str,
+    tag: str = "stream",
+    compact_every: int | None = None,
+) -> Callable[[DataFrame, int], None]:
+    """Epoch-guarded link-graph maintenance; epoch output: the resolved
+    components of the endpoints the batch touched. add_edges tags its
+    appends with the batch's max src — the id the ledger records on
+    completion, so the rebuild cut and the append tags always agree."""
+    from basic_data_pipeline_spark.operators import incremental_linkgraph as M
+
+    return _guarded(
+        M.SPEC, index_path, out_root, tag, compact_every,
+        lambda spark, b, _e: M.add_edges(
+            spark, b, index_path, wm=b.agg(F.max("src")).first()[0]
+        ),
+        M.compact_graph_index, "src",
+    )
+
+
+def _runners(make, schema: str, fmt: str = "json"):
+    """(``<family>_files``, ``run_<family>_batches``) for one factory."""
+
+    def files(
+        spark: SparkSession,
+        source_dir: str,
+        index_path: str,
+        out_root: str,
+        checkpoint: str,
+        schema: str = schema,
+        **kw,
+    ):
+        """Drive the guarded stream through the real streaming engine
+        off a file source (the in-container stand-in for Kafka);
+        availableNow drains what exists and stops."""
+        fn = make(index_path, out_root, **kw)
+        raw = getattr(spark.readStream.schema(schema), fmt)(source_dir)
+        return (
+            raw.writeStream.foreachBatch(fn)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
+
+    def run(
+        spark: SparkSession,
+        batches: list[DataFrame],
+        index_path: str,
+        out_root: str,
+        start_epoch: int = 0,
+        **kw,
+    ) -> Callable[[DataFrame, int], None]:
+        """Drive the foreachBatch body over explicit micro-batches
+        (tests needing precise batch boundaries / simulated replays).
+        Returns the body so callers can replay epochs explicitly."""
+        fn = make(index_path, out_root, **kw)
+        for i, b in enumerate(batches):
+            fn(b, start_epoch + i)
+        return fn
+
+    return files, run
+
+
+_TEXT = "doc_id long, text string"
+_MEDIA = "media_id long, data binary"
+dedup_files, run_dedup_batches = _runners(make_dedup_batch_fn, _TEXT)
+substring_files, run_substring_batches = _runners(make_substring_batch_fn, _TEXT)
+entity_files, run_entity_batches = _runners(
+    make_entity_batch_fn, "id long, name string"
+)
+retrieval_files, run_retrieval_batches = _runners(make_retrieval_batch_fn, _TEXT)
+image_files, run_image_batches = _runners(make_image_batch_fn, _MEDIA, "parquet")
+audio_files, run_audio_batches = _runners(make_audio_batch_fn, _MEDIA, "parquet")
+edge_files, run_edge_batches = _runners(
+    make_graph_batch_fn, "src long, dst long", "parquet"
+)

@@ -4,49 +4,15 @@ DirtyIndexError into one command instead of prose.
 The guarded skeleton (dedup_stream.make_guarded_batch_fn) brackets every
 index mutation with an INTENT marker; a crash mid-append leaves the
 marker set and the next batch raises DirtyIndexError, because the index
-may hold a PARTIAL append for the crashed epoch. These helpers perform
-the rebuild the error message demands — exactly, and at INDEX cost, not
-corpus cost:
-
-**The id-watermark filter.** Ids are globally unique and MONOTONE across
-batches (the standing convention of every incremental index here), and
-the ledger records ``max_id`` — the max batch id — ON EPOCH COMPLETION
-only, while the index build records the base corpus's ``max_id`` in
-_meta.json. So after a mid-append crash, every row the index should
-contain has id <= watermark and every partial row from the crashed epoch
-has id > watermark: ONE filtered rewrite of each index table removes the
-partial append bit-exactly. No corpus re-scan, no re-dedup, no
-re-resolve — the rebuilt index is byte-equivalent in content to the
-index as of the last completed epoch, and the restarted stream replays
-the crashed epoch against it (its checkpoint never committed), restoring
-stream == batch equivalence.
-
-Per family:
-
-* **dedup** (operators/incremental.py): filter ``bands`` and
-  ``shingles`` on the id column. Works for both survivor policies —
-  ``cluster`` indexes dropped docs too, but their ids are also bounded
-  by the completed-epoch watermark.
-* **substring** (operators/incremental_substring.py): filter ``grams``
-  on the first-occurrence ``doc`` column — a crashed epoch's new-gram
-  rows all carry that epoch's doc ids.
-* **entity** (operators/incremental_entity.py): filter ``grams`` and
-  ``strings`` on ``id``; ``freq`` is frozen at build time and never
-  appended, so it is untouched; ``aliases`` rows are epoch-tagged
-  (_epoch column) and rows from epochs after the last completed one are
-  dropped (legacy logs without the column can't identify them — warned,
-  and harmless duplicates would only re-append on replay).
-* **retrieval** (operators/incremental_retrieval.py): filter
-  ``postings`` on ``neighbor_id``; ``dfreq`` and ``stats`` rows carry
-  the writing batch's max id as ``_wm`` — filter on that. All three
-  cuts use the same watermark, so a crash at ANY point of the
-  three-table append converges to the last completed epoch's exact
-  index content.
-* **images** (operators/incremental_images.py): filter ``bands`` on
-  the id column — a crashed epoch's appended band rows all carry that
-  epoch's batch ids.
-* **audio** (operators/incremental_audio.py): filter ``fps`` on the id
-  column — same single-table cut as images.
+may hold a PARTIAL append for the crashed epoch. ``rebuild_<family>_index``
+performs the rebuild the error names — exactly, and at INDEX cost, not
+corpus cost: every table the family's IndexSpec declares with a keep
+predicate (operators/indexspec.py) is rewritten to the rows at or below
+the last completed epoch's id watermark. No corpus re-scan, no re-dedup,
+no re-resolve — the rebuilt index is content-equal to the index as of
+the last completed epoch, and the restarted stream replays the crashed
+epoch against it (its checkpoint never committed), restoring stream ==
+batch equivalence.
 
 Each rewrite lands in ``<table>.rebuild`` first (parquet _SUCCESS marks
 completeness) and is swapped in with the same rmtree→rename pattern as
@@ -62,29 +28,15 @@ from __future__ import annotations
 import glob
 import os
 import shutil
+import threading
 import warnings
-from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
-from basic_data_pipeline_spark.operators import (
-    incremental,
-    incremental_audio,
-    incremental_entity,
-    incremental_images,
-    incremental_retrieval,
-    incremental_substring,
-)
+from basic_data_pipeline_spark.operators import indexspec
 from basic_data_pipeline_spark.sources import tables
 from basic_data_pipeline_spark.streaming import swapstore
-from basic_data_pipeline_spark.streaming.dedup_stream import (
-    _read_ledger,
-    _write_ledger,
-)
-
-
-import threading
+from basic_data_pipeline_spark.streaming.dedup_stream import _write_ledger
 
 _REBUILD_LOCKS: dict[str, threading.Lock] = {}
 _REBUILD_LOCKS_GUARD = threading.Lock()
@@ -151,16 +103,6 @@ def _rebuild_guard(fn):
 
     return wrapped
 
-__all__ = [
-    "rebuild_audio_index",
-    "rebuild_dedup_index",
-    "rebuild_entity_index",
-    "rebuild_graph_index",
-    "rebuild_image_index",
-    "rebuild_retrieval_index",
-    "rebuild_substring_index",
-]
-
 
 def _recover_swap(path: str) -> None:
     """Finish or discard an interrupted table swap (same contract as
@@ -195,45 +137,53 @@ def _resolve_cutoff(state: dict, meta: dict, explicit):
     )
 
 
-def _rewrite_filtered(
+def _rewrite(
     spark: SparkSession,
-    src_path: str,
-    tmp_table: str,
-    keep: Callable[[DataFrame], Column],
-    bucket_cols: list[str],
-    n_buckets: int,
-    sort_cols: list[str] | None,
+    spec: indexspec.IndexSpec,
+    index_path: str,
+    name: str,
+    cut: indexspec.Cut,
+    meta: dict,
 ) -> dict:
-    """Filter one bucketed index table and atomically swap the result in
-    place. Cost: one pass over the TABLE (not the corpus) + its bucket
-    shuffle — the price of recovery, never paid on the hot path."""
-    _recover_swap(src_path)
-    df = spark.read.parquet(src_path)
+    """Cut one table back to ``cut`` and atomically swap the result in
+    place. Cost: one pass over the TABLE (not the corpus) — plus its
+    bucket shuffle for a bucketed table — the price of recovery, never
+    paid on the hot path."""
+    src = spec.path(index_path, name)
+    _recover_swap(src)
+    # mergeSchema: a legacy side log upgraded in place holds files with
+    # and without its tag column; the keep predicate needs the union
+    df = spark.read.option("mergeSchema", "true").parquet(src)
     before = df.count()
-    tmp_path = src_path + ".rebuild"
-    shutil.rmtree(tmp_path, ignore_errors=True)
-    spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
-    tables.write_bucketed(
-        df.filter(keep(df)),
-        tmp_table,
-        bucket_cols,
-        n_buckets,
-        sort_cols=sort_cols,
-        path=tmp_path,
-    )
-    shutil.rmtree(src_path)
-    os.rename(tmp_path, src_path)
+    keep = spec.keep_rows(df, name, cut)
+    if keep is df:
+        warnings.warn(
+            f"{name} predates watermark tagging — a crashed epoch's rows "
+            "cannot be identified and are kept; the replay may append "
+            "duplicates (harmless for resolution: reads are distinct-ed)",
+            stacklevel=3,
+        )
+    tmp = src + ".rebuild"
+    shutil.rmtree(tmp, ignore_errors=True)
+    table = spec.table_name(index_path, name)
+    if spec.table(name).bucket:
+        bucket, sort = spec.layout(name, meta)
+        spark.sql(f"DROP TABLE IF EXISTS {table}_rb")
+        tables.write_bucketed(
+            keep, table + "_rb", bucket, meta["n_buckets"],
+            sort_cols=sort, path=tmp,
+        )
+    else:
+        keep.coalesce(1).write.mode("overwrite").parquet(tmp)
+    shutil.rmtree(src)
+    os.rename(tmp, src)
     # the temp registration is metadata-only (external table); its files
     # now ARE the index
-    spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
-    spark.catalog.refreshByPath(src_path)
-    after = spark.read.parquet(src_path).count()
-    return {"rows_before": before, "rows_after": after}
-
-
-def _refresh(spark: SparkSession, table: str) -> None:
+    spark.sql(f"DROP TABLE IF EXISTS {table}_rb")
+    spark.catalog.refreshByPath(src)
     if spark.catalog.tableExists(table):
         spark.sql(f"REFRESH TABLE {table}")
+    return {"rows_before": before, "rows_after": spark.read.parquet(src).count()}
 
 
 def _finish(
@@ -245,10 +195,8 @@ def _finish(
     lease (swapstore.acquire_lease): a rebuild asserts the crashed
     writer is gone, and the restarted stream must be able to take the
     lease immediately instead of waiting out the ttl."""
-    from basic_data_pipeline_spark.streaming import swapstore
-
     swapstore.release_lease(index_path, force=True)
-    ledger = _read_ledger(index_path)
+    ledger = indexspec.read_ledger(index_path)
     state = ledger.get(tag, {"last_epoch": -1, "intent": None})
     state["intent"] = None
     ledger[tag] = state
@@ -263,346 +211,52 @@ def _finish(
     return state["last_epoch"], removed
 
 
-@_rebuild_guard
-def rebuild_dedup_index(
-    spark: SparkSession,
-    index_path: str,
-    out_root: str | None = None,
-    tag: str = "stream",
-    cutoff=None,
-) -> dict:
-    """Recover the LSH dedup index from a mid-append crash: drop every
-    bands/shingles row above the completed-epoch id watermark, swap the
-    filtered tables in, clear the intent marker, and remove stale epoch
-    outputs. Returns a report {cutoff, last_epoch, stale_outputs_removed,
-    tables: {name: {rows_before, rows_after}}}. The restarted stream
-    replays the crashed epoch and lands exactly where an uninterrupted
-    run would (tested in tests/test_rebuild.py)."""
-    meta = incremental._read_meta(index_path)
-    state = _read_ledger(index_path).get(
-        tag, {"last_epoch": -1, "intent": None}
-    )
-    cut = _resolve_cutoff(state, meta, cutoff)
-    bands_t, sh_t = incremental._table_names(index_path)
-    id_col = meta.get("id_col")
-    if id_col is None:  # legacy meta: the non-key column of bands
-        cols = set(
-            spark.read.parquet(os.path.join(index_path, "bands")).columns
+def _bind(spec: indexspec.IndexSpec):
+    def rebuild(
+        spark: SparkSession,
+        index_path: str,
+        out_root: str | None = None,
+        tag: str = "stream",
+        cutoff=None,
+    ) -> dict:
+        meta = spec.read_meta(spark, index_path)
+        state = indexspec.read_ledger(index_path).get(
+            tag, {"last_epoch": -1, "intent": None}
         )
-        id_col = (cols - {"band", "bandkey"}).pop()
-    report: dict = {"cutoff": cut, "tables": {}}
-    for name, table, bcols in (
-        ("bands", bands_t, ["band", "bandkey"]),
-        ("shingles", sh_t, [id_col]),
-    ):
-        report["tables"][name] = _rewrite_filtered(
-            spark,
-            os.path.join(index_path, name),
-            table + "_rb",
-            lambda df: F.col(id_col) <= F.lit(cut),
-            bcols,
-            meta["n_buckets"],
-            sort_cols=bcols,
+        cut = indexspec.Cut(
+            _resolve_cutoff(state, meta, cutoff),
+            state["last_epoch"],
+            meta.get("id_col"),
         )
-        _refresh(spark, table)
-    report["last_epoch"], report["stale_outputs_removed"] = _finish(
-        index_path, out_root, tag
-    )
-    return report
-
-
-@_rebuild_guard
-def rebuild_substring_index(
-    spark: SparkSession,
-    index_path: str,
-    out_root: str | None = None,
-    tag: str = "stream",
-    cutoff=None,
-) -> dict:
-    """Recover the exact-substring gram index from a mid-append crash:
-    drop every first-occurrence row whose ``doc`` is above the
-    completed-epoch id watermark (a crashed epoch's new grams all carry
-    its doc ids), swap, clear the marker. Report as in
-    rebuild_dedup_index."""
-    meta = incremental_substring._meta_rw(index_path)
-    state = _read_ledger(index_path).get(
-        tag, {"last_epoch": -1, "intent": None}
-    )
-    cut = _resolve_cutoff(state, meta, cutoff)
-    report: dict = {"cutoff": cut, "tables": {}}
-    report["tables"]["grams"] = _rewrite_filtered(
-        spark,
-        os.path.join(index_path, "grams"),
-        incremental_substring._table_name(index_path) + "_rb",
-        lambda df: F.col("doc") <= F.lit(cut),
-        ["gram"],
-        meta["n_buckets"],
-        sort_cols=["gram"],
-    )
-    _refresh(spark, incremental_substring._table_name(index_path))
-    report["last_epoch"], report["stale_outputs_removed"] = _finish(
-        index_path, out_root, tag
-    )
-    return report
-
-
-@_rebuild_guard
-def rebuild_entity_index(
-    spark: SparkSession,
-    index_path: str,
-    out_root: str | None = None,
-    tag: str = "stream",
-    cutoff=None,
-) -> dict:
-    """Recover the entity-resolution index from a mid-append crash:
-    filter ``grams``/``strings`` on the id watermark, drop epoch-tagged
-    ``aliases`` rows from epochs after the last completed one (``freq``
-    is frozen at build and never appended — untouched), swap, clear the
-    marker. Report as in rebuild_dedup_index."""
-    meta = incremental_entity._meta_rw(index_path)
-    state = _read_ledger(index_path).get(
-        tag, {"last_epoch": -1, "intent": None}
-    )
-    cut = _resolve_cutoff(state, meta, cutoff)
-    grams_t, strings_t = incremental_entity._tnames(index_path)
-    report: dict = {"cutoff": cut, "tables": {}}
-    for name, table in (("grams", grams_t), ("strings", strings_t)):
-        report["tables"][name] = _rewrite_filtered(
-            spark,
-            os.path.join(index_path, name),
-            table + "_rb",
-            lambda df: F.col("id") <= F.lit(cut),
-            ["gram"] if name == "grams" else ["id"],
-            meta["n_buckets"],
-            sort_cols=None,  # build writes these tables unsorted
+        report: dict = {"cutoff": cut.wm, "tables": {}}
+        for t in spec.tables:
+            if t.keep is not None:
+                report["tables"][t.name] = _rewrite(
+                    spark, spec, index_path, t.name, cut, meta
+                )
+        report["last_epoch"], report["stale_outputs_removed"] = _finish(
+            index_path, out_root, tag
         )
-        _refresh(spark, table)
+        return report
 
-    al_src = os.path.join(index_path, "aliases")
-    _recover_swap(al_src)
-    # mergeSchema: a legacy log upgraded in place holds files with and
-    # without the _epoch column; the filter needs the union schema
-    al = spark.read.option("mergeSchema", "true").parquet(al_src)
-    before = al.count()
-    if "_epoch" in al.columns:
-        keep = al.filter(
-            F.col("_epoch").isNull()
-            | (F.col("_epoch") <= F.lit(state["last_epoch"]))
-        ).select("entity", "canonical", "_epoch")
-    else:
-        warnings.warn(
-            "alias log predates epoch tagging — a crashed epoch's "
-            "half-appended merges cannot be identified and are kept; "
-            "the replay may append duplicates (harmless for resolution:"
-            " alias reads are distinct-ed)",
-            stacklevel=2,
-        )
-        keep = al
-    tmp = al_src + ".rebuild"
-    shutil.rmtree(tmp, ignore_errors=True)
-    keep.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(al_src)
-    os.rename(tmp, al_src)
-    spark.catalog.refreshByPath(al_src)
-    report["tables"]["aliases"] = {
-        "rows_before": before,
-        "rows_after": spark.read.parquet(al_src).count(),
-    }
-    report["last_epoch"], report["stale_outputs_removed"] = _finish(
-        index_path, out_root, tag
+    rebuild.__name__ = rebuild.__qualname__ = spec.rebuild_name
+    rebuild.__doc__ = (
+        f"Recover the {spec.what} from a mid-append crash: drop every row "
+        "above the completed-epoch watermark from each table "
+        f"indexspec.{spec.family.upper()} declares a keep predicate for, "
+        "swap the filtered tables in, clear the intent marker, and remove "
+        "stale epoch outputs under ``out_root``. Returns {cutoff, "
+        "last_epoch, stale_outputs_removed, tables: {name: {rows_before, "
+        "rows_after}}}; the restarted stream replays the crashed epoch and "
+        "lands exactly where an uninterrupted run would."
     )
-    return report
+    return _rebuild_guard(rebuild)
 
 
-@_rebuild_guard
-def rebuild_retrieval_index(
-    spark: SparkSession,
-    index_path: str,
-    out_root: str | None = None,
-    tag: str = "stream",
-    cutoff=None,
-) -> dict:
-    """Recover the BM25 inverted index from a mid-append crash: drop
-    postings rows above the completed-epoch id watermark and
-    dfreq/stats delta rows whose ``_wm`` sits above it (each delta row
-    carries its writing batch's max id), swap, clear the marker. One
-    watermark cuts all three tables, so a crash at any point of the
-    three-table append converges. Report as in rebuild_dedup_index."""
-    meta = incremental_retrieval._meta_rw(index_path)
-    state = _read_ledger(index_path).get(
-        tag, {"last_epoch": -1, "intent": None}
-    )
-    cut = _resolve_cutoff(state, meta, cutoff)
-    postings_t, dfreq_t = incremental_retrieval._table_names(index_path)
-    report: dict = {"cutoff": cut, "tables": {}}
-    for name, table, keep in (
-        ("postings", postings_t,
-         lambda df: F.col("neighbor_id") <= F.lit(cut)),
-        ("dfreq", dfreq_t, lambda df: F.col("_wm") <= F.lit(cut)),
-    ):
-        report["tables"][name] = _rewrite_filtered(
-            spark,
-            os.path.join(index_path, name),
-            table + "_rb",
-            keep,
-            ["term"],
-            meta["n_buckets"],
-            sort_cols=["term"],
-        )
-        _refresh(spark, table)
-
-    st_src = os.path.join(index_path, "stats")
-    _recover_swap(st_src)
-    st = spark.read.parquet(st_src)
-    before = st.count()
-    tmp = st_src + ".rebuild"
-    shutil.rmtree(tmp, ignore_errors=True)
-    st.filter(F.col("_wm") <= F.lit(cut)).write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(st_src)
-    os.rename(tmp, st_src)
-    spark.catalog.refreshByPath(st_src)
-    report["tables"]["stats"] = {
-        "rows_before": before,
-        "rows_after": spark.read.parquet(st_src).count(),
-    }
-    report["last_epoch"], report["stale_outputs_removed"] = _finish(
-        index_path, out_root, tag
-    )
-    return report
-
-
-@_rebuild_guard
-def rebuild_image_index(
-    spark: SparkSession,
-    index_path: str,
-    out_root: str | None = None,
-    tag: str = "stream",
-    cutoff=None,
-) -> dict:
-    """Recover the perceptual image band index from a mid-append crash:
-    drop every band row whose id is above the completed-epoch id
-    watermark (a crashed epoch's appended rows all carry its batch
-    ids), swap, clear the marker. Report as in rebuild_dedup_index."""
-    meta = incremental_images._meta_rw(index_path)
-    state = _read_ledger(index_path).get(
-        tag, {"last_epoch": -1, "intent": None}
-    )
-    cut = _resolve_cutoff(state, meta, cutoff)
-    id_col = meta["id_col"]
-    report: dict = {"cutoff": cut, "tables": {}}
-    report["tables"]["bands"] = _rewrite_filtered(
-        spark,
-        os.path.join(index_path, "bands"),
-        incremental_images._table_name(index_path) + "_rb",
-        lambda df: F.col(id_col) <= F.lit(cut),
-        ["bi", "bv"],
-        meta["n_buckets"],
-        sort_cols=["bi", "bv"],
-    )
-    _refresh(spark, incremental_images._table_name(index_path))
-    report["last_epoch"], report["stale_outputs_removed"] = _finish(
-        index_path, out_root, tag
-    )
-    return report
-
-
-@_rebuild_guard
-def rebuild_audio_index(
-    spark: SparkSession,
-    index_path: str,
-    out_root: str | None = None,
-    tag: str = "stream",
-    cutoff=None,
-) -> dict:
-    """Recover the audio constellation index from a mid-append crash:
-    drop every fingerprint row whose id is above the completed-epoch id
-    watermark, swap, clear the marker. Report as in
-    rebuild_dedup_index."""
-    meta = incremental_audio._meta_rw(index_path)
-    state = _read_ledger(index_path).get(
-        tag, {"last_epoch": -1, "intent": None}
-    )
-    cut = _resolve_cutoff(state, meta, cutoff)
-    id_col = meta["id_col"]
-    report: dict = {"cutoff": cut, "tables": {}}
-    report["tables"]["fps"] = _rewrite_filtered(
-        spark,
-        os.path.join(index_path, "fps"),
-        incremental_audio._table_name(index_path) + "_rb",
-        lambda df: F.col(id_col) <= F.lit(cut),
-        ["fhash"],
-        meta["n_buckets"],
-        sort_cols=["fhash"],
-    )
-    _refresh(spark, incremental_audio._table_name(index_path))
-    report["last_epoch"], report["stale_outputs_removed"] = _finish(
-        index_path, out_root, tag
-    )
-    return report
-
-
-@_rebuild_guard
-def rebuild_graph_index(
-    spark: SparkSession,
-    index_path: str,
-    out_root: str | None = None,
-    tag: str = "stream",
-    cutoff=None,
-) -> dict:
-    """Recover the link-graph index from a mid-append crash: drop edge
-    rows whose src is above the completed-epoch watermark (the
-    monotone-src crawl convention), label and merge-log rows whose
-    ``_wm`` sits above it (base rows carry _wm NULL and are always
-    kept), swap, clear the marker. One watermark cuts all three
-    tables, so a crash at any point of the edges→labels→merges append
-    converges to the last completed epoch's exact index content.
-    Report as in rebuild_dedup_index."""
-    from basic_data_pipeline_spark.operators import (
-        incremental_linkgraph as ilg,
-    )
-
-    meta = ilg._meta_rw(index_path)
-    state = _read_ledger(index_path).get(
-        tag, {"last_epoch": -1, "intent": None}
-    )
-    cut = _resolve_cutoff(state, meta, cutoff)
-    report: dict = {"cutoff": cut, "tables": {}}
-    for name, bcol, keep in (
-        ("edges", "src", lambda df: F.col("src") <= F.lit(cut)),
-        (
-            "labels",
-            "node",
-            lambda df: F.col("_wm").isNull() | (F.col("_wm") <= F.lit(cut)),
-        ),
-    ):
-        report["tables"][name] = _rewrite_filtered(
-            spark,
-            os.path.join(index_path, name),
-            ilg._tname(index_path, name) + "_rb",
-            keep,
-            [bcol],
-            meta["n_buckets"],
-            sort_cols=[bcol],
-        )
-        _refresh(spark, ilg._tname(index_path, name))
-
-    mg_src = os.path.join(index_path, "merges")
-    _recover_swap(mg_src)
-    mg = spark.read.parquet(mg_src)
-    before = mg.count()
-    tmp = mg_src + ".rebuild"
-    shutil.rmtree(tmp, ignore_errors=True)
-    mg.filter(F.col("_wm") <= F.lit(cut)).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(tmp)
-    shutil.rmtree(mg_src)
-    os.rename(tmp, mg_src)
-    spark.catalog.refreshByPath(mg_src)
-    report["tables"]["merges"] = {
-        "rows_before": before,
-        "rows_after": spark.read.parquet(mg_src).count(),
-    }
-    report["last_epoch"], report["stale_outputs_removed"] = _finish(
-        index_path, out_root, tag
-    )
-    return report
+rebuild_dedup_index = _bind(indexspec.DEDUP)
+rebuild_substring_index = _bind(indexspec.SUBSTRING)
+rebuild_entity_index = _bind(indexspec.ENTITY)
+rebuild_retrieval_index = _bind(indexspec.RETRIEVAL)
+rebuild_image_index = _bind(indexspec.IMAGE)
+rebuild_audio_index = _bind(indexspec.AUDIO)
+rebuild_graph_index = _bind(indexspec.GRAPH)

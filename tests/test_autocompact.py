@@ -22,7 +22,8 @@ from pyspark.sql import functions as F
 
 from basic_data_pipeline_spark.operators import incremental
 from basic_data_pipeline_spark.operators import incremental_retrieval as IR
-from basic_data_pipeline_spark.streaming import dedup_stream, retrieval_stream
+from basic_data_pipeline_spark.operators import indexspec
+from basic_data_pipeline_spark.streaming import dedup_stream
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -74,7 +75,7 @@ def test_dedup_stream_autocompact_same_results_fewer_files(spark, tmp_path):
     # was after epoch 3 (counter 2), so at most 1 append's files ride on
     # top of one-file-per-bucket
     assert _files(f"{idx_b}/bands") < _files(f"{idx_a}/bands")
-    ledger = dedup_stream._read_ledger(idx_b)
+    ledger = indexspec.read_ledger(idx_b)
     assert ledger["stream"]["since_compact"] == 1  # 5 epochs, reset at 2,4
     # stop both streams (release their leases) before batch mutators
     from basic_data_pipeline_spark.streaming import swapstore
@@ -106,8 +107,8 @@ def test_retrieval_stream_autocompact_search_identical(spark, tmp_path):
     idx_b = str(tmp_path / "b")
     IR.build_retrieval_index(spark, base, idx_a)
     IR.build_retrieval_index(spark, base, idx_b)
-    fn_a = retrieval_stream.make_retrieval_batch_fn(idx_a, str(tmp_path / "oa"))
-    fn_b = retrieval_stream.make_retrieval_batch_fn(
+    fn_a = dedup_stream.make_retrieval_batch_fn(idx_a, str(tmp_path / "oa"))
+    fn_b = dedup_stream.make_retrieval_batch_fn(
         idx_b, str(tmp_path / "ob"), compact_every=2
     )
     for e, b in enumerate(rest):

@@ -13,7 +13,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from basic_data_pipeline_spark.operators import incremental
+from basic_data_pipeline_spark.operators import incremental_audio as IA
 from basic_data_pipeline_spark.operators import incremental_entity as IE
+from basic_data_pipeline_spark.operators import incremental_images as II
+from basic_data_pipeline_spark.operators import incremental_linkgraph as G
 from basic_data_pipeline_spark.operators import incremental_retrieval as IR
 from basic_data_pipeline_spark.operators import incremental_substring as IS
 from basic_data_pipeline_spark.operators import retrieval, substring
@@ -108,8 +111,8 @@ def test_substring_compact_preserves_membership_and_plan(
     assert grams_after == grams_before
 
     # the zero-exchange membership-join property survives compaction
-    meta = IS._meta_rw(idx)
-    reg = IS._registered_grams(spark, idx, meta["n_buckets"])
+    meta = IS.SPEC.read_meta(spark, idx)
+    reg = IS.SPEC.register(spark, idx, "grams", meta)
     occ = substring.gram_occurrences(
         spark.createDataFrame(
             [(99_000_000_000, "alpha beta gamma delta epsilon zeta eta theta")],
@@ -167,14 +170,27 @@ def test_dedup_and_entity_compact_round_trip(spark, docs, tmp_path):
     assert strings_after == strings_before
 
 
-def test_compact_refuses_pending_intent(spark, docs, tmp_path):
+COMPACTIONS = {
+    "dedup": incremental.compact_index,
+    "substring": IS.compact_index,
+    "entity": IE.compact_index,
+    "retrieval": IR.compact_index,
+    "image": II.compact_image_index,
+    "audio": IA.compact_audio_index,
+    "graph": G.compact_graph_index,
+}
+
+
+@pytest.mark.parametrize("family", list(COMPACTIONS))
+def test_compact_refuses_pending_intent(spark, tmp_path, family):
+    """The guard runs before any meta read: a ledger with a pending
+    intent is all a refusal needs."""
     idx = str(tmp_path / "idx")
-    IR.build_retrieval_index(spark, docs.limit(50), idx, n_buckets=4)
     dedup_stream._write_ledger(
         idx, {"stream": {"last_epoch": 0, "intent": 1}}
     )
     with pytest.raises(RuntimeError, match="streaming.rebuild"):
-        IR.compact_index(spark, idx)
+        COMPACTIONS[family](spark, idx)
 
 
 def test_compact_recovers_crashed_swap(spark, docs, tmp_path):

@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from basic_data_pipeline_spark.operators import incremental
+from basic_data_pipeline_spark.operators import indexspec
 from basic_data_pipeline_spark.streaming import dedup_stream
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -52,7 +53,7 @@ def test_stream_batches_match_batch_operator(spark, docs, tmp_path):
         }
     assert _out_ids(spark, out) == expected
 
-    ledger = dedup_stream._read_ledger(idx_a)
+    ledger = indexspec.read_ledger(idx_a)
     assert ledger["stream"]["last_epoch"] == 1
     assert ledger["stream"]["intent"] is None
     # the completed-epoch id watermark (rebuild anchor) tracks batch max
@@ -109,6 +110,41 @@ def test_stream_detects_mid_append_crash(spark, docs, tmp_path):
     fn = dedup_stream.make_dedup_batch_fn(idx, out)
     with pytest.raises(dedup_stream.DirtyIndexError):
         fn(docs.filter(F.col("doc_id") >= 150), 4)
+
+
+def test_throwing_epoch_releases_persists_and_names_rebuild_helper(
+    spark, tmp_path
+):
+    """A body that throws mid-epoch still releases its tracked persists;
+    the intent marker stays set, so the next epoch refuses with the
+    family's exact rebuild helper."""
+    from basic_data_pipeline_spark import caching
+    from basic_data_pipeline_spark.streaming import swapstore
+
+    class _Boom(RuntimeError):
+        pass
+
+    def body(batch_df, _epoch):
+        caching.tracked_persist(batch_df).count()
+        raise _Boom()
+
+    idx = str(tmp_path / "idx")
+    fn = dedup_stream.make_guarded_batch_fn(
+        idx, str(tmp_path / "out"), body, incremental.SPEC
+    )
+    batch = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    try:
+        with pytest.raises(_Boom):
+            fn(batch, 0)
+        assert caching._TRACKED == []
+        assert indexspec.read_ledger(idx)["stream"]["intent"] == 0
+        with pytest.raises(
+            dedup_stream.DirtyIndexError,
+            match=r"streaming\.rebuild\.rebuild_dedup_index\(",
+        ):
+            fn(batch, 1)
+    finally:
+        swapstore.release_writer(fn)
 
 
 def test_stream_end_to_end_through_streaming_engine(spark, docs, tmp_path):

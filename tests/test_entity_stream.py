@@ -1,4 +1,4 @@
-"""Streaming entity resolution (streaming/entity_stream.py): stream ==
+"""Streaming entity resolution (streaming/dedup_stream.py): stream ==
 batch equivalence across micro-batch boundaries (incl. a bridge merge),
 replay skip without touching the index, DirtyIndexError on a mid-append
 crash, and an end-to-end run through the real streaming engine —
@@ -13,7 +13,8 @@ import pytest
 
 from basic_data_pipeline_spark.operators import entity as E
 from basic_data_pipeline_spark.operators import incremental_entity as IE
-from basic_data_pipeline_spark.streaming import dedup_stream, entity_stream
+from basic_data_pipeline_spark.operators import indexspec
+from basic_data_pipeline_spark.streaming import dedup_stream
 
 B0 = [(1, "acme corp"), (2, "globex inc"), (3, "initech llc"),
       (4, "acme corpx"), (5, "datum corp")]
@@ -39,7 +40,7 @@ def test_stream_batches_match_batch_operator_with_bridge(spark, tmp_path):
     IE.build_entity_index(spark, _df(spark, B0), idx_s)
     IE.build_entity_index(spark, _df(spark, B0), idx_b)
 
-    entity_stream.run_entity_batches(
+    dedup_stream.run_entity_batches(
         spark, [_df(spark, B1), _df(spark, B2)], idx_s, out
     )
 
@@ -68,7 +69,7 @@ def test_stream_batches_match_batch_operator_with_bridge(spark, tmp_path):
     }
     assert got == want
 
-    ledger = dedup_stream._read_ledger(idx_s)
+    ledger = indexspec.read_ledger(idx_s)
     assert ledger["stream"]["last_epoch"] == 1
     assert ledger["stream"]["intent"] is None
     assert ledger["stream"]["max_id"] == 21  # completed-epoch id watermark
@@ -79,7 +80,7 @@ def test_stream_replay_of_completed_epoch_is_dropped(spark, tmp_path):
     idx = str(tmp_path / "idx")
     out = str(tmp_path / "out")
     IE.build_entity_index(spark, _df(spark, B0), idx)
-    fn = entity_stream.make_entity_batch_fn(idx, out)
+    fn = dedup_stream.make_entity_batch_fn(idx, out)
     fn(_df(spark, B1), 0)
     n_grams = spark.read.parquet(f"{idx}/grams").count()
     before = _out(spark, out)
@@ -93,7 +94,7 @@ def test_mid_append_crash_raises_dirty_index(spark, tmp_path):
     idx = str(tmp_path / "idx")
     out = str(tmp_path / "out")
     IE.build_entity_index(spark, _df(spark, B0), idx)
-    fn = entity_stream.make_entity_batch_fn(idx, out)
+    fn = dedup_stream.make_entity_batch_fn(idx, out)
     fn(_df(spark, B1), 0)
     # simulate a crash mid-append: intent set, ledger never advanced
     lp = dedup_stream._ledger_path(idx)
@@ -102,7 +103,7 @@ def test_mid_append_crash_raises_dirty_index(spark, tmp_path):
     ledger["stream"]["intent"] = 1
     with open(lp, "w") as f:
         json.dump(ledger, f)
-    with pytest.raises(entity_stream.DirtyIndexError):
+    with pytest.raises(dedup_stream.DirtyIndexError):
         fn(_df(spark, B2), 1)
 
 
@@ -110,9 +111,9 @@ def test_empty_batch_advances_ledger(spark, tmp_path):
     idx = str(tmp_path / "idx")
     out = str(tmp_path / "out")
     IE.build_entity_index(spark, _df(spark, B0), idx)
-    fn = entity_stream.make_entity_batch_fn(idx, out)
+    fn = dedup_stream.make_entity_batch_fn(idx, out)
     fn(spark.createDataFrame([], "id long, name string"), 0)
-    assert dedup_stream._read_ledger(idx)["stream"]["last_epoch"] == 0
+    assert indexspec.read_ledger(idx)["stream"]["last_epoch"] == 0
     assert not os.path.exists(out)  # no output dir for an empty epoch
 
 
@@ -127,7 +128,7 @@ def test_streaming_engine_end_to_end(spark, tmp_path):
         with open(os.path.join(src, f"b{i}.json"), "w") as f:
             for rid, name in rows:
                 f.write(json.dumps({"id": rid, "name": name}) + "\n")
-    q = entity_stream.entity_files(
+    q = dedup_stream.entity_files(
         spark, src, idx, out, str(tmp_path / "ckpt")
     )
     q.awaitTermination(120)

@@ -35,14 +35,9 @@ from basic_data_pipeline_spark.operators import incremental, retrieval
 from basic_data_pipeline_spark.operators import incremental_entity as IE
 from basic_data_pipeline_spark.operators import incremental_retrieval as IR
 from basic_data_pipeline_spark.operators import incremental_substring as IS
+from basic_data_pipeline_spark.operators import indexspec
 from basic_data_pipeline_spark.sources import tables
-from basic_data_pipeline_spark.streaming import (
-    dedup_stream,
-    entity_stream,
-    rebuild,
-    retrieval_stream,
-    substring_stream,
-)
+from basic_data_pipeline_spark.streaming import dedup_stream, rebuild
 
 N_EX = int(os.environ.get("SPARK_GRAFT_FUZZ_EXAMPLES", "4"))
 _SET = dict(
@@ -90,7 +85,7 @@ def _drive(spark, batches, make_fn, build, rebuild_fn, crash,
     caller's comparison of the two.
 
     ``asof_rows`` (r11, optional): (spark, idx, pinned) -> sorted rows —
-    the family's snapshot reader (operators/indexsnap.py). At every
+    the family's snapshot reader (operators/indexspec.py). At every
     crash point the fuzzer then also asserts the SHARP read-isolation
     equivalence: the as-of read over the DIRTY index (partial epoch on
     disk, intent set) equals the plain read after the rebuild — i.e.
@@ -139,7 +134,7 @@ def _drive(spark, batches, make_fn, build, rebuild_fn, crash,
         rows = sorted(
             map(tuple, spark.read.parquet(f"{out}/epoch=*").collect())
         )
-        ledger = dedup_stream._read_ledger(idx)["stream"]
+        ledger = indexspec.read_ledger(idx)["stream"]
         assert ledger["last_epoch"] == len(batches) - 1
         assert ledger["intent"] is None
         results.append((rows, idx))
@@ -321,7 +316,7 @@ def test_fuzz_substring_stream_crash_recovery(spark, picks, cuts, crash):
     )
     gen = _drive(
         spark, batches,
-        substring_stream.make_substring_batch_fn,
+        dedup_stream.make_substring_batch_fn,
         lambda idx: IS.build_substring_index(spark, base, idx, k=4),
         rebuild.rebuild_substring_index,
         crash,
@@ -363,7 +358,7 @@ def test_fuzz_entity_stream_crash_recovery(spark, picks, cuts, crash):
     )
     gen = _drive(
         spark, batches,
-        entity_stream.make_entity_batch_fn,
+        dedup_stream.make_entity_batch_fn,
         lambda idx: IE.build_entity_index(spark, base, idx),
         rebuild.rebuild_entity_index,
         crash,
@@ -416,7 +411,7 @@ def test_fuzz_retrieval_stream_crash_recovery(spark, picks, cuts, crash):
     base = spark.createDataFrame(base_rows, "doc_id long, text string")
     gen = _drive(
         spark, batches,
-        retrieval_stream.make_retrieval_batch_fn,
+        dedup_stream.make_retrieval_batch_fn,
         lambda idx: IR.build_retrieval_index(spark, base, idx),
         rebuild.rebuild_retrieval_index,
         crash,
@@ -472,7 +467,6 @@ def test_fuzz_graph_stream_crash_recovery(spark, picks, cuts, crash):
         incremental_linkgraph as G,
         linkgraph as LG,
     )
-    from basic_data_pipeline_spark.streaming import graph_stream
 
     cuts = [c for c in cuts if c < len(picks)]
     # srcs monotone across the sequence (the crawl convention the
@@ -485,7 +479,7 @@ def test_fuzz_graph_stream_crash_recovery(spark, picks, cuts, crash):
     base = spark.createDataFrame(_GRAPH_BASE, "src long, dst long")
     gen = _drive(
         spark, batches,
-        graph_stream.make_graph_batch_fn,
+        dedup_stream.make_graph_batch_fn,
         lambda idx: G.build_graph_index(spark, base, idx),
         rebuild.rebuild_graph_index,
         crash,

@@ -88,7 +88,7 @@ def test_incremental_cross_join_shuffles_only_increment_side(spark, tmp_path):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        idx_bands, _, _ = incremental._index_tables(spark, idx, "doc_id")
+        idx_bands, _, _ = incremental._index_tables(spark, idx)
         new_sh = dedup.word_shingles(b2, "doc_id", "text")
         new_bands = dedup.lsh_bands(
             dedup.minhash_signatures(new_sh, "doc_id"), "doc_id"
@@ -202,7 +202,7 @@ def test_incremental_staging_is_pruned(spark, tmp_path):
     staged = os.listdir(os.path.join(idx, "_staging"))
     assert len(staged) <= 2  # current call's + the prior call's
     # and the meta ledger tracks exactly what's on disk
-    meta = incremental._read_meta(idx)
+    meta = incremental.SPEC.read_meta(spark, idx)
     assert set(meta["staging"]) == {os.path.join("_staging", s) for s in staged}
 
 

@@ -1,6 +1,6 @@
 """Incremental + streaming audio dedup against the persisted
 constellation index (operators/incremental_audio.py,
-streaming/audio_stream.py, rebuild_audio_index)."""
+streaming/dedup_stream.py, rebuild_audio_index)."""
 
 from __future__ import annotations
 
@@ -9,8 +9,9 @@ from pyspark.sql import functions as F
 
 from basic_data_pipeline_spark.operators import audio as A
 from basic_data_pipeline_spark.operators import incremental_audio as IA
+from basic_data_pipeline_spark.operators import indexspec
 from basic_data_pipeline_spark.sources import tables
-from basic_data_pipeline_spark.streaming import audio_stream, dedup_stream
+from basic_data_pipeline_spark.streaming import dedup_stream
 from basic_data_pipeline_spark.streaming import rebuild
 
 
@@ -80,8 +81,8 @@ def test_undecodable_clips_pass_through_unindexed(spark, tmp_path):
 def test_increment_only_shuffle(spark, tmp_path):
     idx = str(tmp_path / "idx")
     IA.build_audio_index(spark, _media(spark, 0, 16), idx)
-    meta = IA._meta_rw(idx)
-    reg = IA._registered_fps(spark, idx, meta["n_buckets"])
+    meta = IA.SPEC.read_meta(spark, idx)
+    reg = IA.SPEC.register(spark, idx, "fps", meta)
     new_fps = A.audio_fingerprints(_media(spark, 16, 24))
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -105,7 +106,7 @@ def test_crash_rebuild_replay_matches_batch(spark, tmp_path, monkeypatch):
     IA.build_audio_index(spark, base, idx_b)
     b1, b2 = _media(spark, 8, 20), _media(spark, 20, 32)
 
-    fn = audio_stream.make_audio_batch_fn(idx_s, out)
+    fn = dedup_stream.make_audio_batch_fn(idx_s, out)
     fn(b1, 0)
     rows_good = spark.read.parquet(f"{idx_s}/fps").count()
 
@@ -134,7 +135,7 @@ def test_crash_rebuild_replay_matches_batch(spark, tmp_path, monkeypatch):
         IA.incremental_audio_dedup(spark, b1, idx_b)
     ) | _ids(IA.incremental_audio_dedup(spark, b2, idx_b))
     assert got == expected
-    ledger = dedup_stream._read_ledger(idx_s)
+    ledger = indexspec.read_ledger(idx_s)
     assert ledger["stream"]["last_epoch"] == 1
     assert ledger["stream"]["intent"] is None
 
@@ -146,7 +147,7 @@ def test_compaction_preserves_results(spark, tmp_path):
     IA.incremental_audio_dedup(spark, _media(spark, 8, 16), idx)
     IA.incremental_audio_dedup(spark, _media(spark, 16, 24), idx)
     rep = IA.compact_audio_index(spark, idx)
-    assert rep["files_after"] <= IA._meta_rw(idx)["n_buckets"]
+    assert rep["files_after"] <= IA.SPEC.read_meta(spark, idx)["n_buckets"]
     assert rep["files_after"] < rep["files_before"]
     s = IA.incremental_audio_dedup(spark, _media(spark, 16, 24), idx)
     assert _ids(s) == set()

@@ -84,10 +84,10 @@ def test_candidate_join_index_side_in_place(spark, tmp_path):
     only the increment side shuffles."""
     idx = str(tmp_path / "eidx")
     IE.build_entity_index(spark, _df(spark, B1), idx)
-    meta = IE._meta_rw(idx)
-    grams_t, _ = IE._tnames(idx)
+    meta = IE.SPEC.read_meta(spark, idx)
+    grams_t = IE.SPEC.table_name(idx, "grams")
     idx_grams = spark.table(grams_t)
-    freq = spark.read.parquet(IE._p(idx, "freq"))
+    freq = spark.read.parquet(IE.SPEC.path(idx, "freq"))
     norm = _df(spark, B2).select(
         F.col("id").alias("_id"), F.lower(F.trim(F.col("name"))).alias("_txt")
     )

@@ -1,5 +1,5 @@
 """Incremental + streaming perceptual image dedup against the persisted
-band index (operators/incremental_images.py, streaming/image_stream.py,
+band index (operators/incremental_images.py, streaming/dedup_stream.py,
 rebuild_image_index)."""
 
 from __future__ import annotations
@@ -9,8 +9,9 @@ from pyspark.sql import functions as F
 
 from basic_data_pipeline_spark.operators import images as I
 from basic_data_pipeline_spark.operators import incremental_images as II
+from basic_data_pipeline_spark.operators import indexspec
 from basic_data_pipeline_spark.sources import tables
-from basic_data_pipeline_spark.streaming import dedup_stream, image_stream
+from basic_data_pipeline_spark.streaming import dedup_stream
 from basic_data_pipeline_spark.streaming import rebuild
 
 MH = 8
@@ -89,8 +90,8 @@ def test_undecodable_rows_pass_through_unindexed(spark, tmp_path):
 def test_increment_only_shuffle(spark, tmp_path):
     idx = str(tmp_path / "idx")
     II.build_image_index(spark, _media(spark, 0, 16), idx, max_hamming=MH)
-    meta = II._meta_rw(idx)
-    reg = II._registered_bands(spark, idx, meta["n_buckets"], "media_id")
+    meta = II.SPEC.read_meta(spark, idx)
+    reg = II.SPEC.register(spark, idx, "bands", meta)
     new_bands = I.hash_bands(
         I.image_hashes(_media(spark, 16, 24)), MH, id_col="media_id"
     )
@@ -121,7 +122,7 @@ def test_stream_replay_is_noop_and_outputs_match_batch(spark, tmp_path):
     II.build_image_index(spark, base, idx_b, max_hamming=MH)
     b1, b2 = _media(spark, 8, 20), _media(spark, 20, 32)
 
-    fn = image_stream.run_image_batches(spark, [b1, b2], idx_s, out)
+    fn = dedup_stream.run_image_batches(spark, [b1, b2], idx_s, out)
     rows = spark.read.parquet(f"{idx_s}/bands").count()
     fn(b2, 1)  # full replay of a completed epoch: skipped outright
     assert spark.read.parquet(f"{idx_s}/bands").count() == rows
@@ -142,7 +143,7 @@ def test_crash_rebuild_replay_matches_batch(spark, tmp_path, monkeypatch):
     II.build_image_index(spark, base, idx_b, max_hamming=MH)
     b1, b2 = _media(spark, 8, 20), _media(spark, 20, 32)
 
-    fn = image_stream.make_image_batch_fn(idx_s, out)
+    fn = dedup_stream.make_image_batch_fn(idx_s, out)
     fn(b1, 0)
     rows_good = spark.read.parquet(f"{idx_s}/bands").count()
 
@@ -173,7 +174,7 @@ def test_crash_rebuild_replay_matches_batch(spark, tmp_path, monkeypatch):
         II.incremental_image_dedup(spark, b1, idx_b)
     ) | _ids(II.incremental_image_dedup(spark, b2, idx_b))
     assert got == expected
-    ledger = dedup_stream._read_ledger(idx_s)
+    ledger = indexspec.read_ledger(idx_s)
     assert ledger["stream"]["last_epoch"] == 1
     assert ledger["stream"]["intent"] is None
 
@@ -185,7 +186,7 @@ def test_compaction_preserves_results(spark, tmp_path):
     II.incremental_image_dedup(spark, _media(spark, 8, 16), idx)
     II.incremental_image_dedup(spark, _media(spark, 16, 24), idx)
     rep = II.compact_image_index(spark, idx)
-    assert rep["files_after"] <= II._meta_rw(idx)["n_buckets"]
+    assert rep["files_after"] <= II.SPEC.read_meta(spark, idx)["n_buckets"]
     assert rep["files_after"] < rep["files_before"]
     # post-compaction increments still resolve against the full corpus
     s = II.incremental_image_dedup(spark, _media(spark, 16, 24), idx)

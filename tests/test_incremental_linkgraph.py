@@ -9,12 +9,9 @@ from pyspark.sql import functions as F
 
 from basic_data_pipeline_spark.operators import incremental_linkgraph as G
 from basic_data_pipeline_spark.operators import linkgraph as LG
+from basic_data_pipeline_spark.operators import indexspec
 from basic_data_pipeline_spark.sources import tables
-from basic_data_pipeline_spark.streaming import (
-    dedup_stream,
-    graph_stream,
-    rebuild,
-)
+from basic_data_pipeline_spark.streaming import dedup_stream, rebuild
 
 
 class _Boom(RuntimeError):
@@ -133,8 +130,8 @@ def test_compaction_folds_merges_and_preserves_labels(spark, tmp_path):
 def test_increment_only_shuffle(spark, tmp_path):
     idx = str(tmp_path / "idx")
     G.build_graph_index(spark, _edf(spark, BASE), idx)
-    meta = G._meta_rw(idx)
-    idx_l = G._registered(spark, idx, "labels", "node", meta["n_buckets"])
+    meta = G.SPEC.read_meta(spark, idx)
+    idx_l = G.SPEC.register(spark, idx, "labels", meta)
     ends = _edf(spark, BATCH1).select(F.col("src").alias("node")).distinct()
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -159,7 +156,7 @@ def test_stream_replay_is_noop_and_outputs_match_batch(spark, tmp_path):
     G.build_graph_index(spark, _edf(spark, BASE), idx_b)
     b1, b2 = _edf(spark, BATCH1), _edf(spark, BATCH2)
 
-    fn = graph_stream.run_edge_batches(spark, [b1, b2], idx_s, out)
+    fn = dedup_stream.run_edge_batches(spark, [b1, b2], idx_s, out)
     rows = spark.read.parquet(f"{idx_s}/edges").count()
     fn(b2, 1)  # full replay of a completed epoch: skipped outright
     assert spark.read.parquet(f"{idx_s}/edges").count() == rows
@@ -180,7 +177,7 @@ def test_crash_rebuild_replay_matches_batch(spark, tmp_path, monkeypatch):
     G.build_graph_index(spark, _edf(spark, BASE), idx_s)
     b1, b2 = _edf(spark, BATCH1), _edf(spark, BATCH2)
 
-    fn = graph_stream.make_graph_batch_fn(idx_s, out)
+    fn = dedup_stream.make_graph_batch_fn(idx_s, out)
     fn(b1, 0)
     edges_good = spark.read.parquet(f"{idx_s}/edges").count()
     labels_good = spark.read.parquet(f"{idx_s}/labels").count()
@@ -211,7 +208,7 @@ def test_crash_rebuild_replay_matches_batch(spark, tmp_path, monkeypatch):
     assert _comp(G.components(spark, idx_s)) == _comp(
         LG.connected_components(_edf(spark, ALL))
     )
-    ledger = dedup_stream._read_ledger(idx_s)
+    ledger = indexspec.read_ledger(idx_s)
     assert ledger["stream"]["last_epoch"] == 1
     assert ledger["stream"]["intent"] is None
 
@@ -224,7 +221,7 @@ def test_streaming_engine_end_to_end(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     G.build_graph_index(spark, _edf(spark, BASE), idx)
     _edf(spark, BATCH1 + BATCH2).write.parquet(src_dir)
-    q = graph_stream.edge_files(spark, src_dir, idx, out, ckpt)
+    q = dedup_stream.edge_files(spark, src_dir, idx, out, ckpt)
     q.awaitTermination(120)
     assert _comp(G.components(spark, idx)) == _comp(
         LG.connected_components(_edf(spark, ALL))

@@ -1,5 +1,5 @@
 """Incremental BM25 inverted index (operators/incremental_retrieval.py)
-and its streaming twin (streaming/retrieval_stream.py): index-backed
+and its streaming twin (streaming/dedup_stream.py): index-backed
 search == one-shot bm25_topk EXACTLY (ranks and scores) under any batch
 split, term predicates reach the postings scan, appends never touch the
 index tables, and the ledger/rebuild machinery recovers a mid-append
@@ -16,11 +16,7 @@ from pyspark.sql import functions as F
 from basic_data_pipeline_spark.operators import incremental_retrieval as IR
 from basic_data_pipeline_spark.operators import retrieval
 from basic_data_pipeline_spark.sources import tables
-from basic_data_pipeline_spark.streaming import (
-    dedup_stream,
-    rebuild,
-    retrieval_stream,
-)
+from basic_data_pipeline_spark.streaming import dedup_stream, rebuild
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -190,7 +186,7 @@ def test_stream_replay_skip_and_stale_intent(spark, tmp_path):
     idx = str(tmp_path / "idx")
     out = str(tmp_path / "out")
     IR.build_retrieval_index(spark, _df(spark, B0), idx)
-    fn = retrieval_stream.run_retrieval_batches(
+    fn = dedup_stream.run_retrieval_batches(
         spark, [_df(spark, B1)], idx, out
     )
     stats = IR.index_stats(spark, idx)
@@ -205,7 +201,7 @@ def test_stream_replay_skip_and_stale_intent(spark, tmp_path):
     ledger["stream"]["intent"] = 5
     with open(lp, "w") as f:
         json.dump(ledger, f)
-    with pytest.raises(retrieval_stream.DirtyIndexError):
+    with pytest.raises(dedup_stream.DirtyIndexError):
         fn(_df(spark, B2), 7)
 
 
@@ -224,7 +220,7 @@ def test_crash_rebuild_replay_matches_batch(
     idx = str(tmp_path / "idx")
     out = str(tmp_path / "out")
     IR.build_retrieval_index(spark, _df(spark, B0), idx)
-    fn = retrieval_stream.make_retrieval_batch_fn(idx, out)
+    fn = dedup_stream.make_retrieval_batch_fn(idx, out)
     fn(_df(spark, B1), 0)
     good_postings = spark.read.parquet(f"{idx}/postings").count()
     good_stats = IR.index_stats(spark, idx)
@@ -245,7 +241,7 @@ def test_crash_rebuild_replay_matches_batch(
     # the index genuinely holds a partial epoch now
     assert spark.read.parquet(f"{idx}/postings").count() > good_postings
 
-    with pytest.raises(retrieval_stream.DirtyIndexError):
+    with pytest.raises(dedup_stream.DirtyIndexError):
         fn(_df(spark, B2), 1)
 
     rep = rebuild.rebuild_retrieval_index(spark, idx, out_root=out)
@@ -271,7 +267,7 @@ def test_streaming_engine_end_to_end(spark, tmp_path):
         with open(os.path.join(src, f"b{i}.json"), "w") as f:
             for did, txt in rows:
                 f.write(json.dumps({"doc_id": did, "text": txt}) + "\n")
-    qy = retrieval_stream.retrieval_files(
+    qy = dedup_stream.retrieval_files(
         spark, src, idx, out, str(tmp_path / "ckpt")
     )
     qy.awaitTermination(120)
@@ -389,7 +385,7 @@ def test_as_of_completed_snapshot_during_partial_append(
     idx = str(tmp_path / "idx")
     out = str(tmp_path / "out")
     IR.build_retrieval_index(spark, _df(spark, B0), idx)
-    fn = retrieval_stream.make_retrieval_batch_fn(idx, out)
+    fn = dedup_stream.make_retrieval_batch_fn(idx, out)
     fn(_df(spark, B1), 0)
     q = _qdf(spark)
     completed = _rows(IR.search_retrieval_index(spark, q, idx, 4))

@@ -1,6 +1,6 @@
 """Incremental substring dedup vs the persisted gram index
 (operators/incremental_substring.py) and its streaming twin
-(streaming/substring_stream.py): batch-at-a-time == one-shot, increment-
+(streaming/dedup_stream.py): batch-at-a-time == one-shot, increment-
 only shuffle on the membership join, ledger-guarded replay/crash."""
 
 from __future__ import annotations
@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from basic_data_pipeline_spark.operators import incremental_substring as IS
 from basic_data_pipeline_spark.operators import substring
-from basic_data_pipeline_spark.streaming import dedup_stream, substring_stream
+from basic_data_pipeline_spark.streaming import dedup_stream
 
 K = 4
 
@@ -98,8 +98,8 @@ def test_membership_join_index_side_in_place(spark, tmp_path):
     only the increment side shuffles to the bucket layout."""
     idx = str(tmp_path / "sidx")
     IS.build_substring_index(spark, _df(spark, B0), idx, k=K)
-    meta = IS._meta_rw(idx)
-    grams = IS._registered_grams(spark, idx, meta["n_buckets"])
+    meta = IS.SPEC.read_meta(spark, idx)
+    grams = IS.SPEC.register(spark, idx, "grams", meta)
     occ = substring.gram_occurrences(_df(spark, B1), k=K)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -120,7 +120,7 @@ def test_stream_equals_batch_with_replay_and_crash(spark, tmp_path):
     IS.build_substring_index(spark, _df(spark, B0), idx_s, k=K)
     IS.build_substring_index(spark, _df(spark, B0), idx_b, k=K)
 
-    fn = substring_stream.run_substring_batches(
+    fn = dedup_stream.run_substring_batches(
         spark, [_df(spark, B1), _df(spark, B2)], idx_s, out
     )
     got = _texts(spark.read.parquet(f"{out}/epoch=*"))
@@ -144,7 +144,7 @@ def test_stream_equals_batch_with_replay_and_crash(spark, tmp_path):
     ledger["stream"]["intent"] = 7
     with open(lp, "w") as f:
         json.dump(ledger, f)
-    with pytest.raises(substring_stream.DirtyIndexError):
+    with pytest.raises(dedup_stream.DirtyIndexError):
         fn(_df(spark, B2), 9)
 
 
@@ -158,7 +158,7 @@ def test_streaming_engine_end_to_end(spark, tmp_path):
         with open(os.path.join(src, f"b{i}.json"), "w") as f:
             for did, txt in rows:
                 f.write(json.dumps({"doc_id": did, "text": txt}) + "\n")
-    q = substring_stream.substring_files(
+    q = dedup_stream.substring_files(
         spark, src, idx, out, str(tmp_path / "ckpt")
     )
     q.awaitTermination(120)
@@ -179,7 +179,7 @@ def test_stream_epoch_frees_checkpoint_storage(spark, tmp_path):
     idx = str(tmp_path / "idx")
     out = str(tmp_path / "out")
     IS.build_substring_index(spark, _df(spark, B0), idx, k=K)
-    fn = substring_stream.make_substring_batch_fn(idx, out)
+    fn = dedup_stream.make_substring_batch_fn(idx, out)
 
     def n_stored():
         return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())

@@ -1,5 +1,5 @@
 """Snapshot-consistent reads for the incremental index family (r10
-verdict item #4; operators/indexsnap.py). The scenario each test pins:
+verdict item #4; operators/indexspec.py). The scenario each test pins:
 an index with one COMPLETED stream epoch, then an append that dies
 mid-write (the test_rebuild crash shape — some tables hold the partial
 epoch's rows, the ledger never advanced). A plain read sees the partial
@@ -22,14 +22,7 @@ from basic_data_pipeline_spark.operators import incremental_substring as IS
 from basic_data_pipeline_spark.operators import audio as A
 from basic_data_pipeline_spark.operators import images as I
 from basic_data_pipeline_spark.sources import tables
-from basic_data_pipeline_spark.streaming import (
-    audio_stream,
-    dedup_stream,
-    entity_stream,
-    graph_stream,
-    image_stream,
-    substring_stream,
-)
+from basic_data_pipeline_spark.streaming import dedup_stream
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -87,7 +80,7 @@ def test_substring_read_as_of_completed_ignores_partial_epoch(
     IS.build_substring_index(
         spark, docs.filter(F.col("doc_id") < 150), idx, k=8
     )
-    fn = substring_stream.make_substring_batch_fn(idx, str(tmp_path / "out"))
+    fn = dedup_stream.make_substring_batch_fn(idx, str(tmp_path / "out"))
     fn(docs.filter((F.col("doc_id") >= 150) & (F.col("doc_id") < 300)), 0)
 
     clean = _rows(IS.read_substring_index(spark, idx))
@@ -112,7 +105,7 @@ def test_entity_read_as_of_completed_ignores_partial_epoch(
     IE.build_entity_index(
         spark, _edf(spark, [(1, "acme corp"), (2, "zeta llc")]), idx
     )
-    fn = entity_stream.make_entity_batch_fn(idx, str(tmp_path / "out"))
+    fn = dedup_stream.make_entity_batch_fn(idx, str(tmp_path / "out"))
     fn(_edf(spark, [(10, "acme corporation"), (11, "beta gmbh")]), 0)
 
     clean = _rows(IE.current_entities(spark, idx))
@@ -143,7 +136,7 @@ def test_image_read_as_of_completed_ignores_partial_epoch(
 
     idx = str(tmp_path / "idx")
     II.build_image_index(spark, media(0, 8), idx, max_hamming=8)
-    fn = image_stream.make_image_batch_fn(idx, str(tmp_path / "out"))
+    fn = dedup_stream.make_image_batch_fn(idx, str(tmp_path / "out"))
     fn(media(8, 16), 0)
 
     clean = _rows(II.read_image_index(spark, idx))
@@ -168,7 +161,7 @@ def test_audio_read_as_of_completed_ignores_partial_epoch(
 
     idx = str(tmp_path / "idx")
     IA.build_audio_index(spark, media(0, 8), idx)
-    fn = audio_stream.make_audio_batch_fn(idx, str(tmp_path / "out"))
+    fn = dedup_stream.make_audio_batch_fn(idx, str(tmp_path / "out"))
     fn(media(8, 16), 0)
 
     clean = _rows(IA.read_audio_index(spark, idx))
@@ -190,7 +183,7 @@ def test_graph_read_as_of_completed_ignores_partial_epoch(
 
     idx = str(tmp_path / "idx")
     IG.build_graph_index(spark, edges([(1, 2), (2, 3), (4, 5)]), idx)
-    fn = graph_stream.make_graph_batch_fn(idx, str(tmp_path / "out"))
+    fn = dedup_stream.make_graph_batch_fn(idx, str(tmp_path / "out"))
     fn(edges([(10, 1), (11, 4)]), 0)  # monotone src — the crawl convention
 
     clean_edges = _rows(IG.graph_edges(spark, idx))
@@ -216,7 +209,7 @@ def test_as_of_requires_watermark(spark, tmp_path):
     plain = incremental.read_dedup_index(spark, idx)
     assert _rows(pinned["bands"]) == _rows(plain["bands"])
 
-    from basic_data_pipeline_spark.operators import indexsnap
+    from basic_data_pipeline_spark.operators import indexspec
 
     with pytest.raises(ValueError, match="id watermark"):
-        indexsnap.require_watermark(str(tmp_path / "nowhere"), {})
+        indexspec.completed_cut(str(tmp_path / "nowhere"), {})

@@ -17,13 +17,9 @@ from pyspark.sql import functions as F
 from basic_data_pipeline_spark.operators import incremental
 from basic_data_pipeline_spark.operators import incremental_entity as IE
 from basic_data_pipeline_spark.operators import incremental_substring as IS
+from basic_data_pipeline_spark.operators import indexspec
 from basic_data_pipeline_spark.sources import tables
-from basic_data_pipeline_spark.streaming import (
-    dedup_stream,
-    entity_stream,
-    rebuild,
-    substring_stream,
-)
+from basic_data_pipeline_spark.streaming import dedup_stream, rebuild
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -105,7 +101,7 @@ def test_dedup_crash_rebuild_replay_matches_batch(
             for r in incremental.incremental_dedup(spark, b, idx_b).collect()
         }
     assert got == expected
-    ledger = dedup_stream._read_ledger(idx_s)
+    ledger = indexspec.read_ledger(idx_s)
     assert ledger["stream"]["last_epoch"] == 2
     assert ledger["stream"]["intent"] is None
 
@@ -131,7 +127,7 @@ def test_dedup_rebuild_before_any_completed_epoch_uses_base_watermark(
     assert rep["tables"]["bands"]["rows_after"] == bands_good
     # and the stream resumes
     fn(docs.filter(F.col("doc_id") >= 150), 0)
-    assert dedup_stream._read_ledger(idx)["stream"]["last_epoch"] == 0
+    assert indexspec.read_ledger(idx)["stream"]["last_epoch"] == 0
 
 
 def test_rebuild_without_any_watermark_requires_explicit_cutoff(tmp_path):
@@ -194,7 +190,7 @@ def test_substring_crash_rebuild_replay_matches_batch(
     b1 = small.filter((F.col("doc_id") >= 150) & (F.col("doc_id") < 250))
     b2 = small.filter(F.col("doc_id") >= 250)
 
-    fn = substring_stream.make_substring_batch_fn(idx_s, out)
+    fn = dedup_stream.make_substring_batch_fn(idx_s, out)
     fn(b1, 0)
     grams_good = spark.read.parquet(f"{idx_s}/grams").count()
 
@@ -203,7 +199,7 @@ def test_substring_crash_rebuild_replay_matches_batch(
         with pytest.raises(_Boom):
             fn(b2, 1)
     assert spark.read.parquet(f"{idx_s}/grams").count() > grams_good
-    with pytest.raises(substring_stream.DirtyIndexError):
+    with pytest.raises(dedup_stream.DirtyIndexError):
         fn(b2, 1)
 
     rep = rebuild.rebuild_substring_index(spark, idx_s, out_root=out)
@@ -253,7 +249,7 @@ def test_entity_crash_rebuild_replay_matches_batch(
     IE.build_entity_index(spark, _edf(spark, B0), idx_s)
     IE.build_entity_index(spark, _edf(spark, B0), idx_b)
 
-    fn = entity_stream.make_entity_batch_fn(idx_s, out)
+    fn = dedup_stream.make_entity_batch_fn(idx_s, out)
     fn(_edf(spark, B1), 0)
     grams_good = spark.read.parquet(f"{idx_s}/grams").count()
     aliases_good = spark.read.parquet(f"{idx_s}/aliases").count()
@@ -265,7 +261,7 @@ def test_entity_crash_rebuild_replay_matches_batch(
     # genuinely partial: grams grew AND the bridge's alias row landed
     assert spark.read.parquet(f"{idx_s}/grams").count() > grams_good
     assert spark.read.parquet(f"{idx_s}/aliases").count() > aliases_good
-    with pytest.raises(entity_stream.DirtyIndexError):
+    with pytest.raises(dedup_stream.DirtyIndexError):
         fn(_edf(spark, B2), 1)
 
     rep = rebuild.rebuild_entity_index(spark, idx_s, out_root=out)

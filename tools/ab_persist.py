@@ -18,9 +18,9 @@ Usage:
 where SITESPEC is a comma-joined list of llm_queries._PERSIST_OFF site
 names ('-' = empty set = all persists on, the committed default).
 
-Example:
-    python tools/ab_persist.py sim_topk_methods 7 - topk_docs_spread \
-        topk_docs_spread,topk_sq8_model
+Examples (the live sites are exact_fp_segs and topk_sq8_model):
+    python tools/ab_persist.py dedup_exact_fp 7 - exact_fp_segs
+    python tools/ab_persist.py sim_topk_methods 7 - topk_sq8_model
 """
 
 from __future__ import annotations
