@@ -113,12 +113,15 @@ def track_release(df: DataFrame) -> DataFrame:
 
 
 def release_persisted() -> int:
-    """Unpersist every tracked DataFrame; returns how many were released.
-    Safe to call at any time — a released frame recomputes if re-used."""
+    """Unpersist every tracked DataFrame, and free the checkpoint storage
+    of a tracked `tracked_local_checkpoint` frame; returns how many were
+    released. Safe to call at any time — a released persisted frame
+    recomputes if re-used (a freed checkpoint frame is dead)."""
     n = 0
     for df in _TRACKED:
         try:
             df.unpersist()
+            free_local_checkpoint(df)
             n += 1
         except Exception:
             pass  # session already stopped; nothing to free

@@ -48,6 +48,7 @@ from basic_data_pipeline_spark.functions.normalize import (
     normalize_string_value,
     pick_primary_key,
 )
+from basic_data_pipeline_spark.streaming import swapstore as _swapstore
 
 # Debezium JSON envelope with converter schemas disabled
 # (docker-compose.yml:70-71 → bare {"payload": ...}); before/after kept as
@@ -343,7 +344,10 @@ class SinkTable:
     def __post_init__(self) -> None:
         # A restarted process starts with a fresh SinkTable but the data
         # directory survives — detect it so evolution/delete/replay logic
-        # treats the table as existing, not new.
+        # treats the table as existing, not new. A crash inside an
+        # overwrite's swap window leaves the only complete copy in the
+        # swap temp: recover it first.
+        _swapstore.recover(self.location)
         if os.path.isdir(self.location):
             self.created = True
 
@@ -376,7 +380,6 @@ def apply_cdc_batch(
     sink_root: str,
     mode: str = "append",
     sinks: dict[str, SinkTable] | None = None,
-    write_dlq: bool = True,
     dedup_replays: bool = False,
     sink_factory: Callable[[str], SinkTable] | None = None,
 ) -> tuple[dict[str, SinkTable], DataFrame]:
@@ -605,7 +608,7 @@ def apply_cdc_batch(
             if new_wm is not None:
                 sink.applied_offsets = new_wm
 
-    if write_dlq and dlq_all.take(1):
+    if dlq_all.take(1):
         dlq_all.write.mode("append").parquet(os.path.join(sink_root, "_dlq"))
     events.unpersist()
     return sinks, dlq_all

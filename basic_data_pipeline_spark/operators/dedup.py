@@ -34,7 +34,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from basic_data_pipeline_spark.caching import track_release, tracked_persist
+from basic_data_pipeline_spark.caching import (
+    free_local_checkpoint,
+    track_release,
+    tracked_local_checkpoint,
+    tracked_persist,
+)
 from basic_data_pipeline_spark.partitioning import spread
 
 N_HASHES = 16
@@ -480,81 +485,88 @@ def duplicate_clusters(
         .withColumn("cluster", F.col("doc_id"))
         .persist()
     )
-    changed = 0
-    ckpted = False  # was the live `labels` frame cut via localCheckpoint?
-    for it in range(max_iters):
-        neighbor_min = (
-            edges.join(
-                labels.select(
-                    F.col("doc_id").alias("id_b"),
-                    F.col("cluster").alias("nb_cluster"),
-                ),
-                "id_b",
+    converged = False
+    try:
+        for it in range(max_iters):
+            neighbor_min = (
+                edges.join(
+                    labels.select(
+                        F.col("doc_id").alias("id_b"),
+                        F.col("cluster").alias("nb_cluster"),
+                    ),
+                    "id_b",
+                )
+                .groupBy(F.col("id_a").alias("doc_id"))
+                .agg(F.min("nb_cluster").alias("nb_min"))
             )
-            .groupBy(F.col("id_a").alias("doc_id"))
-            .agg(F.min("nb_cluster").alias("nb_min"))
-        )
-        hop = labels.join(neighbor_min, "doc_id", "left").select(
-            "doc_id",
-            F.col("cluster").alias("_old"),
-            F.least(
-                F.col("cluster"), F.coalesce(F.col("nb_min"), F.col("cluster"))
-            ).alias("cluster"),
-        )
-        # pointer jump (path halving): follow the label one more step —
-        # label values are doc ids, so looking them up in the same frame
-        # yields label(label(v)); min-labels only ever decrease, so
-        # taking the least is safe and doubles propagation reach.
-        parent = hop.select(
-            F.col("doc_id").alias("cluster"), F.col("cluster").alias("_gp")
-        )
-        # the changed flag rides in the materialized frame (labels only
-        # ever decrease, so changed ⇔ new < old) and is tested with one
-        # cached filter — not a separate join-shaped action per round
-        # (r11: at label-frame sizes the job floor dominated the wall)
-        new_labels = hop.join(parent, "cluster", "left").select(
-            "doc_id",
-            F.least(
-                F.col("cluster"), F.coalesce(F.col("_gp"), F.col("cluster"))
-            ).alias("cluster"),
-            (
+            hop = labels.join(neighbor_min, "doc_id", "left").select(
+                "doc_id",
+                F.col("cluster").alias("_old"),
+                F.least(
+                    F.col("cluster"),
+                    F.coalesce(F.col("nb_min"), F.col("cluster")),
+                ).alias("cluster"),
+            )
+            # pointer jump (path halving): follow the label one more step —
+            # label values are doc ids, so looking them up in the same frame
+            # yields label(label(v)); min-labels only ever decrease, so
+            # taking the least is safe and doubles propagation reach.
+            parent = hop.select(
+                F.col("doc_id").alias("cluster"), F.col("cluster").alias("_gp")
+            )
+            # the changed flag rides in the materialized frame (labels only
+            # ever decrease, so changed ⇔ new < old) and is tested with one
+            # cached filter — not a separate join-shaped action per round
+            # (r11: at label-frame sizes the job floor dominated the wall)
+            new_labels = hop.join(parent, "cluster", "left").select(
+                "doc_id",
                 F.least(
                     F.col("cluster"),
                     F.coalesce(F.col("_gp"), F.col("cluster")),
-                )
-                < F.col("_old")
-            ).alias("_chg"),
-        )
-        ckpted = (it + 1) % checkpoint_every == 0
-        if ckpted:
-            # cut the lineage: without this, each iteration's plan nests
-            # the previous one's and planning cost grows linearly
-            new_labels = new_labels.localCheckpoint(eager=True)
-        else:
-            new_labels = new_labels.persist()
-        changed = 0 if new_labels.where(F.col("_chg")).isEmpty() else 1
-        labels.unpersist()
-        # keep the materialized HANDLE (unpersist needs it); every loop
-        # consumer selects its columns explicitly, so _chg rides along
-        labels = new_labels
-        if changed == 0:
-            break
-    edges.unpersist()
-    if changed != 0:
+                ).alias("cluster"),
+                (
+                    F.least(
+                        F.col("cluster"),
+                        F.coalesce(F.col("_gp"), F.col("cluster")),
+                    )
+                    < F.col("_old")
+                ).alias("_chg"),
+            )
+            if (it + 1) % checkpoint_every == 0:
+                # cut the lineage: without this, each iteration's plan
+                # nests the previous one's and planning cost grows
+                # linearly
+                new_labels = tracked_local_checkpoint(new_labels)
+            else:
+                new_labels = new_labels.persist()
+            converged = new_labels.where(F.col("_chg")).isEmpty()
+            _drop(labels)
+            # keep the materialized HANDLE (freeing needs it); every loop
+            # consumer selects its columns explicitly, so _chg rides along
+            labels = new_labels
+            if converged:
+                break
+    finally:
+        edges.unpersist()
+        if not converged:
+            _drop(labels)
+    if not converged:
         raise RuntimeError(
             f"duplicate_clusters did not converge in {max_iters} iterations"
             " — raise max_iters (component diameter exceeds 2^max_iters)"
         )
     out = labels.select("doc_id", "cluster")
-    # hand ownership to the caller's action; release on next tracked cycle
+    # hand ownership to the caller's action; release on next tracked cycle.
+    # `out` is a projection, so releasing it frees nothing of labels:
+    # register the labels handle too (persisted or checkpointed)
     _ = tracked_persist(out)
-    if not ckpted:
-        # the final round materialized via persist() (checkpoint_every
-        # > 1): its cached blocks are only releasable through the
-        # labels handle itself, so register it too (r11 ADVICE — `out`
-        # is a projection, unpersisting it frees nothing of labels)
-        track_release(labels)
+    track_release(labels)
     return out
+
+
+def _drop(df: DataFrame) -> None:
+    df.unpersist()
+    free_local_checkpoint(df)
 
 
 def cluster_survivors(

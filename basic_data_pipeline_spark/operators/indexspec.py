@@ -33,7 +33,6 @@ after the mutator returns.
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -92,11 +91,7 @@ class Table:
 
 
 def read_ledger(index_path: str) -> dict:
-    try:
-        with open(os.path.join(index_path, LEDGER)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return {}
+    return swapstore.read_json(os.path.join(index_path, LEDGER), {})
 
 
 def completed_cut(index_path: str, meta: dict) -> Cut:
@@ -155,10 +150,8 @@ class IndexSpec:
         """_meta.json. A legacy meta without ``id_col`` (dedup indexes
         predate recording it) gets it back from the files: the one
         column of the first table outside its bucket key."""
-        try:
-            with open(os.path.join(index_path, "_meta.json")) as f:
-                meta = json.load(f)
-        except FileNotFoundError:
+        meta = swapstore.read_json(os.path.join(index_path, "_meta.json"))
+        if meta is None:
             raise RuntimeError(
                 f"{self.what} at {index_path!r} has no _meta.json — either "
                 "the path is not an index, or it predates the bucketed "
@@ -166,7 +159,7 @@ class IndexSpec:
                 f"Rebuild it with {self.build}(); appending to an "
                 "unbucketed layout would silently lose the zero-shuffle "
                 "join property."
-            ) from None
+            )
         if "id_col" not in meta and any(ID in t.bucket for t in self.tables):
             first = self.tables[0]
             path = self.path(index_path, first.name)
@@ -177,9 +170,7 @@ class IndexSpec:
 
     @staticmethod
     def write_meta(index_path: str, meta: dict) -> None:
-        os.makedirs(index_path, exist_ok=True)
-        with open(os.path.join(index_path, "_meta.json"), "w") as f:
-            json.dump(meta, f)
+        swapstore.replace_json(os.path.join(index_path, "_meta.json"), meta)
 
     def layout(self, name: str, meta: dict) -> tuple[list[str], list[str] | None]:
         """(bucket columns, sort columns) of one table, ``ID`` resolved."""

@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import glob
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -27,23 +26,16 @@ def atomic_overwrite(
     sort_cols: list[str] | None = None,
     n_parts: int | None = None,
 ) -> None:
-    """Replace a parquet directory with `df` via write-to-temp + rename.
-
-    The input plan may READ the same directory it replaces; a
-    cache()-then-overwrite is NOT fault-tolerant there — a lost cached
-    block during the overwrite would recompute from the half-deleted
-    directory, corrupting or losing data. Writing to a sibling temp dir
-    and renaming over the target never has both the source and a partial
-    destination live at once. The rename swap is atomic on a real
-    filesystem; object stores would use a commit protocol instead."""
-    tmp_loc = f"{location}.tmp-swap"
+    """Replace a parquet directory with `df` through
+    ``swapstore.replace_dir`` (the swap and recovery contract is stated
+    there). The input plan may READ the same directory it replaces: a
+    cache()-then-overwrite would recompute a lost cached block from the
+    half-deleted directory, while the temp swap never has both the source
+    and a partial destination live at once."""
     out = df.repartition(n_parts) if n_parts else df
     if sort_cols:
         out = out.sortWithinPartitions(*sort_cols)
-    out.write.mode("overwrite").parquet(tmp_loc)
-    if os.path.exists(location):
-        shutil.rmtree(location)
-    os.rename(tmp_loc, location)
+    _swapstore.replace_dir(location, out.write.mode("overwrite").parquet)
 
 
 def parquet_layout(path: str) -> dict:
@@ -101,6 +93,37 @@ def assert_clean_stream_ledger(index_path: str) -> None:
             )
 
 
+def rewrite_table(
+    spark: SparkSession,
+    out: DataFrame,
+    path: str,
+    table: str,
+    bucket_cols: list[str] | None = None,
+    n_buckets: int = 0,
+    sort_cols: list[str] | None = None,
+) -> None:
+    """Replace the files of catalog table ``table`` at ``path`` with
+    ``out`` through ``swapstore.replace_dir``, bucketed when
+    ``bucket_cols`` is given (bucketing lives in the catalog, so the
+    writer registers a metadata-only temp table over the swap temp), and
+    refresh the cached views of the path and the table."""
+    from basic_data_pipeline_spark.sources import tables as _tables
+
+    tmp_table = table + "_swap"
+    spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
+    if bucket_cols:
+        _swapstore.replace_dir(path, lambda tmp: _tables.write_bucketed(
+            out, tmp_table, bucket_cols, n_buckets,
+            sort_cols=sort_cols, path=tmp,
+        ))
+    else:
+        _swapstore.replace_dir(path, out.write.mode("overwrite").parquet)
+    spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
+    spark.catalog.refreshByPath(path)
+    if spark.catalog.tableExists(table):
+        spark.sql(f"REFRESH TABLE {table}")
+
+
 @_swapstore.leased("src_path", owner="batch:maintenance.compact_bucketed")
 def compact_bucketed(
     spark: SparkSession,
@@ -125,37 +148,19 @@ def compact_bucketed(
     to ``n_buckets`` on the bucket key first, so each task owns one
     bucket and writes ONE file). ``fold`` optionally transforms the
     frame before the rewrite (the df delta log folds to one row per
-    term). A leftover ``.rebuild`` temp from a crashed compaction is
-    finished or discarded on entry (the rebuild-swap contract).
+    term). The swap goes through ``swapstore.replace_dir``; a temp left
+    by a crashed compaction is recovered on entry.
     Returns {rows, files_before, files_after}."""
     from pyspark.sql import functions as F
 
-    from basic_data_pipeline_spark.sources import tables as _tables
-
-    tmp_path = src_path + ".rebuild"
-    if os.path.exists(tmp_path):
-        if not os.path.exists(src_path) and os.path.exists(
-            os.path.join(tmp_path, "_SUCCESS")
-        ):
-            os.rename(tmp_path, src_path)
-        else:
-            shutil.rmtree(tmp_path)
+    _swapstore.recover(src_path)
     files_before = parquet_layout(src_path)["n_files"]
     df = spark.read.parquet(src_path)
     out = fold(df) if fold is not None else df
     out = out.repartition(n_buckets, *[F.col(c) for c in bucket_cols])
-    tmp_table = table + "_cp"
-    spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
-    _tables.write_bucketed(
-        out, tmp_table, bucket_cols, n_buckets,
-        sort_cols=sort_cols, path=tmp_path,
+    rewrite_table(
+        spark, out, src_path, table, bucket_cols, n_buckets, sort_cols
     )
-    shutil.rmtree(src_path)
-    os.rename(tmp_path, src_path)
-    spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
-    spark.catalog.refreshByPath(src_path)
-    if spark.catalog.tableExists(table):
-        spark.sql(f"REFRESH TABLE {table}")
     return {
         "rows": spark.read.parquet(src_path).count(),
         "files_before": files_before,

@@ -187,7 +187,6 @@ def ann_topk_lsh(
     broadcast_vectors: bool | None = None,
     broadcast_vectors_max_bytes: int = 512 << 20,
     rerank_factor: int = 4,
-    probe_walls: dict | None = None,
 ) -> DataFrame:
     """(query_id, neighbor_id, rank, cos): approximate top-k via
     MULTI-TABLE random-hyperplane LSH — candidates are the union over
@@ -253,37 +252,7 @@ def ann_topk_lsh(
        candidate-bounded — and window the final top-k on exact cosine.
        The arrays are projected away before the top-k window, so no
        exchange anywhere carries two raw vectors on a pair row
-       (plan-asserted in tests/test_ann_width.py).
-
-    ``probe_walls``: measurement hook (tools/probe_ann_stages.py) — when
-    a dict is passed, each internal stage (bucketing / candidates /
-    shortlist) is eagerly materialized through the noop sink and its
-    wall recorded under that key, so scale probes can attribute a
-    tier's growth to a stage instead of reading one end-to-end number
-    (r9 verdict watch item #1: the 256× last-decade per-4× of 6.9
-    needed slicing). Production callers leave it None — no extra
-    actions, identical plans."""
-
-    import time as _time
-
-    def _stage_wall(stage: str, df: DataFrame, persisted: bool = False):
-        """Probe hook: materialize ``df`` through the noop sink and record
-        its wall. Frames not already persisted are tracked_persist'ed
-        FIRST so the noop write populates the cache and every LATER
-        stage's wall measures only its own marginal work — without the
-        persist, the shortlist wall re-runs the candidate join and the
-        probe's derived 'rerank = total − staged' double-counts (r10
-        ADVICE). Blocks release via the standard tracked-persist scope
-        (registry @query / the probe's release_persisted call). Returns
-        the (possibly persisted) frame — callers must keep using it."""
-        if probe_walls is None:
-            return df
-        if not persisted:
-            df = tracked_persist(df)
-        t0 = _time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        probe_walls[stage] = round(_time.perf_counter() - t0, 2)
-        return df
+       (plan-asserted in tests/test_ann_width.py)."""
 
     n_vec = None
     if n_planes is None:
@@ -321,7 +290,6 @@ def ann_topk_lsh(
         )
     )
     buckets = tracked_persist(buckets)
-    _stage_wall("bucketing", buckets, persisted=True)
     if max_bucket_df is not None:
         # candidate-side cut only: overfull cells (exact-duplicate
         # pile-ups resolution cannot split) leave the pair join; one
@@ -346,7 +314,6 @@ def ann_topk_lsh(
         )
         .distinct()
     )
-    cand = _stage_wall("candidates", cand)
     # Norms precomputed ONCE per vector (persisted): the per-pair work
     # drops to a single dot fold + one divide — 3× fewer folds than a
     # naive cosine(q, c) per candidate pair.
@@ -448,7 +415,6 @@ def ann_topk_lsh(
         .filter(F.col("_ar") <= k * rerank_factor)
         .select("query_id", "neighbor_id")
     )
-    shortlist = _stage_wall("shortlist", shortlist)
     return (
         shortlist.join(qside, "query_id")
         .join(nside, "neighbor_id")

@@ -30,7 +30,6 @@ from __future__ import annotations
 
 import glob
 import hashlib
-import json
 import os
 import shutil
 from collections.abc import Callable
@@ -40,6 +39,7 @@ from pyspark.sql import functions as F
 
 from basic_data_pipeline_spark.caching import release_persisted
 from basic_data_pipeline_spark.operators import similarity
+from basic_data_pipeline_spark.streaming import swapstore
 
 _EPOCHS = "assigned_epochs"
 _COMPACT_LEDGER = "_compacted.json"
@@ -72,11 +72,9 @@ def _epoch_dir(index_path: str, run_id: str, epoch: int) -> str:
 def _folded_epochs(index_path: str) -> dict[str, set[int]]:
     """Per-run folded-epoch sets. Legacy ledgers (a bare list from before
     run namespacing) read as run 'default'."""
-    try:
-        with open(os.path.join(index_path, _COMPACT_LEDGER)) as f:
-            folded = json.load(f)["folded"]
-    except FileNotFoundError:
-        return {}
+    folded = swapstore.read_json(
+        os.path.join(index_path, _COMPACT_LEDGER), {"folded": {}}
+    )["folded"]
     if isinstance(folded, list):
         return {"default": set(folded)}
     return {run: set(v) for run, v in folded.items()}
@@ -98,11 +96,7 @@ def _epoch_meta(index_path: str) -> dict:
     written-epoch watermark, advanced at WRITE time (not fold time), so
     a same-path checkpoint reset is caught even while all deltas are
     still unfolded."""
-    try:
-        with open(os.path.join(index_path, _EPOCH_META)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return {}
+    return swapstore.read_json(os.path.join(index_path, _EPOCH_META), {})
 
 
 def _advance_epoch_meta(
@@ -110,10 +104,7 @@ def _advance_epoch_meta(
 ) -> None:
     meta = _epoch_meta(index_path)
     meta[run_id] = {"max_epoch": epoch, "max_fp": fp}
-    tmp = os.path.join(index_path, _EPOCH_META + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(index_path, _EPOCH_META))
+    swapstore.replace_json(os.path.join(index_path, _EPOCH_META), meta)
 
 
 def _batch_fingerprint(batch_df: DataFrame) -> list:
@@ -129,21 +120,8 @@ def _batch_fingerprint(batch_df: DataFrame) -> list:
     return [row["n"], row["x"]]
 
 
-def _recover_base_swap(index_path: str) -> None:
-    """Finish or discard an interrupted base swap: a crash in
-    compact_epochs' rmtree(base)→rename window leaves NO ``assigned/``
-    and a COMPLETE ``assigned.tmp-swap`` (the temp is fully written —
-    carries _SUCCESS — before the base is ever removed). Promote that
-    temp; any other leftover temp is a partial write superseded by the
-    still-present base, so delete it."""
-    base = os.path.join(index_path, "assigned")
-    tmp = base + ".tmp-swap"
-    if not os.path.exists(tmp):
-        return
-    if not os.path.exists(base) and os.path.exists(os.path.join(tmp, "_SUCCESS")):
-        os.rename(tmp, base)
-    else:
-        shutil.rmtree(tmp)
+def _base(index_path: str) -> str:
+    return os.path.join(index_path, "assigned")
 
 
 def make_ann_batch_fn(
@@ -172,8 +150,6 @@ def make_ann_batch_fn(
     Takes the single-writer lease on the index dir (r9,
     swapstore.acquire_lease) — a double-launched second writer raises
     WriterLeaseHeld instead of racing the delta/compaction protocol."""
-    from basic_data_pipeline_spark.streaming import swapstore
-
     lease_token = swapstore.acquire_lease(
         index_path, owner=f"ann-stream:{run_id}"
     )
@@ -250,8 +226,8 @@ def _on_disk_epochs(index_path: str) -> dict[str, dict[int, str]]:
 
 def live_assigned(spark: SparkSession, index_path: str) -> DataFrame:
     """base inverted lists ∪ un-compacted epoch deltas, one frame."""
-    _recover_base_swap(index_path)
-    base = spark.read.parquet(os.path.join(index_path, "assigned")).select(
+    swapstore.recover(_base(index_path))
+    base = spark.read.parquet(_base(index_path)).select(
         "vec_id", "embedding", "cell"
     )
     dirs = sorted(
@@ -301,13 +277,10 @@ def compact_epochs(spark: SparkSession, index_path: str) -> int:
     an already-swapped base simply re-deduplicates, and the ledger +
     delta-dir cleanup happen strictly after the swap. The rebuild costs
     one pass over the index — that is what compaction IS; the streaming
-    hot path never pays it (appends stay per-epoch overwrites).
-
-    The one window the swap itself leaves — a crash AFTER
-    rmtree(assigned) but BEFORE the rename — is closed by
-    ``_recover_base_swap`` (run here and on every read): the complete
-    temp is promoted into place, so the rerun converges from there."""
-    _recover_base_swap(index_path)
+    hot path never pays it (appends stay per-epoch overwrites). The swap
+    and its recovery (run here and on every read) are
+    ``swapstore.replace_dir``/``recover``."""
+    swapstore.recover(_base(index_path))
     root = _epochs_root(index_path)
     if not os.path.isdir(root):
         return 0
@@ -324,21 +297,18 @@ def compact_epochs(spark: SparkSession, index_path: str) -> int:
     }
     if not todo:
         return 0
-    base_path = os.path.join(index_path, "assigned")
     merged = live_assigned(spark, index_path).dropDuplicates(["vec_id"])
-    tmp_path = base_path + ".tmp-swap"
-    merged.write.mode("overwrite").partitionBy("cell").parquet(tmp_path)
-    if os.path.exists(base_path):
-        shutil.rmtree(base_path)
-    os.rename(tmp_path, base_path)
+    swapstore.replace_dir(
+        _base(index_path),
+        merged.write.mode("overwrite").partitionBy("cell").parquet,
+    )
     new_folded = {
         run: sorted(folded.get(run, set()) | set(todo.get(run, [])))
         for run in set(folded) | set(todo)
     }
-    tmp = os.path.join(index_path, _COMPACT_LEDGER + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump({"folded": new_folded}, f)
-    os.replace(tmp, os.path.join(index_path, _COMPACT_LEDGER))
+    swapstore.replace_json(
+        os.path.join(index_path, _COMPACT_LEDGER), {"folded": new_folded}
+    )
     for run, epochs in todo.items():
         for e in epochs:
             shutil.rmtree(on_disk[run][e])

@@ -32,7 +32,6 @@ index _meta.json) — no data-plane cost at any corpus size.
 
 from __future__ import annotations
 
-import json
 import os
 from collections.abc import Callable
 
@@ -65,11 +64,7 @@ def _ledger_path(index_path: str) -> str:
 
 
 def _write_ledger(index_path: str, ledger: dict) -> None:
-    os.makedirs(index_path, exist_ok=True)
-    tmp = _ledger_path(index_path) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(ledger, f)
-    os.replace(tmp, _ledger_path(index_path))
+    swapstore.replace_json(_ledger_path(index_path), ledger)
 
 
 def make_guarded_batch_fn(

@@ -14,13 +14,12 @@ the last completed epoch, and the restarted stream replays the crashed
 epoch against it (its checkpoint never committed), restoring stream ==
 batch equivalence.
 
-Each rewrite lands in ``<table>.rebuild`` first (parquet _SUCCESS marks
-completeness) and is swapped in with the same rmtree→rename pattern as
-ANN compaction; ``_recover_swap`` on entry closes the crash window of
-the swap itself, so re-running a crashed REBUILD also converges. The
-intent marker is cleared only after every table swapped; stale epoch
-outputs (> last completed epoch) under ``out_root`` are removed so the
-replayed epoch rewrites them from scratch.
+Each table is replaced through ``swapstore.replace_dir`` and recovered
+on entry (the swap and recovery contract is stated there), so re-running
+a crashed REBUILD also converges. The intent marker is cleared only
+after every table swapped; stale epoch outputs (> last completed epoch)
+under ``out_root`` are removed so the replayed epoch rewrites them from
+scratch.
 """
 
 from __future__ import annotations
@@ -33,8 +32,7 @@ import warnings
 
 from pyspark.sql import SparkSession
 
-from basic_data_pipeline_spark.operators import indexspec
-from basic_data_pipeline_spark.sources import tables
+from basic_data_pipeline_spark.operators import indexspec, maintenance
 from basic_data_pipeline_spark.streaming import swapstore
 from basic_data_pipeline_spark.streaming.dedup_stream import _write_ledger
 
@@ -104,22 +102,6 @@ def _rebuild_guard(fn):
     return wrapped
 
 
-def _recover_swap(path: str) -> None:
-    """Finish or discard an interrupted table swap (same contract as
-    ann_stream._recover_base_swap): a COMPLETE ``.rebuild`` temp next to
-    a missing original is promoted; any other leftover temp is a partial
-    rewrite superseded by the still-present original — deleted."""
-    tmp = path + ".rebuild"
-    if not os.path.exists(tmp):
-        return
-    if not os.path.exists(path) and os.path.exists(
-        os.path.join(tmp, "_SUCCESS")
-    ):
-        os.rename(tmp, path)
-    else:
-        shutil.rmtree(tmp)
-
-
 def _resolve_cutoff(state: dict, meta: dict, explicit):
     """The id watermark to keep: explicit > ledger (completed epochs) >
     build-time base max. Raises when none exists (legacy index built
@@ -150,7 +132,7 @@ def _rewrite(
     bucket shuffle for a bucketed table — the price of recovery, never
     paid on the hot path."""
     src = spec.path(index_path, name)
-    _recover_swap(src)
+    swapstore.recover(src)
     # mergeSchema: a legacy side log upgraded in place holds files with
     # and without its tag column; the keep predicate needs the union
     df = spark.read.option("mergeSchema", "true").parquet(src)
@@ -163,26 +145,11 @@ def _rewrite(
             "duplicates (harmless for resolution: reads are distinct-ed)",
             stacklevel=3,
         )
-    tmp = src + ".rebuild"
-    shutil.rmtree(tmp, ignore_errors=True)
-    table = spec.table_name(index_path, name)
-    if spec.table(name).bucket:
-        bucket, sort = spec.layout(name, meta)
-        spark.sql(f"DROP TABLE IF EXISTS {table}_rb")
-        tables.write_bucketed(
-            keep, table + "_rb", bucket, meta["n_buckets"],
-            sort_cols=sort, path=tmp,
-        )
-    else:
-        keep.coalesce(1).write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(src)
-    os.rename(tmp, src)
-    # the temp registration is metadata-only (external table); its files
-    # now ARE the index
-    spark.sql(f"DROP TABLE IF EXISTS {table}_rb")
-    spark.catalog.refreshByPath(src)
-    if spark.catalog.tableExists(table):
-        spark.sql(f"REFRESH TABLE {table}")
+    bucket, sort = spec.layout(name, meta)
+    maintenance.rewrite_table(
+        spark, keep if bucket else keep.coalesce(1), src,
+        spec.table_name(index_path, name), bucket, meta["n_buckets"], sort,
+    )
     return {"rows_before": before, "rows_after": spark.read.parquet(src).count()}
 
 

@@ -13,10 +13,11 @@ batch slicing produces bit-identical sums to the one-shot rollup
 (asserted in tests/test_rollup_stream.py).
 
 Delivery semantics come from the shared swap store
-(streaming/swapstore.py): the epoch watermark rides inside the rollup
-directory, replays are skipped, and the two interrupted-swap windows
-recover on the next batch — the same guarantees as the streaming SCD2
-history, via the same code path.
+(streaming/swapstore.py, which states the swap and recovery contract):
+the epoch watermark is the swap's completion marker inside the rollup
+directory, replays are skipped, and an interrupted swap recovers on the
+next batch — the same guarantees as the streaming SCD2 history, via the
+same code path.
 
 At 100 TB the rollup itself can grow wide (many keys × hours); the
 rewrite-whole-rollup swap then gives way to partitioning the rollup by
@@ -28,17 +29,13 @@ partition directories, each micro-batch merges ONLY its touched dates
 (rewrite cost ∝ touched-dates' rollup rows, never the whole history),
 and exactly-once holds per PARTITION — every date directory carries its
 own epoch watermark inside the swapped data, so a crash between two
-date swaps replays only the dates that didn't complete. Swap temp dirs
-are underscore-prefixed (``_swap-date=...``) so Spark's partition
-discovery can never misparse an in-flight swap as data.
+date swaps replays only the dates that didn't complete.
 """
 
 from __future__ import annotations
 
 import glob
-import json
 import os
-import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -80,7 +77,7 @@ def make_rollup_batch_fn(
 
     def fn(batch_df: DataFrame, epoch_id: int) -> None:
         swapstore.renew_lease(rollup_path, lease_token)
-        swapstore.recover(rollup_path)
+        swapstore.recover(rollup_path, _META)
         if epoch_id <= swapstore.read_watermark(rollup_path, tag, _META):
             return  # replay of completed work
         if batch_df.isEmpty():
@@ -104,26 +101,12 @@ def _date_dir(root: str, d: str) -> str:
     return os.path.join(root, f"date={d}")
 
 
-def _swap_dir(root: str, d: str) -> str:
-    return os.path.join(root, f"_swap-date={d}")
-
-
 def recover_partitions(root: str) -> None:
-    """Finish or roll back interrupted per-date swaps: a COMPLETE
-    ``_swap-date=D`` temp dir replaces a MISSING live dir (crash in the
-    rmtree→rename window) and is discarded otherwise — when the live dir
-    still exists, or when the temp's write never finished (a crash mid
-    ``merged.write`` on a date's first-ever write leaves a temp holding
-    only Spark _temporary files; promoting it would wedge the partition
-    behind an unreadable dir). Completeness is the ``_rollup_part_meta``
-    marker, written strictly AFTER the parquet commit."""
-    for tmp in glob.glob(os.path.join(root, "_swap-date=*")):
-        live = _date_dir(root, os.path.basename(tmp)[len("_swap-date="):])
-        complete = os.path.exists(os.path.join(tmp, _PART_META))
-        if os.path.exists(live) or not complete:
-            shutil.rmtree(tmp)
-        else:
-            os.rename(tmp, live)
+    """Recover every interrupted per-date swap (swapstore.recover, with
+    the date's watermark as the marker)."""
+    for tmp in glob.glob(swapstore.tmp_path(_date_dir(root, "*"))):
+        d = tmp.rsplit("date=", 1)[1]
+        swapstore.recover(_date_dir(root, d), _PART_META)
 
 
 def make_partitioned_rollup_batch_fn(
@@ -186,13 +169,11 @@ def make_partitioned_rollup_batch_fn(
             merged = merge_rollups(
                 old, partial.filter(F.col("_d") == F.lit(d)).drop("_d")
             )
-            tmp = _swap_dir(rollup_root, d)
-            merged.write.mode("overwrite").parquet(tmp)
-            with open(os.path.join(tmp, _PART_META), "w") as f:
-                json.dump({tag: epoch_id}, f)
-            if os.path.exists(dd):
-                shutil.rmtree(dd)
-            os.rename(tmp, dd)
+            swapstore.replace_dir(
+                dd,
+                merged.write.mode("overwrite").parquet,
+                meta=(_PART_META, {tag: epoch_id}),
+            )
         swapstore.advance_watermark(rollup_root, epoch_id, tag, _META)
 
     return swapstore.attach_release(fn, rollup_root, lease_token)

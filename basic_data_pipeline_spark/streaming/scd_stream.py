@@ -2,9 +2,8 @@
 
 Continuously folds a CDC change stream into the persisted SCD2 history
 (operators/scd.py): each micro-batch closes touched keys' open rows and
-appends the batch's versions, then the new history REPLACES the old via
-a write-to-temp + rename swap (the `atomic_overwrite` pattern,
-operators/maintenance.py:21-43). One code path, driven either by the
+appends the batch's versions, then the new history REPLACES the old
+through ``swapstore.swap_in``. One code path, driven either by the
 streaming engine (`scd2_files`, file source standing in for Kafka as in
 ingest.py) or by explicit micro-batches in tests (`run_scd2_batches`).
 
@@ -13,19 +12,9 @@ re-applying a batch to a history that already contains it is NOT
 idempotent (the same change would close its own version and insert a
 duplicate). Unlike the dedup stream's append-only index (which needs a
 ledger file + intent marker), the swap gives exactly-once for free: the
-epoch watermark is written INSIDE the new history directory before the
-rename, so the data and its epoch move atomically —
-
-* replayed epoch ≤ the history's own watermark → skipped outright;
-* crash BEFORE the rename → old history + old watermark intact, the
-  replay re-applies the batch against unmodified state (correct);
-* crash BETWEEN rmtree and rename (the one non-atomic window) → the
-  completed temp dir is recovered by `_recover` on the next batch;
-* a leftover temp dir NEXT TO a live history is an incomplete write —
-  discarded, the replay re-applies from the authoritative old history.
-
-Spark readers ignore underscore-prefixed files, so the `_scd2_meta.json`
-watermark rides inside the data directory without affecting scans. The
+epoch watermark is the swap's completion marker, so the data and its
+epoch move together and a replayed epoch at or below it is skipped
+(streaming/swapstore.py states the swap and recovery contract). The
 history rewrite cost is proportional to the history size, not the batch
 — the right trade for a STREAMING dimension table (dimensions are small
 relative to facts); a 100 TB fact-scale history would instead partition
@@ -62,7 +51,7 @@ def make_scd2_batch_fn(
 
     def fn(batch_df: DataFrame, epoch_id: int) -> None:
         swapstore.renew_lease(history_path, lease_token)
-        swapstore.recover(history_path)
+        swapstore.recover(history_path, _META)
         if epoch_id <= swapstore.read_watermark(history_path, tag, _META):
             return  # full replay of completed work — drop it
 

@@ -1,24 +1,38 @@
-"""Atomically-swapped parquet state store with an epoch watermark.
+"""Crash-safe replacement of a directory or a JSON record on the local
+filesystem, and the single-writer lease that guards every writer.
 
-The shared machinery for foreachBatch sinks whose state must be
-REPLACED (not appended) each micro-batch — SCD2 history
-(streaming/scd_stream.py) and the continuous rollup
-(streaming/rollup_stream.py). foreachBatch is at-least-once; replaying a
-batch against state that already contains it would double-apply, so:
+Every rewrite-in-place in the package goes through three functions:
 
-* the epoch watermark is written INSIDE the new state directory before
-  the rename — data and epoch move atomically;
-* replayed epoch ≤ the stored watermark → the batch is skipped outright;
-* crash BEFORE the rename → old state + old watermark intact; the
-  replay re-applies against unmodified state (correct);
-* crash BETWEEN rmtree and rename (the one non-atomic window) → the
-  completed temp dir is recovered by `recover` on the next batch;
-* a leftover temp dir NEXT TO live state is an incomplete write —
-  discarded; the replay re-applies from the authoritative old state.
+* ``replace_dir(path, write, meta=None)`` — ``write(tmp)`` fills ONE
+  sibling temp dir, then the temp's completion marker is written LAST:
+  the caller's watermark JSON when the swap carries one
+  (``meta=(name, record)`` — the SCD2 history, the rollup and each
+  rollup date partition), otherwise the ``_SUCCESS`` file Spark's job
+  commit writes. Only then is the live dir removed and the temp renamed
+  over it.
+* ``recover(path, marker)`` — run before reading or rewriting ``path``,
+  with the marker the swap writes. A temp is PROMOTED only when the live
+  dir is missing AND the temp holds its marker: the crash hit the one
+  non-atomic window, between the rmtree and the rename, and the temp is
+  the only complete copy. Any other leftover temp is an incomplete write
+  and is deleted — the live dir (or, for a first-ever write, nothing)
+  stays authoritative, and the caller's replay re-applies against it.
+  ``replace_dir`` recovers on entry, so a rewrite can never write over
+  the only complete copy.
+* ``replace_json(path, record)`` — write a temp file, ``os.replace`` it
+  over the record: a reader (``read_json``) sees the old or the new
+  record, never a torn one (ledgers, watermarks, index ``_meta.json``).
 
-Spark readers ignore underscore-prefixed files, so the meta JSON rides
-inside the data directory without affecting scans. The swap is atomic on
-a real filesystem; object stores would use a commit protocol instead.
+With a watermark as the marker, data and epoch move together, which is
+what makes a foreachBatch swap exactly-once: a replayed epoch at or
+below the stored watermark is skipped; a crash before the rename leaves
+the old state and the old watermark; a crash inside the window is
+finished by ``recover``. Temps are named ``_swap-<name>`` next to the
+live path (``tmp_path``): Spark skips underscore-prefixed paths, so a
+temp inside an index dir or a partitioned root is never read as data or
+as a partition value, and marker JSONs ride inside data dirs for the
+same reason. The rename is atomic on a real filesystem; object stores
+would use a commit protocol instead.
 """
 
 from __future__ import annotations
@@ -31,24 +45,71 @@ import shutil
 import socket
 import threading
 import time
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
+
+#: completion marker of a swap that carries no watermark
+SUCCESS = "_SUCCESS"
 
 
 def meta_path(state_path: str, meta_name: str) -> str:
     return os.path.join(state_path, meta_name)
 
 
-def tmp_path(state_path: str) -> str:
-    return f"{state_path}.tmp-swap"
+def tmp_path(path: str) -> str:
+    """The one temp name for a swap or JSON replace of ``path``."""
+    head, name = os.path.split(os.path.normpath(path))
+    return os.path.join(head, f"_swap-{name}")
+
+
+def read_json(path: str, default=None):
+    """A record written by `replace_json`; ``default`` if there is none."""
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return default
+
+
+def replace_json(path: str, record) -> None:
+    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+    tmp = tmp_path(path)
+    with open(tmp, "w") as f:
+        json.dump(record, f)
+    os.replace(tmp, path)
+
+
+def recover(path: str, marker: str = SUCCESS) -> None:
+    """Finish or discard an interrupted swap (see module docstring)."""
+    tmp = tmp_path(path)
+    if not os.path.exists(tmp):
+        return
+    if os.path.exists(path) or not os.path.exists(os.path.join(tmp, marker)):
+        shutil.rmtree(tmp)
+    else:
+        os.rename(tmp, path)
+
+
+def replace_dir(
+    path: str,
+    write: Callable[[str], object],
+    meta: tuple[str, dict] | None = None,
+) -> None:
+    """Replace the directory ``path`` with what ``write(tmp)`` lays down,
+    crash-safely (see module docstring)."""
+    recover(path, meta[0] if meta else SUCCESS)
+    tmp = tmp_path(path)
+    write(tmp)
+    if meta is not None:
+        replace_json(os.path.join(tmp, meta[0]), meta[1])
+    if os.path.exists(path):
+        shutil.rmtree(path)
+    os.rename(tmp, path)
 
 
 def read_watermark(state_path: str, tag: str, meta_name: str) -> int:
-    try:
-        with open(meta_path(state_path, meta_name)) as f:
-            return json.load(f).get(tag, -1)
-    except FileNotFoundError:
-        return -1
+    return read_json(meta_path(state_path, meta_name), {}).get(tag, -1)
 
 
 def has_data(state_path: str) -> bool:
@@ -57,32 +118,28 @@ def has_data(state_path: str) -> bool:
     )
 
 
-def recover(state_path: str) -> None:
-    """Finish or roll back an interrupted swap (see module docstring)."""
-    tmp = tmp_path(state_path)
-    if not os.path.exists(tmp):
-        return
-    if os.path.exists(state_path):
-        shutil.rmtree(tmp)
-    else:
-        os.rename(tmp, state_path)
-
-
 def advance_watermark(state_path: str, epoch_id: int, tag: str, meta_name: str) -> None:
     """Record a completed (but state-identical) epoch without paying a
-    rewrite — e.g. an empty batch. The meta replace is atomic."""
-    meta = {}
-    try:
-        with open(meta_path(state_path, meta_name)) as f:
-            meta = json.load(f)
-    except FileNotFoundError:
-        pass
+    rewrite — e.g. an empty batch."""
+    meta = read_json(meta_path(state_path, meta_name), {})
     meta[tag] = epoch_id
-    os.makedirs(state_path, exist_ok=True)
-    tmp = meta_path(state_path, meta_name) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, meta_path(state_path, meta_name))
+    replace_json(meta_path(state_path, meta_name), meta)
+
+
+def swap_in(
+    new_state: DataFrame,
+    state_path: str,
+    epoch_id: int,
+    tag: str,
+    meta_name: str,
+) -> None:
+    """Swap ``new_state`` in over the state, its epoch watermark as the
+    completion marker."""
+    replace_dir(
+        state_path,
+        new_state.write.mode("overwrite").parquet,
+        meta=(meta_name, {tag: epoch_id}),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -409,21 +466,3 @@ def release_writer(fn) -> None:
     rel = getattr(fn, "lease_release", None)
     if rel is not None:
         rel()
-
-
-def swap_in(
-    new_state: DataFrame,
-    state_path: str,
-    epoch_id: int,
-    tag: str,
-    meta_name: str,
-) -> None:
-    """Write the new state to a temp dir (watermark inside), then swap it
-    over the old state."""
-    tmp = tmp_path(state_path)
-    new_state.write.mode("overwrite").parquet(tmp)
-    with open(os.path.join(tmp, meta_name), "w") as f:
-        json.dump({tag: epoch_id}, f)
-    if os.path.exists(state_path):
-        shutil.rmtree(state_path)
-    os.rename(tmp, state_path)

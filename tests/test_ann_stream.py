@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from basic_data_pipeline_spark.operators import similarity
-from basic_data_pipeline_spark.streaming import ann_stream
+from basic_data_pipeline_spark.streaming import ann_stream, swapstore
 
 DIM = 64
 
@@ -129,7 +129,7 @@ def test_compaction_crash_retry_converges(spark, vecs, tmp_path):
 @pytest.mark.slow
 def test_base_swap_crash_window_recovers(spark, vecs, tmp_path):
     """Crash AFTER rmtree(assigned) but BEFORE the rename: no base dir,
-    a complete .tmp-swap. Every read and the compaction rerun must
+    a complete swap temp. Every read and the compaction rerun must
     promote the temp and converge."""
     import shutil
 
@@ -138,7 +138,7 @@ def test_base_swap_crash_window_recovers(spark, vecs, tmp_path):
     fn(b1, 0)
     n_live = base.count() + b1.count()
     base_dir = os.path.join(idx, "assigned")
-    tmp = base_dir + ".tmp-swap"
+    tmp = swapstore.tmp_path(base_dir)
     # simulate the window: the temp was fully written (carries _SUCCESS),
     # the old base is gone, the rename never happened
     os.rename(base_dir, tmp)
@@ -151,7 +151,7 @@ def test_base_swap_crash_window_recovers(spark, vecs, tmp_path):
     os.makedirs(tmp)
     with open(os.path.join(tmp, "part-junk"), "w") as f:
         f.write("x")
-    ann_stream._recover_base_swap(idx)
+    swapstore.recover(base_dir)
     assert not os.path.exists(tmp) and os.path.exists(base_dir)
 
 

@@ -6,6 +6,7 @@ through the same apply pipeline the streaming layer uses.
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -21,7 +22,8 @@ from basic_data_pipeline_spark.sources.envelopes import (
     envelopes_to_df,
     expected_final_state,
 )
-from basic_data_pipeline_spark.streaming.ingest import run_batches
+from basic_data_pipeline_spark.streaming import swapstore
+from basic_data_pipeline_spark.streaming.ingest import make_cdc_batch_fn, run_batches
 
 
 # --- B3: normalization golden cases (consumer_to_file.py:88-113) ---------
@@ -421,3 +423,26 @@ def test_replay_append_dedup_survives_crash_restart(spark, tmp_path, workload):
         spark, [mixed], str(tmp_path), mode="append", dedup_replays=True,
         )
     assert sinks["employees"].read().count() == baseline + 4
+
+
+@pytest.mark.parametrize("mode", ["append", "compact"])
+def test_restart_after_crash_in_overwrite_swap_window(spark, tmp_path, mode):
+    """A crash between an overwrite's rmtree and its rename leaves the
+    sink's only complete copy under the swap temp name. A restarted
+    process must recover it before its first write; otherwise the next
+    purge (append mode) or compaction overwrites that temp and loses
+    every row it held."""
+    wl = employee_workload(30, 90, seed=7)
+    third = len(wl) // 3
+    epochs = [wl[:third], wl[third:2 * third], wl[2 * third:]]
+    root = str(tmp_path)
+    fn, sinks = make_cdc_batch_fn(spark, root, mode, dedup_replays=True)
+    fn(envelopes_to_df(spark, epochs[0]), 0)
+    loc = sinks["employees"].location
+    os.rename(loc, swapstore.tmp_path(loc))
+    fn, sinks = make_cdc_batch_fn(spark, root, mode, dedup_replays=True)
+    for e in (1, 2):
+        fn(envelopes_to_df(spark, epochs[e]), e)
+    cur = cdc.compact_latest(sinks["employees"].read(), key="id")
+    got = {r["id"]: r["name"] for r in cur.collect()}
+    assert got == {k: v["name"] for k, v in expected_final_state(wl).items()}

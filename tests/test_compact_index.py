@@ -20,7 +20,7 @@ from basic_data_pipeline_spark.operators import incremental_linkgraph as G
 from basic_data_pipeline_spark.operators import incremental_retrieval as IR
 from basic_data_pipeline_spark.operators import incremental_substring as IS
 from basic_data_pipeline_spark.operators import retrieval, substring
-from basic_data_pipeline_spark.streaming import dedup_stream
+from basic_data_pipeline_spark.streaming import dedup_stream, swapstore
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -194,11 +194,11 @@ def test_compact_refuses_pending_intent(spark, tmp_path, family):
 
 
 def test_compact_recovers_crashed_swap(spark, docs, tmp_path):
-    """A leftover .rebuild temp (crashed compaction) is discarded when
+    """A leftover swap temp (crashed compaction) is discarded when
     the original survives, and the re-run converges."""
     idx = str(tmp_path / "idx")
     IR.build_retrieval_index(spark, docs.limit(100), idx, n_buckets=4)
-    stale = f"{idx}/postings.rebuild"
+    stale = swapstore.tmp_path(f"{idx}/postings")
     os.makedirs(stale)
     with open(os.path.join(stale, "junk"), "w") as f:
         f.write("partial")

@@ -261,3 +261,23 @@ def test_legacy_dedup_meta_without_id_col(spark, sf_dir, tmp_path):
     assert {t: r["rows_after"] for t, r in rep["tables"].items()} == {
         t: len(rows) for t, rows in want.items()
     }
+
+
+def test_write_meta_is_atomic(spark, tmp_path, monkeypatch):
+    """A meta write that dies part-way (here: json.dump writes a torn
+    prefix, then raises) leaves the previous _meta.json readable."""
+    import json
+
+    idx = str(tmp_path / "idx")
+    old = {"n_buckets": 4, "id_col": "doc_id", "max_id": 9}
+    indexspec.IndexSpec.write_meta(idx, old)
+
+    def torn_dump(obj, f, *a, **kw):
+        f.write(json.dumps(obj)[:7])
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="disk full"):
+        indexspec.IndexSpec.write_meta(idx, {**old, "max_id": 99})
+    monkeypatch.undo()
+    assert indexspec.DEDUP.read_meta(spark, idx) == old

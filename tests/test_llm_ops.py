@@ -702,6 +702,33 @@ def test_duplicate_clusters_raises_on_nonconvergence(spark):
         dedup.duplicate_clusters(pairs, max_iters=2)
 
 
+@pytest.mark.parametrize("checkpoint_every", [1, 2])
+def test_duplicate_clusters_nonconvergence_frees_storage(
+    spark, checkpoint_every
+):
+    """The non-convergence exit leaves no new persistent RDDs: neither
+    the per-round lineage cuts nor the live labels frame nor the edges."""
+    import time
+
+    def persistent():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1, 0.9) for i in range(40)],
+        "id_a long, id_b long, jaccard double",
+    )
+    before = persistent()
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup.duplicate_clusters(
+            pairs, max_iters=3, checkpoint_every=checkpoint_every
+        )
+    for _ in range(50):
+        if persistent() <= before:
+            break
+        time.sleep(0.1)
+    assert persistent() <= before
+
+
 def test_cluster_survivors_matches_greedy_on_disjoint_pairs(docs):
     """On the fixture (planted dups are disjoint pairs) the cluster policy
     must equal greedy keep-lowest-id."""

@@ -19,7 +19,7 @@ from basic_data_pipeline_spark.operators import incremental_entity as IE
 from basic_data_pipeline_spark.operators import incremental_substring as IS
 from basic_data_pipeline_spark.operators import indexspec
 from basic_data_pipeline_spark.sources import tables
-from basic_data_pipeline_spark.streaming import dedup_stream, rebuild
+from basic_data_pipeline_spark.streaming import dedup_stream, rebuild, swapstore
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -141,7 +141,7 @@ def test_rebuild_swap_crash_window_recovers(
     spark, docs, tmp_path, monkeypatch
 ):
     """A crash inside the rebuild's own rmtree→rename window leaves no
-    bands dir and a complete .rebuild temp; re-running the rebuild
+    bands dir and a complete swap temp; re-running the rebuild
     promotes it and converges."""
     import os
 
@@ -154,9 +154,10 @@ def test_rebuild_swap_crash_window_recovers(
         with pytest.raises(_Boom):
             fn(docs.filter(F.col("doc_id") >= 150), 0)
     rep1 = rebuild.rebuild_dedup_index(spark, idx, out_root=out)
-    # simulate the window: the swapped-in bands dir moves back to .rebuild
+    # simulate the window: the swapped-in bands dir moves back to the temp
     bands = os.path.join(idx, "bands")
-    os.rename(bands, bands + ".rebuild")
+    tmp = swapstore.tmp_path(bands)
+    os.rename(bands, tmp)
     # mark dirty again so the rerun exercises the full path
     dedup_stream._write_ledger(
         idx, {"stream": {"last_epoch": -1, "intent": 0}}
@@ -165,13 +166,13 @@ def test_rebuild_swap_crash_window_recovers(
     assert rep2["tables"]["bands"]["rows_after"] == (
         rep1["tables"]["bands"]["rows_after"]
     )
-    assert not os.path.exists(bands + ".rebuild")
+    assert not os.path.exists(tmp)
     # a PARTIAL temp (no _SUCCESS) next to a live dir is discarded
-    os.makedirs(bands + ".rebuild")
-    with open(os.path.join(bands + ".rebuild", "part-junk"), "w") as f:
+    os.makedirs(tmp)
+    with open(os.path.join(tmp, "part-junk"), "w") as f:
         f.write("x")
-    rebuild._recover_swap(bands)
-    assert not os.path.exists(bands + ".rebuild")
+    swapstore.recover(bands)
+    assert not os.path.exists(tmp)
 
 
 # --- substring -----------------------------------------------------------

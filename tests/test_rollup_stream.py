@@ -84,6 +84,21 @@ def test_interrupted_swap_recovery(spark, tmp_path):
     assert not os.path.exists(swapstore.tmp_path(loc))
 
 
+def test_first_write_crash_discards_partial_temp(spark, tmp_path):
+    """Crash mid-write on the rollup's FIRST-ever swap: no live dir, and
+    the temp holds only Spark _temporary files (no watermark marker).
+    Recovery discards it and the replay applies the epoch from scratch."""
+    loc = str(tmp_path / "roll")
+    part = os.path.join(swapstore.tmp_path(loc), "_temporary", "0")
+    os.makedirs(part)
+    with open(os.path.join(part, "part-000.parquet"), "w") as f:
+        f.write("not parquet")
+    b1 = _batches(spark)[0]
+    rollup_stream.make_rollup_batch_fn(loc)(b1, 0)
+    assert not os.path.exists(swapstore.tmp_path(loc))
+    assert _rows(spark.read.parquet(loc)) == _rows(hourly_rollup(b1))
+
+
 # --- date-partitioned store (the 100 TB rewrite-only-touched-dates path) --
 
 def _prows(spark, root):

@@ -103,6 +103,23 @@ def test_interrupted_swap_recovery(spark, tmp_path):
     assert _rows(spark.read.parquet(hist)) == want
 
 
+def test_first_write_crash_discards_partial_temp(spark, tmp_path):
+    """Crash mid-write on the history's FIRST-ever swap: no live dir, and
+    the temp holds only Spark _temporary files (no watermark marker).
+    The temp must be discarded, not promoted over the missing history —
+    an unreadable dir would fail every replay — and the replay applies
+    the epoch from scratch."""
+    hist = str(tmp_path / "hist")
+    part = os.path.join(swapstore.tmp_path(hist), "_temporary", "0")
+    os.makedirs(part)
+    with open(os.path.join(part, "part-000.parquet"), "w") as f:
+        f.write("not parquet")
+    b1 = _batches(spark)[0]
+    scd_stream.make_scd2_batch_fn(hist, ["id"])(b1, 0)
+    assert not os.path.exists(swapstore.tmp_path(hist))
+    assert _rows(spark.read.parquet(hist)) == _rows(scd2_apply(None, b1, ["id"]))
+
+
 def test_scd2_through_streaming_engine(spark, tmp_path):
     src = tmp_path / "src"
     src.mkdir()
