@@ -34,10 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from basic_data_pipeline_spark.caching import (
-    free_local_checkpoint,
-    tracked_local_checkpoint,
-)
+from basic_data_pipeline_spark import caching
 
 WS = r"\s+"
 
@@ -94,54 +91,51 @@ def train_bpe(
     """
     if n_merges < 1:
         raise ValueError("need n_merges >= 1")
-    vocab = tracked_local_checkpoint(
-        word_freqs(docs, text_col).select(
-            F.col("freq"),
-            F.split(F.col("word"), "").alias("syms"),
-        )
-    )
-    merges: list[tuple[int, str, str, int]] = []
-    prev_ckpt: DataFrame = vocab
-    for rank in range(n_merges):
-        pairs = (
-            vocab.filter(F.size("syms") >= 2)
-            .select(
-                "freq",
-                F.explode(
-                    F.transform(
-                        F.sequence(F.lit(1), F.size("syms") - 1),
-                        lambda i: F.struct(
-                            F.element_at(F.col("syms"), i).alias("a"),
-                            F.element_at(F.col("syms"), i + 1).alias("b"),
-                        ),
-                    )
-                ).alias("p"),
-            )
-            .groupBy("p.a", "p.b")
-            .agg(F.sum("freq").alias("n"))
-        )
-        best = (
-            pairs.orderBy(F.desc("n"), F.asc("a"), F.asc("b"))
-            .limit(1)
-            .collect()
-        )
-        if not best or best[0]["n"] < min_pair_freq:
-            break
-        a, b, n = best[0]["a"], best[0]["b"], best[0]["n"]
-        merges.append((rank, a, b, int(n)))
-        vocab = tracked_local_checkpoint(
-            vocab.select(
-                "freq", apply_merge_jvm(F.col("syms"), a, b).alias("syms")
+    with caching.held() as h:
+        vocab = h.cut(
+            word_freqs(docs, text_col).select(
+                F.col("freq"),
+                F.split(F.col("word"), "").alias("syms"),
             )
         )
-        # the new round's checkpoint is materialized; release the
-        # previous round's blocks so storage stays one-vocab-sized for
-        # the whole training instead of growing n_merges × vocab.
-        # (free_local_checkpoint, not unpersist: DataFrame.unpersist is
-        # a NO-OP for checkpoint storage — caching.py)
-        free_local_checkpoint(prev_ckpt)
-        prev_ckpt = vocab
-    return merges
+        merges: list[tuple[int, str, str, int]] = []
+        for rank in range(n_merges):
+            pairs = (
+                vocab.filter(F.size("syms") >= 2)
+                .select(
+                    "freq",
+                    F.explode(
+                        F.transform(
+                            F.sequence(F.lit(1), F.size("syms") - 1),
+                            lambda i: F.struct(
+                                F.element_at(F.col("syms"), i).alias("a"),
+                                F.element_at(F.col("syms"), i + 1).alias("b"),
+                            ),
+                        )
+                    ).alias("p"),
+                )
+                .groupBy("p.a", "p.b")
+                .agg(F.sum("freq").alias("n"))
+            )
+            best = (
+                pairs.orderBy(F.desc("n"), F.asc("a"), F.asc("b"))
+                .limit(1)
+                .collect()
+            )
+            if not best or best[0]["n"] < min_pair_freq:
+                break
+            a, b, n = best[0]["a"], best[0]["b"], best[0]["n"]
+            merges.append((rank, a, b, int(n)))
+            # the previous round's blocks are freed once the new round is
+            # cut, so storage stays one-vocab-sized for the whole training
+            # instead of growing n_merges × vocab
+            vocab = h.step(
+                vocab,
+                vocab.select(
+                    "freq", apply_merge_jvm(F.col("syms"), a, b).alias("syms")
+                ),
+            )
+        return merges
 
 
 def merges_df(spark, merges: list[tuple[int, str, str, int]]) -> DataFrame:

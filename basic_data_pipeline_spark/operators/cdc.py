@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
+from basic_data_pipeline_spark import caching
 from basic_data_pipeline_spark.functions.normalize import (
     EPOCH_MS_THRESHOLD,
     EPOCH_SUFFIX,
@@ -132,49 +133,49 @@ def infer_record_schema(spark: SparkSession, json_col_df: DataFrame) -> T.Struct
     full JSON-inference scan per table per batch. Callers additionally
     skip this entirely on steady-state batches whose JSON key set matches
     the cached schema (see apply_cdc_batch's probe)."""
-    sample = (
-        json_col_df.filter(F.col("after").isNotNull())
-        .select("after")
-        .limit(INFER_SAMPLE_ROWS)
-        .persist()  # consumed twice (inference + epoch maxima); tiny
-    )
-    inferred = spark.read.json(sample.rdd.map(lambda r: r[0])).schema
-    fields = []
-    epoch_candidates = []
-    for f in inferred.fields:
-        if f.name.startswith("_corrupt"):
-            continue
-        sink_t = infer_sink_type(f.name, f.dataType)
-        if f.name.endswith(EPOCH_SUFFIX) and isinstance(
-            sink_t, (T.LongType, T.DoubleType, T.IntegerType)
-        ):
-            epoch_candidates.append(f.name)
-        fields.append(T.StructField(f.name, sink_t, True))
-    if epoch_candidates:
-        # ensure_table:137-138 applies the timestamp override only when the
-        # VALUE exceeds 1e12 — a numeric `count_on`-style column with small
-        # values must stay numeric, or small ints become 1970 timestamps.
-        maxima = sample.agg(
-            *[
-                F.max(
-                    F.get_json_object(F.col("after"), f"$.{name}").try_cast("double")
-                ).alias(name)
+    with caching.held() as h:
+        # consumed twice (inference + epoch maxima); tiny
+        sample = h.persist(
+            json_col_df.filter(F.col("after").isNotNull())
+            .select("after")
+            .limit(INFER_SAMPLE_ROWS)
+        )
+        inferred = spark.read.json(sample.rdd.map(lambda r: r[0])).schema
+        fields = []
+        epoch_candidates = []
+        for f in inferred.fields:
+            if f.name.startswith("_corrupt"):
+                continue
+            sink_t = infer_sink_type(f.name, f.dataType)
+            if f.name.endswith(EPOCH_SUFFIX) and isinstance(
+                sink_t, (T.LongType, T.DoubleType, T.IntegerType)
+            ):
+                epoch_candidates.append(f.name)
+            fields.append(T.StructField(f.name, sink_t, True))
+        if epoch_candidates:
+            # ensure_table:137-138 applies the timestamp override only when the
+            # VALUE exceeds 1e12 — a numeric `count_on`-style column with small
+            # values must stay numeric, or small ints become 1970 timestamps.
+            maxima = sample.agg(
+                *[
+                    F.max(
+                        F.get_json_object(F.col("after"), f"$.{name}").try_cast("double")
+                    ).alias(name)
+                    for name in epoch_candidates
+                ]
+            ).collect()[0]
+            epochal = {
+                name
                 for name in epoch_candidates
+                if maxima[name] is not None and maxima[name] > EPOCH_MS_THRESHOLD
+            }
+            fields = [
+                T.StructField(f.name, T.TimestampType(), True)
+                if f.name in epochal
+                else f
+                for f in fields
             ]
-        ).collect()[0]
-        epochal = {
-            name
-            for name in epoch_candidates
-            if maxima[name] is not None and maxima[name] > EPOCH_MS_THRESHOLD
-        }
-        fields = [
-            T.StructField(f.name, T.TimestampType(), True)
-            if f.name in epochal
-            else f
-            for f in fields
-        ]
-    sample.unpersist()
-    return T.StructType(fields)
+        return T.StructType(fields)
 
 
 def merge_schemas(existing: T.StructType, batch: T.StructType) -> T.StructType:
@@ -393,222 +394,222 @@ def apply_cdc_batch(
     (consumer_to_file.py:58,130).
     """
     sinks = sinks if sinks is not None else {}
-    # persisted: the decode runs once, not once per (table × probe/infer/
-    # apply) — a large Kafka micro-batch would otherwise re-parse ~5× per
-    # routed table
-    events = decode_envelopes(raw).persist()
+    with caching.held() as h:
+        # persisted: the decode runs once, not once per (table × probe/infer/
+        # apply) — a large Kafka micro-batch would otherwise re-parse ~5× per
+        # routed table
+        events = h.persist(decode_envelopes(raw))
 
-    # ONE aggregated driver round-trip replaces r1's distinct().collect()
-    # plus two take(1) probes PER TABLE (a serial job-launch tax at 100 TB
-    # micro-batch rates): per-table upsert/delete counts, plus the sorted
-    # JSON key sets of the upsert payloads. The key sets are the schema
-    # fingerprint — a steady-state batch whose keys are all already in the
-    # cached schema skips JSON inference entirely, so inference runs only
-    # on first sight of a table or on actual drift.
-    is_upsert = F.col("op").isin(*UPSERT_OPS) & F.col("after").isNotNull()
-    probe = (
-        events.groupBy("table")
-        .agg(
-            F.sum(is_upsert.cast("long")).alias("n_upserts"),
-            F.sum((F.col("op") == DELETE_OP).cast("long")).alias("n_deletes"),
-            F.collect_set(
-                F.when(
-                    is_upsert,
-                    F.array_join(F.array_sort(F.json_object_keys("after")), ","),
-                )
-            ).alias("key_sets"),
-        )
-        .collect()
-    )
-    stats = {r["table"]: r for r in probe}
-
-    # Replay dedup (append mode): per-(table, partition) max offsets of
-    # this batch, ONE extra driver round-trip when enabled. Combined with
-    # each sink's applied-offset high-water mark this upgrades append mode
-    # from at-least-once to effectively-once: a replayed epoch (crash
-    # between the parquet append and the checkpoint commit) is filtered
-    # out by offset, fully-replayed epochs skip their write entirely.
-    batch_offmax: dict[tuple[str, int], int] = {}
-    if dedup_replays and "offset" in events.columns:
-        for r in (
-            events.filter(is_upsert)
-            .groupBy("table", "partition")
-            .agg(F.max("offset").alias("m"))
+        # ONE aggregated driver round-trip replaces r1's distinct().collect()
+        # plus two take(1) probes PER TABLE (a serial job-launch tax at 100 TB
+        # micro-batch rates): per-table upsert/delete counts, plus the sorted
+        # JSON key sets of the upsert payloads. The key sets are the schema
+        # fingerprint — a steady-state batch whose keys are all already in the
+        # cached schema skips JSON inference entirely, so inference runs only
+        # on first sight of a table or on actual drift.
+        is_upsert = F.col("op").isin(*UPSERT_OPS) & F.col("after").isNotNull()
+        probe = (
+            events.groupBy("table")
+            .agg(
+                F.sum(is_upsert.cast("long")).alias("n_upserts"),
+                F.sum((F.col("op") == DELETE_OP).cast("long")).alias("n_deletes"),
+                F.collect_set(
+                    F.when(
+                        is_upsert,
+                        F.array_join(F.array_sort(F.json_object_keys("after")), ","),
+                    )
+                ).alias("key_sets"),
+            )
             .collect()
-        ):
-            batch_offmax[(r["table"], r["partition"])] = r["m"]
+        )
+        stats = {r["table"]: r for r in probe}
 
-    dlq_schema = "table string, column string, value string, error string, payload string"
-    dlq_all = spark.createDataFrame([], dlq_schema)
+        # Replay dedup (append mode): per-(table, partition) max offsets of
+        # this batch, ONE extra driver round-trip when enabled. Combined with
+        # each sink's applied-offset high-water mark this upgrades append mode
+        # from at-least-once to effectively-once: a replayed epoch (crash
+        # between the parquet append and the checkpoint commit) is filtered
+        # out by offset, fully-replayed epochs skip their write entirely.
+        batch_offmax: dict[tuple[str, int], int] = {}
+        if dedup_replays and "offset" in events.columns:
+            for r in (
+                events.filter(is_upsert)
+                .groupBy("table", "partition")
+                .agg(F.max("offset").alias("m"))
+                .collect()
+            ):
+                batch_offmax[(r["table"], r["partition"])] = r["m"]
 
-    for tbl in sorted(stats):
-        sub = events.filter(F.col("table") == tbl)
-        upserts = sub.filter(is_upsert)
-        deletes = sub.filter(F.col("op") == DELETE_OP)
-        if tbl not in sinks:
-            sinks[tbl] = (
-                sink_factory(tbl)
-                if sink_factory is not None
-                else SinkTable(spark, sink_root, tbl)
-            )
-        sink = sinks[tbl]
+        dlq_schema = "table string, column string, value string, error string, payload string"
+        dlq_all = spark.createDataFrame([], dlq_schema)
 
-        has_upserts = stats[tbl]["n_upserts"] > 0
-        has_deletes = stats[tbl]["n_deletes"] > 0
-
-        if has_upserts:
-            cached = sink.record_schema
-            batch_keys: set[str] = set()
-            for ks in stats[tbl]["key_sets"]:
-                if ks:
-                    batch_keys.update(ks.split(","))
-            known = {f.name for f in cached.fields} if cached is not None else set()
-            if cached is not None and batch_keys <= known:
-                # steady state: every payload key already typed — no
-                # inference scan, no extra job
-                schema = cached
-            else:
-                batch_schema = infer_record_schema(spark, upserts)
-                schema = (
-                    merge_schemas(cached, batch_schema)
-                    if cached is not None
-                    else batch_schema
+        for tbl in sorted(stats):
+            sub = events.filter(F.col("table") == tbl)
+            upserts = sub.filter(is_upsert)
+            deletes = sub.filter(F.col("op") == DELETE_OP)
+            if tbl not in sinks:
+                sinks[tbl] = (
+                    sink_factory(tbl)
+                    if sink_factory is not None
+                    else SinkTable(spark, sink_root, tbl)
                 )
-            sink.record_schema = schema
-        if sink.record_schema is None:
-            continue  # deletes before any create: nothing to apply
-        schema = sink.record_schema
-        if sink.key is None:
-            sink.key = pick_primary_key([f.name for f in schema.fields])
-        key = sink.key
-        key_type = {f.name: f.dataType for f in schema.fields}[key]
+            sink = sinks[tbl]
 
-        good = None
-        if has_upserts:
-            records = normalize_records(extract_string_records(upserts, schema), schema)
-            good, dlq = validate_and_cast(records, schema)
-            dlq_all = dlq_all.unionByName(dlq)
-            good = good.drop("_cdc_table")
+            has_upserts = stats[tbl]["n_upserts"] > 0
+            has_deletes = stats[tbl]["n_deletes"] > 0
 
-        # delete tombstones: key from `before` (the ACTUAL key column —
-        # divergence from the reference's hardcoded `id`, :241), ordered by
-        # the same (source_ts_ms, ts_ms, offset) as the data rows so
-        # interleaved delete→re-insert sequences resolve correctly.
-        tombstones = None
-        if has_deletes:
-            meta = [c for c in ("source_ts_ms", "ts_ms", "partition", "offset") if c in deletes.columns]
-            tombstones = deletes.select(
-                F.lit("d").alias("_cdc_op"),
-                *[F.col(c).alias(f"_cdc_{c}") for c in meta],
-                _typed_value(
-                    normalize_string_value(
-                        F.get_json_object(F.col("before"), f"$.{key}")
-                    ),
-                    key_type,
-                ).alias(key),
-            )
-
-        parts = [p for p in (good, tombstones) if p is not None]
-        if not parts:
-            # events for an established table that are neither valid
-            # upserts nor deletes (op 't'/'m', or upserts with null
-            # `after`): nothing to apply — must not crash the micro-batch
-            continue
-
-        if mode == "compact":
-            merged = parts[0]
-            for p in parts[1:]:
-                merged = evolve_union(merged, p)
-            if sink.created:
-                merged = evolve_union(
-                    merged, sink.read().withColumn("_cdc_op", F.lit("r"))
-                )
-            sink.overwrite(compact_latest(merged, key=key).drop("_cdc_op"))
-        else:
-            if good is not None and dedup_replays and "_cdc_offset" in good.columns:
-                if sink.created and sink.applied_offsets is None:
-                    # restart recovery: high-water marks from the sink
-                    # itself — a 2-column pruned scan, once per table per
-                    # process (steady state never re-reads)
-                    sink.applied_offsets = {
-                        r["_cdc_partition"]: r["m"]
-                        for r in sink.read()
-                        .groupBy("_cdc_partition")
-                        .agg(F.max("_cdc_offset").alias("m"))
-                        .collect()
-                    }
-                wm = sink.applied_offsets or {}
-                batch_parts = {
-                    part: mx
-                    for (t, part), mx in batch_offmax.items()
-                    if t == tbl
-                }
-                if batch_parts and all(
-                    mx <= wm.get(part, -1) for part, mx in batch_parts.items()
-                ):
-                    good = None  # fully-replayed epoch: skip the write
-                elif wm:
-                    wm_map = F.create_map(
-                        *[F.lit(x) for kv in wm.items() for x in kv]
-                    )
-                    seen = wm_map[F.col("_cdc_partition").cast("int")]
-                    good = good.filter(
-                        seen.isNull() | (F.col("_cdc_offset") > seen)
-                    )
-                new_wm = dict(wm)
-                for part, mx in batch_parts.items():
-                    new_wm[part] = max(new_wm.get(part, -1), mx)
-            else:
-                new_wm = None
-            if good is not None:
-                sink.append(good.drop("_cdc_op"))
-            if tombstones is not None and sink.created:
-                # faithful append mode: a delete removes every version of
-                # the key at-or-before it (ALTER TABLE … DELETE semantics,
-                # consumer_to_file.py:241-243); later re-inserts survive.
-                # The cut uses the FULL (source_ts_ms, ts_ms, offset)
-                # ordering — source_ts_ms alone is millisecond-granular,
-                # and a re-insert sharing the delete's timestamp must
-                # survive (struct comparison is lexicographic). Each
-                # component is coalesced to -1: a NULL field (e.g. an
-                # envelope missing source.ts_ms) would make the struct
-                # comparison NULL and silently DROP a row that postdates
-                # the delete; with the sentinel, missing-version rows sort
-                # before any real version.
-                ord_cols = [
-                    c
-                    for c in ("_cdc_source_ts_ms", "_cdc_ts_ms", "_cdc_offset")
-                    if tombstones is not None and c in tombstones.columns
-                ]
-                ver = F.struct(
-                    *[F.coalesce(F.col(c), F.lit(-1)) for c in ord_cols]
-                )
-                last_del = tombstones.groupBy(key).agg(
-                    F.max(ver).alias("_del_ver")
-                )
-                if hasattr(sink, "apply_delete_versions"):
-                    # relational sinks delete in place (the reference's
-                    # per-key ALTER TABLE … DELETE) instead of rewriting
-                    # the whole table
-                    sink.apply_delete_versions(last_del, key, ord_cols)
+            if has_upserts:
+                cached = sink.record_schema
+                batch_keys: set[str] = set()
+                for ks in stats[tbl]["key_sets"]:
+                    if ks:
+                        batch_keys.update(ks.split(","))
+                known = {f.name for f in cached.fields} if cached is not None else set()
+                if cached is not None and batch_keys <= known:
+                    # steady state: every payload key already typed — no
+                    # inference scan, no extra job
+                    schema = cached
                 else:
-                    target = sink.read()
-                    remaining = (
-                        target.join(F.broadcast(last_del), on=key, how="left")
-                        .filter(
-                            F.col("_del_ver").isNull() | (ver > F.col("_del_ver"))
-                        )
-                        .drop("_del_ver")
+                    batch_schema = infer_record_schema(spark, upserts)
+                    schema = (
+                        merge_schemas(cached, batch_schema)
+                        if cached is not None
+                        else batch_schema
                     )
-                    sink.overwrite(remaining)
-            # advance the replay watermark only AFTER the append (and
-            # delete apply) succeeded: advancing first would make an
-            # in-process retry of a failed batch look already-applied and
-            # silently drop its rows.
-            if new_wm is not None:
-                sink.applied_offsets = new_wm
+                sink.record_schema = schema
+            if sink.record_schema is None:
+                continue  # deletes before any create: nothing to apply
+            schema = sink.record_schema
+            if sink.key is None:
+                sink.key = pick_primary_key([f.name for f in schema.fields])
+            key = sink.key
+            key_type = {f.name: f.dataType for f in schema.fields}[key]
 
-    if dlq_all.take(1):
-        dlq_all.write.mode("append").parquet(os.path.join(sink_root, "_dlq"))
-    events.unpersist()
-    return sinks, dlq_all
+            good = None
+            if has_upserts:
+                records = normalize_records(extract_string_records(upserts, schema), schema)
+                good, dlq = validate_and_cast(records, schema)
+                dlq_all = dlq_all.unionByName(dlq)
+                good = good.drop("_cdc_table")
+
+            # delete tombstones: key from `before` (the ACTUAL key column —
+            # divergence from the reference's hardcoded `id`, :241), ordered by
+            # the same (source_ts_ms, ts_ms, offset) as the data rows so
+            # interleaved delete→re-insert sequences resolve correctly.
+            tombstones = None
+            if has_deletes:
+                meta = [c for c in ("source_ts_ms", "ts_ms", "partition", "offset") if c in deletes.columns]
+                tombstones = deletes.select(
+                    F.lit("d").alias("_cdc_op"),
+                    *[F.col(c).alias(f"_cdc_{c}") for c in meta],
+                    _typed_value(
+                        normalize_string_value(
+                            F.get_json_object(F.col("before"), f"$.{key}")
+                        ),
+                        key_type,
+                    ).alias(key),
+                )
+
+            parts = [p for p in (good, tombstones) if p is not None]
+            if not parts:
+                # events for an established table that are neither valid
+                # upserts nor deletes (op 't'/'m', or upserts with null
+                # `after`): nothing to apply — must not crash the micro-batch
+                continue
+
+            if mode == "compact":
+                merged = parts[0]
+                for p in parts[1:]:
+                    merged = evolve_union(merged, p)
+                if sink.created:
+                    merged = evolve_union(
+                        merged, sink.read().withColumn("_cdc_op", F.lit("r"))
+                    )
+                sink.overwrite(compact_latest(merged, key=key).drop("_cdc_op"))
+            else:
+                if good is not None and dedup_replays and "_cdc_offset" in good.columns:
+                    if sink.created and sink.applied_offsets is None:
+                        # restart recovery: high-water marks from the sink
+                        # itself — a 2-column pruned scan, once per table per
+                        # process (steady state never re-reads)
+                        sink.applied_offsets = {
+                            r["_cdc_partition"]: r["m"]
+                            for r in sink.read()
+                            .groupBy("_cdc_partition")
+                            .agg(F.max("_cdc_offset").alias("m"))
+                            .collect()
+                        }
+                    wm = sink.applied_offsets or {}
+                    batch_parts = {
+                        part: mx
+                        for (t, part), mx in batch_offmax.items()
+                        if t == tbl
+                    }
+                    if batch_parts and all(
+                        mx <= wm.get(part, -1) for part, mx in batch_parts.items()
+                    ):
+                        good = None  # fully-replayed epoch: skip the write
+                    elif wm:
+                        wm_map = F.create_map(
+                            *[F.lit(x) for kv in wm.items() for x in kv]
+                        )
+                        seen = wm_map[F.col("_cdc_partition").cast("int")]
+                        good = good.filter(
+                            seen.isNull() | (F.col("_cdc_offset") > seen)
+                        )
+                    new_wm = dict(wm)
+                    for part, mx in batch_parts.items():
+                        new_wm[part] = max(new_wm.get(part, -1), mx)
+                else:
+                    new_wm = None
+                if good is not None:
+                    sink.append(good.drop("_cdc_op"))
+                if tombstones is not None and sink.created:
+                    # faithful append mode: a delete removes every version of
+                    # the key at-or-before it (ALTER TABLE … DELETE semantics,
+                    # consumer_to_file.py:241-243); later re-inserts survive.
+                    # The cut uses the FULL (source_ts_ms, ts_ms, offset)
+                    # ordering — source_ts_ms alone is millisecond-granular,
+                    # and a re-insert sharing the delete's timestamp must
+                    # survive (struct comparison is lexicographic). Each
+                    # component is coalesced to -1: a NULL field (e.g. an
+                    # envelope missing source.ts_ms) would make the struct
+                    # comparison NULL and silently DROP a row that postdates
+                    # the delete; with the sentinel, missing-version rows sort
+                    # before any real version.
+                    ord_cols = [
+                        c
+                        for c in ("_cdc_source_ts_ms", "_cdc_ts_ms", "_cdc_offset")
+                        if tombstones is not None and c in tombstones.columns
+                    ]
+                    ver = F.struct(
+                        *[F.coalesce(F.col(c), F.lit(-1)) for c in ord_cols]
+                    )
+                    last_del = tombstones.groupBy(key).agg(
+                        F.max(ver).alias("_del_ver")
+                    )
+                    if hasattr(sink, "apply_delete_versions"):
+                        # relational sinks delete in place (the reference's
+                        # per-key ALTER TABLE … DELETE) instead of rewriting
+                        # the whole table
+                        sink.apply_delete_versions(last_del, key, ord_cols)
+                    else:
+                        target = sink.read()
+                        remaining = (
+                            target.join(F.broadcast(last_del), on=key, how="left")
+                            .filter(
+                                F.col("_del_ver").isNull() | (ver > F.col("_del_ver"))
+                            )
+                            .drop("_del_ver")
+                        )
+                        sink.overwrite(remaining)
+                # advance the replay watermark only AFTER the append (and
+                # delete apply) succeeded: advancing first would make an
+                # in-process retry of a failed batch look already-applied and
+                # silently drop its rows.
+                if new_wm is not None:
+                    sink.applied_offsets = new_wm
+
+        if dlq_all.take(1):
+            dlq_all.write.mode("append").parquet(os.path.join(sink_root, "_dlq"))
+        return sinks, dlq_all

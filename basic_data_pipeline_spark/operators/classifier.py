@@ -37,10 +37,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from basic_data_pipeline_spark.caching import (
-    free_local_checkpoint,
-    tracked_local_checkpoint,
-)
+from basic_data_pipeline_spark import caching
 from basic_data_pipeline_spark.operators import text as T
 
 N_FEATURES = 6
@@ -164,80 +161,79 @@ def train_quality_lr(
             < F.lit(int(sample_fraction * 1_000_000))
         )
     d = N_FEATURES
-    base = tracked_local_checkpoint(
-        docs.select(
-            quality_features(F.col(text_col)).alias("_x"),
-            F.col(label_col).cast("double").alias("_y"),
+    with caching.held() as h:
+        base = h.cut(
+            docs.select(
+                quality_features(F.col(text_col)).alias("_x"),
+                F.col(label_col).cast("double").alias("_y"),
+            )
         )
-    )
 
-    mom = base.agg(
-        F.count(F.lit(1)).alias("n"),
-        *[
-            F.sum(F.element_at("_x", j + 1).cast(_DEC)).alias(f"s{j}")
-            for j in range(d)
-        ],
-        *[
-            F.sum(
-                (F.element_at("_x", j + 1) * F.element_at("_x", j + 1)).cast(
-                    _DEC
-                )
-            ).alias(f"q{j}")
-            for j in range(d)
-        ],
-    ).collect()[0]
-    n = mom["n"]
-    if n == 0:
-        raise ValueError("empty training frame")
-    mean = [float(mom[f"s{j}"]) / n for j in range(d)]
-    std = [
-        math.sqrt(max(float(mom[f"q{j}"]) / n - mean[j] ** 2, 1e-12))
-        for j in range(d)
-    ]
-
-    # The gradient loop below runs ``n_iters`` driver-blocking jobs over
-    # this frame, and each job launches one task per partition — at
-    # fixture scale the 65-way spread inherited from the feature frame
-    # costs ~0.6 s/job in pure task-launch overhead (measured r11;
-    # the bare job floor on this box is ~0.25 s). Size the gradient
-    # frame to ~1M rows per task (cheap decimal sums), floored at 1 and
-    # capped at cluster parallelism so a 100 TB fit still feeds every
-    # core. Results are partitioning-independent by construction
-    # (DECIMAL accumulation), so this is a pure scheduling change.
-    sc = base.sparkSession.sparkContext
-    grad_parts = max(1, min(n // 1_000_000 + 1, sc.defaultParallelism))
-    z = tracked_local_checkpoint(
-        base.select(_std_feats(F.col("_x"), mean, std).alias("_z"), "_y")
-        .repartition(grad_parts)
-    )
-    # free the raw-feature checkpoint (free_local_checkpoint, not
-    # unpersist — the latter is a no-op for checkpoint storage)
-    free_local_checkpoint(base)
-
-    w = [0.0] * d
-    b = 0.0
-    for _ in range(n_iters):
-        margin = F.lit(b)
-        for j in range(d):
-            margin = margin + F.element_at("_z", j + 1) * F.lit(w[j])
-        err = F.lit(1.0) / (F.lit(1.0) + F.exp(-margin)) - F.col("_y")
-        g = z.agg(
+        mom = base.agg(
+            F.count(F.lit(1)).alias("n"),
             *[
-                F.sum((err * F.element_at("_z", j + 1)).cast(_DEC)).alias(
-                    f"g{j}"
-                )
+                F.sum(F.element_at("_x", j + 1).cast(_DEC)).alias(f"s{j}")
                 for j in range(d)
             ],
-            F.sum(err.cast(_DEC)).alias("gb"),
+            *[
+                F.sum(
+                    (F.element_at("_x", j + 1) * F.element_at("_x", j + 1)).cast(
+                        _DEC
+                    )
+                ).alias(f"q{j}")
+                for j in range(d)
+            ],
         ).collect()[0]
-        w = [
-            w[j]
-            - learn_rate * (float(g[f"g{j}"]) / n + l2 * w[j])
+        n = mom["n"]
+        if n == 0:
+            raise ValueError("empty training frame")
+        mean = [float(mom[f"s{j}"]) / n for j in range(d)]
+        std = [
+            math.sqrt(max(float(mom[f"q{j}"]) / n - mean[j] ** 2, 1e-12))
             for j in range(d)
         ]
-        b = b - learn_rate * float(g["gb"]) / n
-    free_local_checkpoint(z)
-    return QualityModel(tuple(mean), tuple(std), tuple(w), b)
+
+        # The gradient loop below runs ``n_iters`` driver-blocking jobs over
+        # this frame, and each job launches one task per partition — at
+        # fixture scale the 65-way spread inherited from the feature frame
+        # costs ~0.6 s/job in pure task-launch overhead (measured r11;
+        # the bare job floor on this box is ~0.25 s). Size the gradient
+        # frame to ~1M rows per task (cheap decimal sums), floored at 1 and
+        # capped at cluster parallelism so a 100 TB fit still feeds every
+        # core. Results are partitioning-independent by construction
+        # (DECIMAL accumulation), so this is a pure scheduling change.
+        sc = base.sparkSession.sparkContext
+        grad_parts = max(1, min(n // 1_000_000 + 1, sc.defaultParallelism))
+        # the raw-feature checkpoint is freed once the gradient frame is cut
+        z = h.step(
+            base,
+            base.select(_std_feats(F.col("_x"), mean, std).alias("_z"), "_y")
+            .repartition(grad_parts),
+        )
+
+        w = [0.0] * d
+        b = 0.0
+        for _ in range(n_iters):
+            margin = F.lit(b)
+            for j in range(d):
+                margin = margin + F.element_at("_z", j + 1) * F.lit(w[j])
+            err = F.lit(1.0) / (F.lit(1.0) + F.exp(-margin)) - F.col("_y")
+            g = z.agg(
+                *[
+                    F.sum((err * F.element_at("_z", j + 1)).cast(_DEC)).alias(
+                        f"g{j}"
+                    )
+                    for j in range(d)
+                ],
+                F.sum(err.cast(_DEC)).alias("gb"),
+            ).collect()[0]
+            w = [
+                w[j]
+                - learn_rate * (float(g[f"g{j}"]) / n + l2 * w[j])
+                for j in range(d)
+            ]
+            b = b - learn_rate * float(g["gb"]) / n
+        return QualityModel(tuple(mean), tuple(std), tuple(w), b)
 
 
 def quality_lr_score(model: QualityModel, text: Column) -> Column:

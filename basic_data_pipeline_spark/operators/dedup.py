@@ -34,12 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from basic_data_pipeline_spark.caching import (
-    free_local_checkpoint,
-    track_release,
-    tracked_local_checkpoint,
-    tracked_persist,
-)
+from basic_data_pipeline_spark import caching
+from basic_data_pipeline_spark.caching import tracked_persist
 from basic_data_pipeline_spark.partitioning import spread
 
 N_HASHES = 16
@@ -469,24 +465,21 @@ def duplicate_clusters(
     per-query path). If the loop exits WITHOUT reaching fixpoint, raises
     RuntimeError rather than silently returning a component split across
     labels."""
-    edges = (
-        pairs.select("id_a", "id_b")
-        .unionByName(
-            pairs.select(
-                F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b")
+    with caching.held() as h:
+        edges = h.persist(
+            pairs.select("id_a", "id_b")
+            .unionByName(
+                pairs.select(
+                    F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b")
+                )
             )
+            .distinct()
         )
-        .distinct()
-        .persist()
-    )
-    labels = (
-        edges.select(F.col("id_a").alias("doc_id"))
-        .distinct()
-        .withColumn("cluster", F.col("doc_id"))
-        .persist()
-    )
-    converged = False
-    try:
+        labels = h.persist(
+            edges.select(F.col("id_a").alias("doc_id"))
+            .distinct()
+            .withColumn("cluster", F.col("doc_id"))
+        )
         for it in range(max_iters):
             neighbor_min = (
                 edges.join(
@@ -536,37 +529,25 @@ def duplicate_clusters(
                 # cut the lineage: without this, each iteration's plan
                 # nests the previous one's and planning cost grows
                 # linearly
-                new_labels = tracked_local_checkpoint(new_labels)
+                new_labels = h.cut(new_labels)
             else:
-                new_labels = new_labels.persist()
+                new_labels = h.persist(new_labels)
             converged = new_labels.where(F.col("_chg")).isEmpty()
-            _drop(labels)
+            h.free(labels)
             # keep the materialized HANDLE (freeing needs it); every loop
             # consumer selects its columns explicitly, so _chg rides along
             labels = new_labels
             if converged:
                 break
-    finally:
-        edges.unpersist()
-        if not converged:
-            _drop(labels)
-    if not converged:
-        raise RuntimeError(
-            f"duplicate_clusters did not converge in {max_iters} iterations"
-            " — raise max_iters (component diameter exceeds 2^max_iters)"
-        )
-    out = labels.select("doc_id", "cluster")
-    # hand ownership to the caller's action; release on next tracked cycle.
-    # `out` is a projection, so releasing it frees nothing of labels:
-    # register the labels handle too (persisted or checkpointed)
-    _ = tracked_persist(out)
-    track_release(labels)
-    return out
-
-
-def _drop(df: DataFrame) -> None:
-    df.unpersist()
-    free_local_checkpoint(df)
+        else:
+            raise RuntimeError(
+                f"duplicate_clusters did not converge in {max_iters} iterations"
+                " — raise max_iters (component diameter exceeds 2^max_iters)"
+            )
+        # the caller's action reads the projection, which reads the labels
+        # handle: both have session lifetime
+        h.keep(labels)
+        return tracked_persist(labels.select("doc_id", "cluster"))
 
 
 def cluster_survivors(

@@ -40,10 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from basic_data_pipeline_spark.streaming import swapstore as _swapstore
-from basic_data_pipeline_spark.caching import (
-    free_local_checkpoint,
-    tracked_local_checkpoint,
-)
+from basic_data_pipeline_spark import caching
 from basic_data_pipeline_spark.operators import audio, indexspec
 
 SPEC = indexspec.AUDIO
@@ -80,22 +77,22 @@ def build_audio_index(
     to match) but are never indexed. ``max_hash_df`` caps hot hashes
     both for the self-match and for what the index retains, so a
     boilerplate-heavy corpus is bounded at build time."""
-    fps = tracked_local_checkpoint(
-        _cap_hot(
-            audio.audio_fingerprints(media, id_col=id_col), max_hash_df
+    with caching.held() as h:
+        fps = h.cut(
+            _cap_hot(
+                audio.audio_fingerprints(media, id_col=id_col), max_hash_df
+            )
         )
-    )
-    pairs = audio.audio_match_pairs(fps, min_votes=min_votes, max_hash_df=None)
-    dropped = pairs.select(F.col("id_b").alias("media_id")).distinct()
-    survivors = tracked_local_checkpoint(
-        fps.join(dropped, "media_id", "left_anti")
-    )
-    meta = {"n_buckets": n_buckets, "id_col": id_col}
-    SPEC.write(survivors, index_path, "fps", meta, mode="overwrite")
-    meta["max_id"] = media.agg(F.max(id_col)).first()[0]
-    SPEC.write_meta(index_path, meta)
-    free_local_checkpoint(fps)
-    return survivors
+        pairs = audio.audio_match_pairs(fps, min_votes=min_votes, max_hash_df=None)
+        dropped = pairs.select(F.col("id_b").alias("media_id")).distinct()
+        survivors = h.cut(
+            fps.join(dropped, "media_id", "left_anti")
+        )
+        meta = {"n_buckets": n_buckets, "id_col": id_col}
+        SPEC.write(survivors, index_path, "fps", meta, mode="overwrite")
+        meta["max_id"] = media.agg(F.max(id_col)).first()[0]
+        SPEC.write_meta(index_path, meta)
+        return h.keep(survivors)
 
 
 def read_audio_index(
@@ -139,40 +136,39 @@ def incremental_audio_dedup(
         if "fhash" in new_media.columns
         else audio.audio_fingerprints(new_media, id_col=id_col)
     )
-    fps = tracked_local_checkpoint(_cap_hot(raw, max_hash_df))
+    with caching.held() as h:
+        fps = h.cut(_cap_hot(raw, max_hash_df))
 
-    cross_votes = (
-        idx.select(F.col("media_id").alias("_cid"), F.col("t").alias("_tc"), "fhash")
-        .join(
-            fps.select(
-                F.col("media_id").alias("_nid"), F.col("t").alias("_tn"), "fhash"
-            ),
-            "fhash",
+        cross_votes = (
+            idx.select(F.col("media_id").alias("_cid"), F.col("t").alias("_tc"), "fhash")
+            .join(
+                fps.select(
+                    F.col("media_id").alias("_nid"), F.col("t").alias("_tn"), "fhash"
+                ),
+                "fhash",
+            )
+            .groupBy("_cid", "_nid", (F.col("_tc") - F.col("_tn")).alias("_off"))
+            .agg(F.count("*").alias("_v"))
+            .filter(F.col("_v") >= min_votes)
+            .select(F.col("_nid").alias("media_id"))
+            .distinct()
         )
-        .groupBy("_cid", "_nid", (F.col("_tc") - F.col("_tn")).alias("_off"))
-        .agg(F.count("*").alias("_v"))
-        .filter(F.col("_v") >= min_votes)
-        .select(F.col("_nid").alias("media_id"))
-        .distinct()
-    )
-    within = (
-        audio.audio_match_pairs(fps, min_votes=min_votes, max_hash_df=None)
-        .select(F.col("id_b").alias("media_id"))
-        .distinct()
-    )
-    # lineage cut BEFORE the index append (the post-append self-match
-    # hazard — see operators/incremental_images.py)
-    dropped = tracked_local_checkpoint(
-        cross_votes.unionByName(within).distinct()
-    )
-    survivors = tracked_local_checkpoint(
-        fps.join(dropped, "media_id", "left_anti")
-    )
-    if update_index:
-        SPEC.write(survivors, index_path, "fps", meta)
-    free_local_checkpoint(fps)
-    free_local_checkpoint(dropped)
-    return survivors
+        within = (
+            audio.audio_match_pairs(fps, min_votes=min_votes, max_hash_df=None)
+            .select(F.col("id_b").alias("media_id"))
+            .distinct()
+        )
+        # lineage cut BEFORE the index append (the post-append self-match
+        # hazard — see operators/incremental_images.py)
+        dropped = h.cut(
+            cross_votes.unionByName(within).distinct()
+        )
+        survivors = h.cut(
+            fps.join(dropped, "media_id", "left_anti")
+        )
+        if update_index:
+            SPEC.write(survivors, index_path, "fps", meta)
+        return h.keep(survivors)
 
 
 def compact_audio_index(spark: SparkSession, index_path: str) -> dict:

@@ -40,10 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from basic_data_pipeline_spark.streaming import swapstore as _swapstore
-from basic_data_pipeline_spark.caching import (
-    free_local_checkpoint,
-    tracked_local_checkpoint,
-)
+from basic_data_pipeline_spark import caching
 from basic_data_pipeline_spark.operators import images, indexspec
 
 SPEC = indexspec.IMAGE
@@ -84,23 +81,22 @@ def build_image_index(
     this module avoids (the operators/incremental.py convention); a
     corpus whose band buckets run hot should rebuild with a smaller
     budget instead."""
-    hashes = tracked_local_checkpoint(
-        images.image_hashes(media, method=method, id_col=id_col)
-        if "ihash" not in media.columns
-        else media.select(id_col, "width", "height", "ihash")
-    )
-    pairs = images.image_near_dup_pairs(hashes, max_hamming, id_col=id_col)
-    dropped = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    survivors = hashes.join(dropped, id_col, "left_anti")
-    meta = {"max_hamming": max_hamming, "method": method,
-            "n_buckets": n_buckets, "id_col": id_col}
-    SPEC.write(images.hash_bands(survivors, max_hamming, id_col=id_col),
-               index_path, "bands", meta, mode="overwrite")
-    meta["max_id"] = media.agg(F.max(id_col)).first()[0]
-    SPEC.write_meta(index_path, meta)
-    out = tracked_local_checkpoint(survivors)
-    free_local_checkpoint(hashes)
-    return out
+    with caching.held() as h:
+        hashes = h.cut(
+            images.image_hashes(media, method=method, id_col=id_col)
+            if "ihash" not in media.columns
+            else media.select(id_col, "width", "height", "ihash")
+        )
+        pairs = images.image_near_dup_pairs(hashes, max_hamming, id_col=id_col)
+        dropped = pairs.select(F.col("id_b").alias(id_col)).distinct()
+        survivors = hashes.join(dropped, id_col, "left_anti")
+        meta = {"max_hamming": max_hamming, "method": method,
+                "n_buckets": n_buckets, "id_col": id_col}
+        SPEC.write(images.hash_bands(survivors, max_hamming, id_col=id_col),
+                   index_path, "bands", meta, mode="overwrite")
+        meta["max_id"] = media.agg(F.max(id_col)).first()[0]
+        SPEC.write_meta(index_path, meta)
+        return h.keep(h.cut(survivors))
 
 
 def read_image_index(
@@ -136,45 +132,44 @@ def incremental_image_dedup(
     id_col, mh = meta["id_col"], meta["max_hamming"]
     idx = SPEC.register(spark, index_path, "bands", meta)
 
-    hashes = tracked_local_checkpoint(
-        _hash_or_passthrough(new_media, id_col)
-    )
-    new_bands = images.hash_bands(hashes, mh, id_col=id_col)
-
-    cross_dropped = (
-        idx.select("bi", "bv", F.col("ihash").alias("_ch"))
-        .join(
-            new_bands.select(
-                "bi", "bv", F.col(id_col), F.col("ihash").alias("_nh")
-            ),
-            ["bi", "bv"],
+    with caching.held() as h:
+        hashes = h.cut(
+            _hash_or_passthrough(new_media, id_col)
         )
-        .filter(F.bit_count(F.col("_ch").bitwiseXOR(F.col("_nh"))) <= mh)
-        .select(id_col)
-        .distinct()
-    )
-    within_dropped = (
-        images.image_near_dup_pairs(hashes, mh, id_col=id_col)
-        .select(F.col("id_b").alias(id_col))
-        .distinct()
-    )
-    # lineage cut BEFORE the index append: left lazy, a post-append
-    # re-evaluation would see the batch's own band rows in the index
-    # and drop every survivor as its own duplicate (the same hazard
-    # operators/incremental.py materializes staging parquets for; the
-    # dropped-id frame here is small enough for an eager checkpoint)
-    dropped = tracked_local_checkpoint(
-        cross_dropped.unionByName(within_dropped).distinct()
-    )
-    survivors = tracked_local_checkpoint(
-        hashes.join(dropped, id_col, "left_anti")
-    )
-    if update_index:
-        SPEC.write(images.hash_bands(survivors, mh, id_col=id_col),
-                   index_path, "bands", meta)
-    free_local_checkpoint(hashes)
-    free_local_checkpoint(dropped)
-    return survivors
+        new_bands = images.hash_bands(hashes, mh, id_col=id_col)
+
+        cross_dropped = (
+            idx.select("bi", "bv", F.col("ihash").alias("_ch"))
+            .join(
+                new_bands.select(
+                    "bi", "bv", F.col(id_col), F.col("ihash").alias("_nh")
+                ),
+                ["bi", "bv"],
+            )
+            .filter(F.bit_count(F.col("_ch").bitwiseXOR(F.col("_nh"))) <= mh)
+            .select(id_col)
+            .distinct()
+        )
+        within_dropped = (
+            images.image_near_dup_pairs(hashes, mh, id_col=id_col)
+            .select(F.col("id_b").alias(id_col))
+            .distinct()
+        )
+        # lineage cut BEFORE the index append: left lazy, a post-append
+        # re-evaluation would see the batch's own band rows in the index
+        # and drop every survivor as its own duplicate (the same hazard
+        # operators/incremental.py materializes staging parquets for; the
+        # dropped-id frame here is small enough for an eager checkpoint)
+        dropped = h.cut(
+            cross_dropped.unionByName(within_dropped).distinct()
+        )
+        survivors = h.cut(
+            hashes.join(dropped, id_col, "left_anti")
+        )
+        if update_index:
+            SPEC.write(images.hash_bands(survivors, mh, id_col=id_col),
+                       index_path, "bands", meta)
+        return h.keep(survivors)
 
 
 def compact_image_index(spark: SparkSession, index_path: str) -> dict:

@@ -61,10 +61,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from basic_data_pipeline_spark.streaming import swapstore as _swapstore
-from basic_data_pipeline_spark.caching import (
-    free_local_checkpoint,
-    tracked_local_checkpoint,
-)
+from basic_data_pipeline_spark import caching
 from basic_data_pipeline_spark.operators import indexspec
 
 SPEC = indexspec.GRAPH
@@ -134,20 +131,20 @@ def build_graph_index(
         connected_components,
     )
 
-    e = tracked_local_checkpoint(_norm_edges(edges, src, dst))
-    labels = connected_components(e).select(
-        "node",
-        F.col("component").alias("label"),
-        F.lit(None).cast("long").alias("_wm"),
-    )
-    meta = {"n_buckets": n_buckets}
-    SPEC.write(e, index_path, "edges", meta, mode="overwrite")
-    SPEC.write(labels, index_path, "labels", meta, mode="overwrite")
-    _empty_merges(spark, index_path, dict(e.dtypes)["src"])
-    meta["max_id"] = e.agg(F.max(F.greatest("src", "dst"))).first()[0]
-    SPEC.write_meta(index_path, meta)
-    free_local_checkpoint(e)
-    return labels.select("node", "label")
+    with caching.held() as h:
+        e = h.cut(_norm_edges(edges, src, dst))
+        labels = connected_components(e).select(
+            "node",
+            F.col("component").alias("label"),
+            F.lit(None).cast("long").alias("_wm"),
+        )
+        meta = {"n_buckets": n_buckets}
+        SPEC.write(e, index_path, "edges", meta, mode="overwrite")
+        SPEC.write(labels, index_path, "labels", meta, mode="overwrite")
+        _empty_merges(spark, index_path, dict(e.dtypes)["src"])
+        meta["max_id"] = e.agg(F.max(F.greatest("src", "dst"))).first()[0]
+        SPEC.write_meta(index_path, meta)
+        return labels.select("node", "label")
 
 
 @_swapstore.leased("index_path", owner="batch:incremental_linkgraph.add_edges")
@@ -171,96 +168,92 @@ def add_edges(
     idx_e = SPEC.register(spark, index_path, "edges", meta)
     idx_l = SPEC.register(spark, index_path, "labels", meta)
 
-    fresh = tracked_local_checkpoint(
-        _norm_edges(new_edges, src, dst).join(
-            idx_e, ["src", "dst"], "left_anti"
+    with caching.held() as h:
+        fresh = h.cut(
+            _norm_edges(new_edges, src, dst).join(
+                idx_e, ["src", "dst"], "left_anti"
+            )
         )
-    )
-    if wm is None:
-        wm = fresh.agg(F.max("src")).first()[0]
-        if wm is None:  # empty batch — free the checkpoint just taken
-            free_local_checkpoint(fresh)
-            return spark.createDataFrame(
-                [], idx_l.select("node", "label").schema
-            ).withColumnRenamed("label", "component")
-    node_t = dict(idx_l.dtypes)["node"]
-    fold = load_alias_map(spark, index_path)
-    al = _alias_df(spark, fold, node_t)
+        if wm is None:
+            wm = fresh.agg(F.max("src")).first()[0]
+            if wm is None:  # empty batch
+                return spark.createDataFrame(
+                    [], idx_l.select("node", "label").schema
+                ).withColumnRenamed("label", "component")
+        node_t = dict(idx_l.dtypes)["node"]
+        fold = load_alias_map(spark, index_path)
+        al = _alias_df(spark, fold, node_t)
 
-    ends = (
-        fresh.select(F.col("src").alias("node"))
-        .union(fresh.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    # current labels for touched endpoints: base label -> folded merge
-    # map (broadcast), unseen node -> itself
-    cur = tracked_local_checkpoint(
-        ends.join(idx_l.select("node", "label"), "node", "left")
-        .withColumn("_base", F.coalesce("label", F.col("node")))
-        .join(
-            F.broadcast(al).withColumnRenamed("a_old", "_base"),
-            "_base",
-            "left",
+        ends = (
+            fresh.select(F.col("src").alias("node"))
+            .union(fresh.select(F.col("dst").alias("node")))
+            .distinct()
         )
-        .select(
+        # current labels for touched endpoints: base label -> folded merge
+        # map (broadcast), unseen node -> itself
+        cur = h.cut(
+            ends.join(idx_l.select("node", "label"), "node", "left")
+            .withColumn("_base", F.coalesce("label", F.col("node")))
+            .join(
+                F.broadcast(al).withColumnRenamed("a_old", "_base"),
+                "_base",
+                "left",
+            )
+            .select(
+                "node",
+                F.coalesce("a_new", F.col("_base")).alias("cur"),
+                F.col("label").isNull().alias("is_new"),
+            )
+        )
+        # contracted merge graph: one row per fresh edge, endpoints -> cur
+        s = cur.select(F.col("node").alias("src"), F.col("cur").alias("_ca"))
+        d = cur.select(F.col("node").alias("dst"), F.col("cur").alias("_cb"))
+        contracted = (
+            fresh.join(s, "src").join(d, "dst")
+            .where(F.col("_ca") != F.col("_cb"))
+            .select(F.col("_ca").alias("id_a"), F.col("_cb").alias("id_b"))
+            .distinct()
+        )
+        merged = duplicate_clusters(contracted)  # (doc_id, cluster=min label)
+        new_map = h.cut(
+            merged.where(F.col("doc_id") != F.col("cluster")).select(
+                F.col("doc_id").alias("m_old"), F.col("cluster").alias("m_new")
+            )
+        )
+        # resolved view of the batch's endpoints (post-merge)
+        resolved = h.cut(
+            cur.join(
+                F.broadcast(new_map).withColumnRenamed("m_old", "cur"),
+                "cur",
+                "left",
+            ).select(
+                "node",
+                F.coalesce("m_new", F.col("cur")).alias("component"),
+                "is_new",
+            )
+        )
+        # -- index mutations: all appends, all cut by one watermark --------
+        SPEC.write(fresh, index_path, "edges", meta)
+        new_labels = resolved.where("is_new").select(
             "node",
-            F.coalesce("a_new", F.col("_base")).alias("cur"),
-            F.col("label").isNull().alias("is_new"),
+            F.col("component").alias("label"),
+            F.lit(wm).cast("long").alias("_wm"),
         )
-    )
-    # contracted merge graph: one row per fresh edge, endpoints -> cur
-    s = cur.select(F.col("node").alias("src"), F.col("cur").alias("_ca"))
-    d = cur.select(F.col("node").alias("dst"), F.col("cur").alias("_cb"))
-    contracted = (
-        fresh.join(s, "src").join(d, "dst")
-        .where(F.col("_ca") != F.col("_cb"))
-        .select(F.col("_ca").alias("id_a"), F.col("_cb").alias("id_b"))
-        .distinct()
-    )
-    merged = duplicate_clusters(contracted)  # (doc_id, cluster=min label)
-    new_map = tracked_local_checkpoint(
-        merged.where(F.col("doc_id") != F.col("cluster")).select(
-            F.col("doc_id").alias("m_old"), F.col("cluster").alias("m_new")
+        SPEC.write(new_labels, index_path, "labels", meta)
+        # merge-log append: only for superseded labels that can appear in
+        # labels/ — a brand-new node's label row was appended already
+        # resolved, so its id never needs an alias entry
+        batch_new = resolved.where("is_new").select(
+            F.col("node").alias("m_old")
         )
-    )
-    # resolved view of the batch's endpoints (post-merge)
-    resolved = tracked_local_checkpoint(
-        cur.join(
-            F.broadcast(new_map).withColumnRenamed("m_old", "cur"),
-            "cur",
-            "left",
-        ).select(
-            "node",
-            F.coalesce("m_new", F.col("cur")).alias("component"),
-            "is_new",
+        new_map.join(batch_new, "m_old", "left_anti").select(
+            F.col("m_old").alias("old"),
+            F.col("m_new").alias("new"),
+            F.lit(wm).cast("long").alias("_wm"),
+        ).coalesce(1).write.mode("append").parquet(
+            SPEC.path(index_path, "merges")
         )
-    )
-    # -- index mutations: all appends, all cut by one watermark --------
-    SPEC.write(fresh, index_path, "edges", meta)
-    new_labels = resolved.where("is_new").select(
-        "node",
-        F.col("component").alias("label"),
-        F.lit(wm).cast("long").alias("_wm"),
-    )
-    SPEC.write(new_labels, index_path, "labels", meta)
-    # merge-log append: only for superseded labels that can appear in
-    # labels/ — a brand-new node's label row was appended already
-    # resolved, so its id never needs an alias entry
-    batch_new = resolved.where("is_new").select(
-        F.col("node").alias("m_old")
-    )
-    new_map.join(batch_new, "m_old", "left_anti").select(
-        F.col("m_old").alias("old"),
-        F.col("m_new").alias("new"),
-        F.lit(wm).cast("long").alias("_wm"),
-    ).coalesce(1).write.mode("append").parquet(
-        SPEC.path(index_path, "merges")
-    )
-    out = resolved.select("node", "component")
-    free_local_checkpoint(fresh)
-    free_local_checkpoint(cur)
-    free_local_checkpoint(new_map)
-    return out
+        return h.keep(resolved).select("node", "component")
 
 
 def components(

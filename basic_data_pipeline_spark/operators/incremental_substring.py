@@ -50,11 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from basic_data_pipeline_spark.streaming import swapstore as _swapstore
-from basic_data_pipeline_spark.caching import (
-    free_local_checkpoint,
-    tracked_local_checkpoint,
-    tracked_persist,
-)
+from basic_data_pipeline_spark import caching
 from basic_data_pipeline_spark.operators import indexspec, substring
 
 SPEC = indexspec.SUBSTRING
@@ -127,55 +123,49 @@ def incremental_substring_dedup(
     id_col, text_col, k = meta["id_col"], meta["text_col"], meta["k"]
     idx = SPEC.register(spark, index_path, "grams", meta)
 
-    occ = tracked_persist(
-        substring.gram_occurrences(batch, id_col, text_col, k)
-    )
-    # grams the corpus has seen: every batch occurrence is covered
-    covered_known = occ.join(idx, "gram", "left_semi").select(id_col, "pos")
-    # new grams: batch-local first survives; repeats within the batch
-    # are covered (batch order IS global order — ids are monotone)
-    new_occ = tracked_persist(
-        occ.join(idx, "gram", "left_anti")
-    )
-    firsts = tracked_persist(_first_per_gram(new_occ, id_col))
-    covered_new = (
-        new_occ.join(firsts, "gram")
-        .filter(
-            ~(
-                (F.col(id_col) == F.col("doc"))
-                & (F.col("pos") == F.col("fpos"))
-            )
+    with caching.held() as h:
+        occ = h.persist(
+            substring.gram_occurrences(batch, id_col, text_col, k)
         )
-        .select(id_col, "pos")
-    )
-    dup = covered_known.unionByName(covered_new)
-    out = substring.remove_spans(
-        batch,
-        substring.merge_window_spans(dup, k, id_col),
-        id_col,
-        text_col,
-    )
-    # Pin results BEFORE the index grows — and break lineage, not just
-    # cache: the plan reads the catalog gram table, and the append below
-    # INVALIDATES any cache entry that references it (Spark uncaches
-    # dependent plans on table writes), so a mere persist would silently
-    # recompute against the post-append index and see the batch's own
-    # grams as "already known" (= everything covered, empty output).
-    # localCheckpoint is an eager physical materialization with no
-    # logical plan left to invalidate. TRACKED form: checkpoint blocks
-    # live at the RDD level where plain unpersist is a no-op, so a
-    # long-lived stream would otherwise accumulate two checkpoints'
-    # blocks per micro-batch until driver GC.
-    out = tracked_local_checkpoint(out)
-    # firsts feeds the append next; checkpoint it off the table plan too
-    # so writing it cannot race its own invalidation mid-job
-    firsts = tracked_local_checkpoint(firsts)
-    SPEC.write(firsts, index_path, "grams", meta)
-    # the append consumed firsts — free its checkpoint blocks now; out's
-    # are freed by the streaming skeleton after the epoch output write
-    # (batch callers keep out alive until they drop the frame)
-    free_local_checkpoint(firsts)
-    return out
+        # grams the corpus has seen: every batch occurrence is covered
+        covered_known = occ.join(idx, "gram", "left_semi").select(id_col, "pos")
+        # new grams: batch-local first survives; repeats within the batch
+        # are covered (batch order IS global order — ids are monotone)
+        new_occ = h.persist(occ.join(idx, "gram", "left_anti"))
+        firsts = h.persist(_first_per_gram(new_occ, id_col))
+        covered_new = (
+            new_occ.join(firsts, "gram")
+            .filter(
+                ~(
+                    (F.col(id_col) == F.col("doc"))
+                    & (F.col("pos") == F.col("fpos"))
+                )
+            )
+            .select(id_col, "pos")
+        )
+        dup = covered_known.unionByName(covered_new)
+        out = substring.remove_spans(
+            batch,
+            substring.merge_window_spans(dup, k, id_col),
+            id_col,
+            text_col,
+        )
+        # Pin results BEFORE the index grows — and break lineage, not just
+        # cache: the plan reads the catalog gram table, and the append below
+        # INVALIDATES any cache entry that references it (Spark uncaches
+        # dependent plans on table writes), so a mere persist would silently
+        # recompute against the post-append index and see the batch's own
+        # grams as "already known" (= everything covered, empty output).
+        # localCheckpoint is an eager physical materialization with no
+        # logical plan left to invalidate. The result has session
+        # lifetime: the guarded stream frees it once the epoch's output
+        # is written (batch callers: the next release_persisted).
+        out = h.keep(h.cut(out))
+        # firsts feeds the append next; checkpoint it off the table plan too
+        # so writing it cannot race its own invalidation mid-job
+        firsts = h.cut(firsts)
+        SPEC.write(firsts, index_path, "grams", meta)
+        return out
 
 
 def compact_index(spark: SparkSession, index_path: str) -> dict:

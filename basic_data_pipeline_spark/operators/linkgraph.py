@@ -27,12 +27,14 @@ crawl graphs):
   reuses that cached layout, so the per-iteration shuffle cost is the
   node-sized ranks frame plus the contribution groupBy on ``dst`` —
   never a re-shuffle of the edge set.
-* **Ranks are node-sized.** Each iteration ends in a
-  tracked_local_checkpoint (caching.py): the plan stays O(1) deep
-  instead of growing one join tree per iteration (the round-5
-  duplicate_clusters lesson), and the previous iteration's checkpoint
-  blocks are freed immediately (free_local_checkpoint) so k iterations
-  hold 1 ranks copy, not k.
+* **Ranks are node-sized.** Each iteration ends in a lineage cut
+  (``caching.held``'s ``step``): the plan stays O(1) deep instead of
+  growing one join tree per iteration (the round-5 duplicate_clusters
+  lesson), and the previous iteration's checkpoint blocks are freed
+  immediately, so k iterations hold 1 ranks copy, not k. Every
+  operator here holds its edge layouts and per-round frames in one
+  ``caching.held()`` scope, so any exit frees them; the result has
+  session lifetime (freed by the next ``release_persisted``).
 * **The dangling-mass term stays in-plan**: a one-row aggregate
   crossJoin-broadcast back onto the nodes frame — no driver collect
   inside the loop. The only driver action is one ``nodes.count()``
@@ -54,7 +56,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 from pyspark.storagelevel import StorageLevel
 
-from ..caching import free_local_checkpoint, tracked_local_checkpoint
+from .. import caching
 
 __all__ = [
     "extract_links",
@@ -236,120 +238,114 @@ def pagerank(
     num, den = damping
     if not (0 < num < den):
         raise ValueError(f"damping must satisfy 0 < num < den: {damping}")
-    e = edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
-    # the big side: partition by join key once, reuse every iteration
-    e = e.repartition("_src").persist(StorageLevel.MEMORY_AND_DISK)
-    deg = e.groupBy("_src").agg(F.count("*").alias("out_deg"))
-    if nodes is None:
-        base_nodes = (
-            e.select(F.col("_src").alias("node"))
-            .union(e.select(F.col("_dst").alias("node")))
-            .distinct()
-        )
-    else:
-        base_nodes = nodes.select(F.col(node_col).alias("node")).distinct()
-    with_deg = base_nodes.join(
-        deg, base_nodes.node == deg._src, "left"
-    ).select("node", F.coalesce("out_deg", F.lit(0)).alias("out_deg"))
-    if teleport_weights is not None:
-        w = teleport_weights.select(
-            F.col(node_col).alias("_wnode"),
-            F.col(weight_col).cast("long").alias("_w"),
-        )
-        with_deg = with_deg.join(
-            w, with_deg.node == w._wnode, "left"
-        ).select(
-            "node", "out_deg", F.coalesce("_w", F.lit(0)).alias("_w")
-        )
-    else:
-        with_deg = with_deg.withColumn("_w", F.lit(1).cast("long"))
-    node_frame = tracked_local_checkpoint(with_deg.repartition("node"))
-    # BOTH driver scalars (node count + total teleport weight) in one
-    # action over the just-checkpointed frame (r11: each extra action
-    # costs the ~0.25 s job floor at control-frame sizes)
-    scal = node_frame.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum("_w"), F.lit(0)).cast("long").alias("s"),
-    ).collect()[0]
-    n = scal["n"]
-    if n == 0:
-        # build the empty result BEFORE freeing the checkpoint it
-        # borrows its node type from
-        empty = node_frame.sparkSession.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    node_frame.schema["node"],
-                    T.StructField("rank", T.LongType()),
-                    T.StructField("out_deg", T.LongType()),
-                ]
-            ),
-        )
-        e.unpersist()
-        free_local_checkpoint(node_frame)
-        return empty
-    # total teleport weight (n in the uniform case); per-node
-    # teleport/base are cheap expressions re-derived from the
-    # checkpointed _w each round, never re-shuffled
-    wsum = scal["s"]
-    if wsum <= 0:
-        e.unpersist()
-        free_local_checkpoint(node_frame)
-        raise ValueError(
-            "teleport weights sum to 0 — no node can receive mass"
-        )
-    base_col = F.expr(f"({scale} * _w) div {wsum}")
-    tp_col = F.expr(
-        f"({den - num} * (({scale} * _w) div {wsum})) div {den}"
-    )
-    # round-0 ranks are a trivial projection of the checkpointed node
-    # frame — no checkpoint of their own (r11): round 1 recomputes the
-    # projection from cache at both consumption sites for less than one
-    # job floor costs (free_local_checkpoint on a non-checkpoint view is
-    # a documented no-op)
-    ranks = node_frame.select(
-        "node", base_col.cast("long").alias("rank"), "out_deg"
-    )
-    for _ in range(iterations):
-        dangling = ranks.filter(F.col("out_deg") == 0).agg(
-            F.coalesce(F.sum("rank"), F.lit(0)).cast("long").alias("_dm")
-        )
-        contrib = (
-            e.join(
-                ranks.select(
-                    F.col("node").alias("_src"), "rank", "out_deg"
+    with caching.held() as h:
+        e = edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
+        # the big side: partition by join key once, reuse every iteration
+        e = h.persist(e.repartition("_src"), StorageLevel.MEMORY_AND_DISK)
+        deg = e.groupBy("_src").agg(F.count("*").alias("out_deg"))
+        if nodes is None:
+            base_nodes = (
+                e.select(F.col("_src").alias("node"))
+                .union(e.select(F.col("_dst").alias("node")))
+                .distinct()
+            )
+        else:
+            base_nodes = nodes.select(F.col(node_col).alias("node")).distinct()
+        with_deg = base_nodes.join(
+            deg, base_nodes.node == deg._src, "left"
+        ).select("node", F.coalesce("out_deg", F.lit(0)).alias("out_deg"))
+        if teleport_weights is not None:
+            w = teleport_weights.select(
+                F.col(node_col).alias("_wnode"),
+                F.col(weight_col).cast("long").alias("_w"),
+            )
+            with_deg = with_deg.join(
+                w, with_deg.node == w._wnode, "left"
+            ).select(
+                "node", "out_deg", F.coalesce("_w", F.lit(0)).alias("_w")
+            )
+        else:
+            with_deg = with_deg.withColumn("_w", F.lit(1).cast("long"))
+        node_frame = h.cut(with_deg.repartition("node"))
+        # BOTH driver scalars (node count + total teleport weight) in one
+        # action over the just-checkpointed frame (r11: each extra action
+        # costs the ~0.25 s job floor at control-frame sizes)
+        scal = node_frame.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(F.sum("_w"), F.lit(0)).cast("long").alias("s"),
+        ).collect()[0]
+        n = scal["n"]
+        if n == 0:
+            # built before the scope frees the checkpoint it borrows its
+            # node type from
+            return node_frame.sparkSession.createDataFrame(
+                [],
+                T.StructType(
+                    [
+                        node_frame.schema["node"],
+                        T.StructField("rank", T.LongType()),
+                        T.StructField("out_deg", T.LongType()),
+                    ]
                 ),
-                "_src",
             )
-            .select("_dst", F.expr("rank div out_deg").alias("_c"))
-            .groupBy("_dst")
-            .agg(F.sum("_c").alias("_contrib"))
+        # total teleport weight (n in the uniform case); per-node
+        # teleport/base are cheap expressions re-derived from the
+        # checkpointed _w each round, never re-shuffled
+        wsum = scal["s"]
+        if wsum <= 0:
+            raise ValueError(
+                "teleport weights sum to 0 — no node can receive mass"
+            )
+        base_col = F.expr(f"({scale} * _w) div {wsum}")
+        tp_col = F.expr(
+            f"({den - num} * (({scale} * _w) div {wsum})) div {den}"
         )
-        nxt = tracked_local_checkpoint(
-            node_frame.join(
-                contrib, node_frame.node == contrib._dst, "left"
-            )
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    tp_col
-                    + F.expr(
-                        f"({num} * (coalesce(_contrib, 0L)"
-                        f" + (_dm * _w) div {wsum})) div {den}"
-                    )
-                ).cast("long").alias("rank"),
-                "out_deg",
-            )
+        # round-0 ranks are a trivial projection of the checkpointed node
+        # frame — no checkpoint of their own (r11): round 1 recomputes the
+        # projection from cache at both consumption sites for less than one
+        # job floor costs (stepping off a view the scope does not hold
+        # frees nothing)
+        ranks = node_frame.select(
+            "node", base_col.cast("long").alias("rank"), "out_deg"
         )
-        free_local_checkpoint(ranks)
-        ranks = nxt
-    if iterations == 0:
-        # round-0 ranks are a view over node_frame, which is freed below
-        ranks = tracked_local_checkpoint(ranks)
-    e.unpersist()
-    free_local_checkpoint(node_frame)
-    return ranks
+        for _ in range(iterations):
+            dangling = ranks.filter(F.col("out_deg") == 0).agg(
+                F.coalesce(F.sum("rank"), F.lit(0)).cast("long").alias("_dm")
+            )
+            contrib = (
+                e.join(
+                    ranks.select(
+                        F.col("node").alias("_src"), "rank", "out_deg"
+                    ),
+                    "_src",
+                )
+                .select("_dst", F.expr("rank div out_deg").alias("_c"))
+                .groupBy("_dst")
+                .agg(F.sum("_c").alias("_contrib"))
+            )
+            ranks = h.step(
+                ranks,
+                node_frame.join(
+                    contrib, node_frame.node == contrib._dst, "left"
+                )
+                .crossJoin(F.broadcast(dangling))
+                .select(
+                    "node",
+                    (
+                        tp_col
+                        + F.expr(
+                            f"({num} * (coalesce(_contrib, 0L)"
+                            f" + (_dm * _w) div {wsum})) div {den}"
+                        )
+                    ).cast("long").alias("rank"),
+                    "out_deg",
+                ),
+            )
+        if iterations == 0:
+            # round-0 ranks are a view over node_frame, which the scope
+            # frees
+            ranks = h.cut(ranks)
+        return h.keep(ranks)
 
 
 def pagerank_reference(
@@ -456,74 +452,72 @@ def hits(
     instead of two (r11: at control-frame sizes the ~0.25 s job floor
     dominated; same integer recurrence, bit-identical scores); the
     renormalizers are in-plan one-row max broadcasts."""
-    e = edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
-    e_src = e.repartition("_src").persist(StorageLevel.MEMORY_AND_DISK)
-    e_dst = e.repartition("_dst").persist(StorageLevel.MEMORY_AND_DISK)
-    if nodes is None:
-        base_nodes = (
-            e.select(F.col("_src").alias("node"))
-            .union(e.select(F.col("_dst").alias("node")))
-            .distinct()
-        )
-    else:
-        base_nodes = nodes.select(F.col(node_col).alias("node")).distinct()
-    init = F.lit(1 << keep_bits).cast("long")
-    state = tracked_local_checkpoint(
-        base_nodes.repartition("node").select(
-            "node", init.alias("hub"), F.lit(0).cast("long").alias("auth")
-        )
-    )
-
-    def _half(scores, score_col, e_side, key_in, key_out, out_col):
-        """scores + ``out_col`` recomputed from ``score_col`` through
-        ``e_side`` — a lazy plan fragment; the caller checkpoints."""
-        raw = (
-            e_side.join(
-                scores.select(F.col("node").alias(key_in), score_col),
-                key_in,
+    with caching.held() as h:
+        e = edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
+        e_src = h.persist(e.repartition("_src"), StorageLevel.MEMORY_AND_DISK)
+        e_dst = h.persist(e.repartition("_dst"), StorageLevel.MEMORY_AND_DISK)
+        if nodes is None:
+            base_nodes = (
+                e.select(F.col("_src").alias("node"))
+                .union(e.select(F.col("_dst").alias("node")))
+                .distinct()
             )
-            .groupBy(key_out)
-            .agg(F.sum(score_col).alias("_raw"))
-        )
-        mx = raw.agg(
-            F.coalesce(F.max("_raw"), F.lit(0)).cast("long").alias("_mx")
-        )
-        return (
-            scores.drop(out_col)
-            .join(raw, scores["node"] == raw[key_out], "left")
-            .crossJoin(F.broadcast(mx))
-            .select(
-                scores["node"].alias("node"),
-                *[c for c in scores.columns if c not in ("node", out_col)],
-                F.expr(
-                    f"coalesce(_raw, 0L) div shiftleft(1L, "
-                    f"greatest(length(bin(_mx)) - {keep_bits}, 0))"
-                ).alias(out_col),
+        else:
+            base_nodes = nodes.select(F.col(node_col).alias("node")).distinct()
+        init = F.lit(1 << keep_bits).cast("long")
+        state = h.cut(
+            base_nodes.repartition("node").select(
+                "node", init.alias("hub"), F.lit(0).cast("long").alias("auth")
             )
         )
 
-    for _ in range(iterations):
-        # SCALE TRADEOFF (r11 ADVICE): the first half-step chains into
-        # the second as an UNMATERIALIZED subplan referenced three ways
-        # (scores input, raw, and the mx renormalizer), so one
-        # iteration's job can recompute the hub→auth join+aggregate up
-        # to 3×. Measured FASTER at control-graph sizes (the saved
-        # ~0.25 s checkpoint job floor beats the duplicated tiny
-        # aggregate), but on a 100 TB edge set the duplicated compute
-        # dominates — reintroduce a tracked_local_checkpoint on
-        # `with_auth` (one extra job per iteration) when edge volume,
-        # not scheduling, is the wall.
-        with_auth = _half(state, "hub", e_src, "_src", "_dst", "auth")
-        nxt = tracked_local_checkpoint(
-            _half(with_auth, "auth", e_dst, "_dst", "_src", "hub").select(
-                "node", "hub", "auth"
+        def _half(scores, score_col, e_side, key_in, key_out, out_col):
+            """scores + ``out_col`` recomputed from ``score_col`` through
+            ``e_side`` — a lazy plan fragment; the caller checkpoints."""
+            raw = (
+                e_side.join(
+                    scores.select(F.col("node").alias(key_in), score_col),
+                    key_in,
+                )
+                .groupBy(key_out)
+                .agg(F.sum(score_col).alias("_raw"))
             )
-        )
-        free_local_checkpoint(state)
-        state = nxt
-    e_src.unpersist()
-    e_dst.unpersist()
-    return state
+            mx = raw.agg(
+                F.coalesce(F.max("_raw"), F.lit(0)).cast("long").alias("_mx")
+            )
+            return (
+                scores.drop(out_col)
+                .join(raw, scores["node"] == raw[key_out], "left")
+                .crossJoin(F.broadcast(mx))
+                .select(
+                    scores["node"].alias("node"),
+                    *[c for c in scores.columns if c not in ("node", out_col)],
+                    F.expr(
+                        f"coalesce(_raw, 0L) div shiftleft(1L, "
+                        f"greatest(length(bin(_mx)) - {keep_bits}, 0))"
+                    ).alias(out_col),
+                )
+            )
+
+        for _ in range(iterations):
+            # SCALE TRADEOFF (r11 ADVICE): the first half-step chains into
+            # the second as an UNMATERIALIZED subplan referenced three ways
+            # (scores input, raw, and the mx renormalizer), so one
+            # iteration's job can recompute the hub→auth join+aggregate up
+            # to 3×. Measured FASTER at control-graph sizes (the saved
+            # ~0.25 s checkpoint job floor beats the duplicated tiny
+            # aggregate), but on a 100 TB edge set the duplicated compute
+            # dominates — reintroduce a lineage cut on
+            # `with_auth` (one extra job per iteration) when edge volume,
+            # not scheduling, is the wall.
+            with_auth = _half(state, "hub", e_src, "_src", "_dst", "auth")
+            state = h.step(
+                state,
+                _half(with_auth, "auth", e_dst, "_dst", "_src", "hub").select(
+                    "node", "hub", "auth"
+                ),
+            )
+        return h.keep(state)
 
 
 def hits_reference(
@@ -645,7 +639,7 @@ def strongly_connected_components(
     (hashed by src for the forward join, by dst for the backward join)
     — the pagerank layout-reuse pattern, so per-iteration shuffles move
     only node-sized color/mark frames; every fixpoint iteration ends in
-    a tracked_local_checkpoint with the superseded round's blocks freed
+    a lineage cut with the superseded round's blocks freed
     (plans stay O(1) deep; color/mark storage stays 1×). Driver actions
     are ONE per fixpoint step (r11): each round's change/termination
     signal is a flag column computed inside the frame the round already
@@ -677,54 +671,48 @@ def strongly_connected_components(
     # count() job; pays for itself within a few of the dozens of rounds.
     n_edges = e0.count()
     _parts = max(1, n_edges // 2_000_000 + 1)
-    e_src = e0.repartition(_parts, "_s").persist(StorageLevel.MEMORY_AND_DISK)
-    e_dst = e0.repartition(_parts, "_d").persist(StorageLevel.MEMORY_AND_DISK)
-    nodes = (
-        e0.select(F.col("_s").alias("node"))
-        .union(e0.select(F.col("_d").alias("node")))
-        .distinct()
-    )
-    # Checkpoint hygiene on EVERY exit path (incl. SCCNotConverged and
-    # the edgeless early return): every tracked checkpoint goes through
-    # _ckpt into `held`; the final `out` checkpoint is taken OUTSIDE
-    # held, so the finally block can blanket-free whatever is still
-    # live and unpersist both edge layouts without touching the result.
-    held: list[DataFrame] = []
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        c = tracked_local_checkpoint(df)
-        held.append(c)
-        return c
-
-    def _free(df: DataFrame) -> None:
-        free_local_checkpoint(df)
-        try:
-            held.remove(df)
-        except ValueError:
-            pass
-
-    active = _ckpt(nodes)
-    ae_s, ae_d = e_src, e_dst
-    #: labels checkpointed-so-far (folded once per outer round so the
-    #: round's source checkpoints can be freed) + this round's views
-    done_ck: DataFrame | None = None
-    pending: list[DataFrame] = []
-
-    def _restrict(live: DataFrame):
-        """Live-subgraph edge views, keeping each base layout."""
-        ls = live.select(F.col("node").alias("_ls"))
-        ld = live.select(F.col("node").alias("_ld"))
-        es = (
-            e_src.join(ls, e_src._s == ls._ls, "left_semi")
-            .join(ld, e_src._d == ld._ld, "left_semi")
+    # Two scopes: `h` holds the edge layouts, the live node set and the
+    # running label union; each outer round's own cuts (trim flags,
+    # color and mark frontiers) live in that round's scope `r`. Every
+    # exit — result, edgeless input, SCCNotConverged — frees both.
+    with caching.held() as h:
+        e_src = h.persist(
+            e0.repartition(_parts, "_s"), StorageLevel.MEMORY_AND_DISK
         )
-        ed = (
-            e_dst.join(ls, e_dst._s == ls._ls, "left_semi")
-            .join(ld, e_dst._d == ld._ld, "left_semi")
+        e_dst = h.persist(
+            e0.repartition(_parts, "_d"), StorageLevel.MEMORY_AND_DISK
         )
-        return es, ed
+        nodes = (
+            e0.select(F.col("_s").alias("node"))
+            .union(e0.select(F.col("_d").alias("node")))
+            .distinct()
+        )
+        active = active_ck = h.cut(nodes)
+        ae_s, ae_d = e_src, e_dst
+        #: labels cut so far, folded once per outer round so the round's
+        #: source cuts can be freed
+        done_ck: DataFrame | None = None
 
-    try:
+        def _restrict(live: DataFrame):
+            """Live-subgraph edge views, keeping each base layout."""
+            ls = live.select(F.col("node").alias("_ls"))
+            ld = live.select(F.col("node").alias("_ld"))
+            es = (
+                e_src.join(ls, e_src._s == ls._ls, "left_semi")
+                .join(ld, e_src._d == ld._ld, "left_semi")
+            )
+            ed = (
+                e_dst.join(ls, e_dst._s == ls._ls, "left_semi")
+                .join(ld, e_dst._d == ld._ld, "left_semi")
+            )
+            return es, ed
+
+        def _labels(pending: list[DataFrame]) -> DataFrame | None:
+            out = done_ck
+            for p in pending:
+                out = p if out is None else out.union(p)
+            return out
+
         # JOB-COUNT DISCIPLINE (r11): at control-frame sizes every driver
         # action costs a fixed ~0.25 s job floor, so each loop below
         # folds its change/termination signal INTO the frame it already
@@ -739,161 +727,145 @@ def strongly_connected_components(
         for _round in range(max_rounds):
             if active.isEmpty():
                 break
-            # -- 1. trim to fixpoint -----------------------------------
-            while True:
-                has_out = ae_s.select(F.col("_s").alias("node")).distinct()
-                has_in = ae_d.select(F.col("_d").alias("node")).distinct()
-                both = has_out.join(has_in, "node", "left_semi")
-                # one checkpoint carries BOTH the survivors and the
-                # peeled singletons, flagged (was: two checkpoints +
-                # an isEmpty per peel layer). One layer per round: a
-                # two-layer peel was measured SLOWER (r12 — the doubled
-                # semi-join plan adds more stage latency than the saved
-                # round costs; see OPTIMIZATION_r12.md).
-                flagged = _ckpt(
-                    active.join(
-                        both.withColumn("_keep", F.lit(True)), "node", "left"
-                    ).select(
-                        "node",
-                        F.coalesce("_keep", F.lit(False)).alias("_keep"),
+            with caching.held() as r:
+                #: this round's label views (over r's cuts)
+                pending: list[DataFrame] = []
+                # -- 1. trim to fixpoint -------------------------------
+                while True:
+                    has_out = ae_s.select(F.col("_s").alias("node")).distinct()
+                    has_in = ae_d.select(F.col("_d").alias("node")).distinct()
+                    both = has_out.join(has_in, "node", "left_semi")
+                    # one checkpoint carries BOTH the survivors and the
+                    # peeled singletons, flagged (was: two checkpoints +
+                    # an isEmpty per peel layer). One layer per round: a
+                    # two-layer peel was measured SLOWER (r12 — the
+                    # doubled semi-join plan adds more stage latency than
+                    # the saved round costs; see OPTIMIZATION_r12.md).
+                    flagged = r.cut(
+                        active.join(
+                            both.withColumn("_keep", F.lit(True)),
+                            "node",
+                            "left",
+                        ).select(
+                            "node",
+                            F.coalesce("_keep", F.lit(False)).alias("_keep"),
+                        )
                     )
+                    trivial = flagged.where(~F.col("_keep")).select("node")
+                    if trivial.isEmpty():
+                        break
+                    pending.append(
+                        trivial.select("node", F.col("node").alias("scc_id"))
+                    )
+                    active = flagged.where(F.col("_keep")).select("node")
+                    ae_s, ae_d = _restrict(active)
+                if active.isEmpty():
+                    # a final trim-only round: its labels read this
+                    # round's cuts, so the result is cut before r frees
+                    # them
+                    return h.keep(h.cut(_labels(pending)))
+
+                # -- 2. forward min-color fixpoint ---------------------
+                # One edge-hop per checkpointed round. Composing extra
+                # hops or a pointer-jump (color of my color) into each
+                # round was measured SLOWER at sf0.1 (r12): iterations
+                # dropped 12 → 7 but each extra operator adds shuffle
+                # stages whose latency exceeds the saved round's job
+                # floor. Revisit on a real cluster where per-round data
+                # cost dominates scheduling.
+                color = color_ck = r.cut(
+                    active.select("node", F.col("node").alias("color"))
                 )
-                trivial = flagged.where(~F.col("_keep")).select("node")
-                if trivial.isEmpty():
-                    break
+                for _it in range(max_prop_iters):
+                    incoming = (
+                        ae_s.join(color, ae_s._s == color["node"])
+                        .groupBy(F.col("_d").alias("node"))
+                        .agg(F.min("color").alias("_in_min"))
+                    )
+                    # the changed flag rides in the checkpointed frame: a
+                    # node changed iff an incoming color strictly
+                    # undercuts its own (least() only ever decreases);
+                    # the superseded round's blocks are freed (1× storage)
+                    color_ck = r.step(
+                        color_ck,
+                        color.join(incoming, "node", "left").select(
+                            "node",
+                            F.least(
+                                F.col("color"),
+                                F.coalesce("_in_min", F.col("color")),
+                            ).alias("color"),
+                            (
+                                F.coalesce("_in_min", F.col("color"))
+                                < F.col("color")
+                            ).alias("_chg"),
+                        ),
+                    )
+                    color = color_ck.select("node", "color")
+                    if color_ck.where(F.col("_chg")).isEmpty():
+                        break
+                else:
+                    raise SCCNotConverged(
+                        f"forward coloring did not settle in "
+                        f"{max_prop_iters} iters"
+                    )
+
+                # -- 3. backward sweep within color --------------------
+                mark = mark_ck = r.cut(
+                    color.where(F.col("color") == F.col("node"))
+                )
+                while True:
+                    reached = (
+                        ae_d.join(mark, ae_d._d == mark["node"])
+                        .select(F.col("_s").alias("node"), "color")
+                        .distinct()
+                    )
+                    grew = (
+                        reached.withColumnRenamed("color", "_c")
+                        .join(color, "node")
+                        .where(F.col("_c") == F.col("color"))
+                        .select("node", "color")
+                        .join(mark, "node", "left_anti")
+                    )
+                    # one checkpoint per sweep round: the (disjoint, by
+                    # the anti-join) union of the old frontier and the
+                    # growth, growth flagged (was: checkpoint(grew) +
+                    # isEmpty + checkpoint(union) = 3 actions per round);
+                    # the superseded frontier's blocks are freed
+                    mark_ck = r.step(
+                        mark_ck,
+                        mark.select("node", "color")
+                        .withColumn("_new", F.lit(False))
+                        .unionByName(grew.withColumn("_new", F.lit(True))),
+                    )
+                    mark = mark_ck.select("node", "color")
+                    if mark_ck.where(F.col("_new")).isEmpty():
+                        break
                 pending.append(
-                    trivial.select("node", F.col("node").alias("scc_id"))
+                    mark.select("node", F.col("color").alias("scc_id"))
                 )
-                active = flagged.where(F.col("_keep")).select("node")
-                ae_s, ae_d = _restrict(active)
-            if active.isEmpty():
-                break
-
-            # -- 2. forward min-color fixpoint -------------------------
-            # One edge-hop per checkpointed round. Composing extra hops
-            # or a pointer-jump (color of my color) into each round was
-            # measured SLOWER at sf0.1 (r12): iterations dropped 12 → 7
-            # but each extra operator adds shuffle stages whose latency
-            # exceeds the saved round's job floor. Revisit on a real
-            # cluster where per-round data cost dominates scheduling.
-            color_ck = _ckpt(
-                active.select("node", F.col("node").alias("color"))
-            )
-            color = color_ck
-            for _it in range(max_prop_iters):
-                incoming = (
-                    ae_s.join(color, ae_s._s == color["node"])
-                    .groupBy(F.col("_d").alias("node"))
-                    .agg(F.min("color").alias("_in_min"))
+                # fold this round's labels into the running checkpointed
+                # union, so every per-round cut (trim's flagged frames,
+                # the final color/mark frames — freed as r ends — and the
+                # superseded active set and label union — freed by the
+                # steps) goes NOW: peak cached storage stays ~1× instead
+                # of growing with the round/peel count (r11 ADVICE).
+                # Costs one extra checkpoint per OUTER round; outer
+                # rounds = condensation depth between non-trivial SCCs,
+                # which is shallow.
+                active = active_ck = h.step(
+                    active_ck,
+                    active.join(mark.select("node"), "node", "left_anti"),
                 )
-                # the changed flag rides in the checkpointed frame: a
-                # node changed iff an incoming color strictly undercuts
-                # its own (least() only ever decreases)
-                nxt_ck = _ckpt(
-                    color.join(incoming, "node", "left").select(
-                        "node",
-                        F.least(
-                            F.col("color"),
-                            F.coalesce("_in_min", F.col("color")),
-                        ).alias("color"),
-                        (
-                            F.coalesce("_in_min", F.col("color"))
-                            < F.col("color")
-                        ).alias("_chg"),
-                    )
-                )
-                settled = nxt_ck.where(F.col("_chg")).isEmpty()
-                _free(color_ck)  # superseded round's blocks (1× storage)
-                color_ck = nxt_ck
-                color = nxt_ck.select("node", "color")
-                if settled:
-                    break
-            else:
-                raise SCCNotConverged(
-                    f"forward coloring did not settle in "
-                    f"{max_prop_iters} iters"
-                )
-
-            # -- 3. backward sweep within color ------------------------
-            mark_ck = _ckpt(color.where(F.col("color") == F.col("node")))
-            mark = mark_ck
-            while True:
-                reached = (
-                    ae_d.join(mark, ae_d._d == mark["node"])
-                    .select(F.col("_s").alias("node"), "color")
-                    .distinct()
-                )
-                grew = (
-                    reached.withColumnRenamed("color", "_c")
-                    .join(color, "node")
-                    .where(F.col("_c") == F.col("color"))
-                    .select("node", "color")
-                    .join(mark, "node", "left_anti")
-                )
-                # one checkpoint per sweep round: the (disjoint, by the
-                # anti-join) union of the old frontier and the growth,
-                # growth flagged (was: checkpoint(grew) + isEmpty +
-                # checkpoint(union) = 3 actions per round)
-                nxt_ck = _ckpt(
-                    mark.select("node", "color")
-                    .withColumn("_new", F.lit(False))
-                    .unionByName(grew.withColumn("_new", F.lit(True)))
-                )
-                grown = not nxt_ck.where(F.col("_new")).isEmpty()
-                _free(mark_ck)  # superseded frontier's blocks
-                mark_ck = nxt_ck
-                mark = nxt_ck.select("node", "color")
-                if not grown:
-                    break
-            pending.append(
-                mark.select("node", F.col("color").alias("scc_id"))
-            )
-            nxt = _ckpt(
-                active.join(mark.select("node"), "node", "left_anti")
-            )
-            # fold this round's labels into the running checkpointed
-            # union so every per-round checkpoint (trim's flagged
-            # frames, the final color/mark frames, the superseded
-            # active and previous label union) can be freed NOW — peak
-            # cached storage stays ~1× instead of growing with the
-            # round/peel count (r11 ADVICE). Costs one extra
-            # checkpoint per OUTER round; outer rounds = condensation
-            # depth between non-trivial SCCs, which is shallow.
-            round_labels = pending[0]
-            for p in pending[1:]:
-                round_labels = round_labels.union(p)
-            pending = []
-            done_ck = _ckpt(
-                done_ck.union(round_labels)
-                if done_ck is not None
-                else round_labels
-            )
-            for f in list(held):
-                if f is not nxt and f is not done_ck:
-                    _free(f)
-            active = nxt
+                done_ck = h.step(done_ck, _labels(pending))
             ae_s, ae_d = _restrict(active)
         if not active.isEmpty():
             raise SCCNotConverged(
                 f"condensation deeper than max_rounds={max_rounds}"
             )
-        if done_ck is None and not pending:
+        if done_ck is None:
             # edgeless input: no nodes, empty labeling
             return nodes.select("node", F.col("node").alias("scc_id"))
-        out = done_ck
-        # labels from a final trim-only round were never folded (the
-        # fold runs at full-round ends); their flagged sources are
-        # still `held` — freed by the finally block only AFTER the
-        # return checkpoint below has materialized.
-        for p in pending:
-            out = p if out is None else out.union(p)
-        # taken OUTSIDE `held` — the one checkpoint that must survive
-        return tracked_local_checkpoint(out)
-    finally:
-        for f in list(held):
-            free_local_checkpoint(f)
-        e_src.unpersist()
-        e_dst.unpersist()
+        return h.keep(h.cut(done_ck))
 
 
 def label_propagation(
@@ -922,48 +894,45 @@ def label_propagation(
     key and persisted once; each round is one node-sized label join
     against that layout, one (node, label) count aggregation, and one
     per-node argmax window over label-type-bounded rows; labels end
-    each round in a tracked_local_checkpoint (flat plans, 1× storage).
+    each round in a lineage cut (flat plans, 1× storage).
     """
     from pyspark.sql import Window
 
-    e0 = edges.select(
-        F.col(src).alias("_s"), F.col(dst).alias("_d")
-    ).distinct()
-    und = e0.union(
-        e0.select(F.col("_d").alias("_s"), F.col("_s").alias("_d"))
-    ).where(F.col("_s") != F.col("_d"))
-    und = und.repartition("_s").persist(StorageLevel.MEMORY_AND_DISK)
-    nodes = (
-        e0.select(F.col("_s").alias("node"))
-        .union(e0.select(F.col("_d").alias("node")))
-        .distinct()
-    )
-    labels = tracked_local_checkpoint(
-        nodes.select("node", F.col("node").alias("label"))
-    )
-    w = Window.partitionBy("node").orderBy(
-        F.col("_cnt").desc(), F.col("label").asc()
-    )
-    for _ in range(iterations):
-        neigh = (
-            und.join(labels, und._s == labels.node)
-            .groupBy(F.col("_d").alias("node"), "label")
-            .agg(F.count("*").alias("_cnt"))
+    with caching.held() as h:
+        e0 = edges.select(
+            F.col(src).alias("_s"), F.col(dst).alias("_d")
+        ).distinct()
+        und = e0.union(
+            e0.select(F.col("_d").alias("_s"), F.col("_s").alias("_d"))
+        ).where(F.col("_s") != F.col("_d"))
+        und = h.persist(und.repartition("_s"), StorageLevel.MEMORY_AND_DISK)
+        nodes = (
+            e0.select(F.col("_s").alias("node"))
+            .union(e0.select(F.col("_d").alias("node")))
+            .distinct()
         )
-        best = (
-            neigh.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .select("node", F.col("label").alias("_new"))
+        labels = h.cut(nodes.select("node", F.col("node").alias("label")))
+        w = Window.partitionBy("node").orderBy(
+            F.col("_cnt").desc(), F.col("label").asc()
         )
-        nxt = tracked_local_checkpoint(
-            labels.join(best, "node", "left").select(
-                "node", F.coalesce("_new", F.col("label")).alias("label")
+        for _ in range(iterations):
+            neigh = (
+                und.join(labels, und._s == labels.node)
+                .groupBy(F.col("_d").alias("node"), "label")
+                .agg(F.count("*").alias("_cnt"))
             )
-        )
-        free_local_checkpoint(labels)
-        labels = nxt
-    und.unpersist()
-    return labels
+            best = (
+                neigh.withColumn("_rn", F.row_number().over(w))
+                .where(F.col("_rn") == 1)
+                .select("node", F.col("label").alias("_new"))
+            )
+            labels = h.step(
+                labels,
+                labels.join(best, "node", "left").select(
+                    "node", F.coalesce("_new", F.col("label")).alias("label")
+                ),
+            )
+        return h.keep(labels)
 
 
 def scc_reference(edges: list[tuple]) -> dict:
@@ -1199,64 +1168,61 @@ def coreness(
     Scale shape: the symmetrized edge set is repartitioned by the
     neighbor key and persisted once (the label_propagation layout);
     per-round shuffles move node-sized value frames; values end each
-    round in a tracked_local_checkpoint (flat plans, 1× storage).
+    round in a lineage cut (flat plans, 1× storage).
     """
     from pyspark.sql import Window
 
-    e0 = edges.select(
-        F.col(src).alias("_s"), F.col(dst).alias("_d")
-    ).where(F.col("_s") != F.col("_d"))
-    und = (
-        e0.select(F.col("_s").alias("a"), F.col("_d").alias("b"))
-        .union(e0.select(F.col("_d").alias("a"), F.col("_s").alias("b")))
-        .distinct()
-    )
-    und = und.repartition("a").persist(StorageLevel.MEMORY_AND_DISK)
-    vals = tracked_local_checkpoint(
-        und.groupBy(F.col("a").alias("node")).agg(
-            F.count("*").alias("core")
+    with caching.held() as h:
+        e0 = edges.select(
+            F.col(src).alias("_s"), F.col(dst).alias("_d")
+        ).where(F.col("_s") != F.col("_d"))
+        und = (
+            e0.select(F.col("_s").alias("a"), F.col("_d").alias("b"))
+            .union(e0.select(F.col("_d").alias("a"), F.col("_s").alias("b")))
+            .distinct()
         )
-    )
-    w = Window.partitionBy("node").orderBy(F.col("_nv").desc())
-
-    def _round(cur: DataFrame) -> DataFrame:
-        neigh = und.join(
-            cur.withColumnRenamed("node", "a").withColumnRenamed(
-                "core", "_nv"
-            ),
-            "a",
-        ).select(F.col("b").alias("node"), "_nv")
-        return (
-            neigh.withColumn("_rn", F.row_number().over(w))
-            .groupBy("node")
-            .agg(
-                F.max(F.least(F.col("_rn"), F.col("_nv"))).alias("core")
+        und = h.persist(und.repartition("a"), StorageLevel.MEMORY_AND_DISK)
+        vals = h.cut(
+            und.groupBy(F.col("a").alias("node")).agg(
+                F.count("*").alias("core")
             )
         )
+        w = Window.partitionBy("node").orderBy(F.col("_nv").desc())
 
-    if iterations is not None:
-        for _ in range(iterations):
-            nxt = tracked_local_checkpoint(_round(vals))
-            free_local_checkpoint(vals)
+        def _round(cur: DataFrame) -> DataFrame:
+            neigh = und.join(
+                cur.withColumnRenamed("node", "a").withColumnRenamed(
+                    "core", "_nv"
+                ),
+                "a",
+            ).select(F.col("b").alias("node"), "_nv")
+            return (
+                neigh.withColumn("_rn", F.row_number().over(w))
+                .groupBy("node")
+                .agg(
+                    F.max(F.least(F.col("_rn"), F.col("_nv"))).alias("core")
+                )
+            )
+
+        if iterations is not None:
+            for _ in range(iterations):
+                vals = h.step(vals, _round(vals))
+            return h.keep(vals)
+        for _ in range(max_iters):
+            nxt = h.cut(_round(vals))
+            changed = (
+                nxt.withColumnRenamed("core", "_new")
+                .join(vals, "node")
+                .where(F.col("_new") != F.col("core"))
+                .isEmpty()
+            )
+            h.free(vals)
             vals = nxt
-        und.unpersist()
-        return vals
-    for _ in range(max_iters):
-        nxt = tracked_local_checkpoint(_round(vals))
-        changed = (
-            nxt.withColumnRenamed("core", "_new")
-            .join(vals, "node")
-            .where(F.col("_new") != F.col("core"))
-            .isEmpty()
+            if changed:
+                return h.keep(vals)
+        raise CorenessNotConverged(
+            f"h-index iteration did not settle in {max_iters} rounds"
         )
-        free_local_checkpoint(vals)
-        vals = nxt
-        if changed:
-            und.unpersist()
-            return vals
-    raise CorenessNotConverged(
-        f"h-index iteration did not settle in {max_iters} rounds"
-    )
 
 
 def coreness_reference(edges: list[tuple]) -> dict:

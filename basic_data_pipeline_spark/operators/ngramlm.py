@@ -70,6 +70,7 @@ from typing import NamedTuple, Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from basic_data_pipeline_spark import caching
 from basic_data_pipeline_spark.caching import tracked_persist
 from basic_data_pipeline_spark.partitioning import spread
 
@@ -101,7 +102,7 @@ class KNBigramModel(NamedTuple):
         so ctx/cont and every kn_score action reuse one materialization
         instead of re-running the corpus explode). The model stays
         usable — a released frame recomputes from lineage."""
-        self.pairs.unpersist()
+        caching.release(self.pairs)
         return self
 
 

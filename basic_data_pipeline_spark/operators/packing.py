@@ -67,11 +67,12 @@ def _cum_before(
     # boundaries per-execution, so without materializing here the totals
     # job and the caller's downstream job could see DIFFERENT _pid
     # assignments for boundary rows, silently corrupting the prefix sum.
-    # The eager cut is immune to cache eviction; tracked_local_checkpoint
-    # also inherits the session's lineage-cut mode — on a real cluster
-    # `reliable` stages the pinned assignment durably, because this pin
-    # is for DETERMINISM: executor loss must re-read the same boundary
-    # rows, never recompute a fresh sample.
+    # The eager cut is immune to cache eviction and inherits the
+    # session's lineage-cut mode — on a real cluster `reliable` stages
+    # the pinned assignment durably, because this pin is for
+    # DETERMINISM: executor loss must re-read the same boundary rows,
+    # never recompute a fresh sample. Session lifetime: the returned
+    # plan reads it.
     d = tracked_local_checkpoint(d)
     w = (
         W.partitionBy("_pid")

@@ -14,7 +14,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
-from basic_data_pipeline_spark.caching import tracked_local_checkpoint
+from basic_data_pipeline_spark.caching import (
+    tracked_local_checkpoint,
+    tracked_persist,
+)
 
 
 def _bucket(id_col: str, salt: str, n: int = 1_000_000) -> F.Column:
@@ -298,7 +301,8 @@ def token_budget_mix(
     )
     # pin the partition assignment (repartitionByRange samples its
     # boundaries per-execution — the packing._cum_before rationale);
-    # mode-aware so `reliable` stages the pin durably at cluster scale
+    # mode-aware so `reliable` stages the pin durably at cluster scale;
+    # session lifetime, since the returned plan reads it
     d = tracked_local_checkpoint(d)
     w = (
         W.partitionBy("_pid", "_src")
@@ -428,10 +432,12 @@ def negative_samples(
         assign_contiguous_ids,
     )
 
-    ids = assign_contiguous_ids(docs.select(id_col), id_col, parts).persist()
+    # the returned pairs read `ids`: session lifetime
+    ids = tracked_persist(
+        assign_contiguous_ids(docs.select(id_col), id_col, parts)
+    )
     n = ids.count()
     if n < 2:
-        ids.unpersist()
         return docs.sparkSession.createDataFrame(
             [], f"{id_col} string, neg_id string, j int"
         )

@@ -61,7 +61,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from basic_data_pipeline_spark.caching import tracked_persist
+from basic_data_pipeline_spark import caching
 from basic_data_pipeline_spark.operators.bpe import word_freqs
 from basic_data_pipeline_spark.partitioning import spread
 
@@ -220,8 +220,8 @@ def train_unigram(
         )
     if not (0.0 < shrink <= 1.0):
         raise ValueError(f"shrink must be in (0, 1]: {shrink}")
-    words = tracked_persist(spread(word_freqs(docs, text_col), "word"))
-    try:
+    with caching.held() as h:
+        words = h.persist(spread(word_freqs(docs, text_col), "word"))
         # -- seed: weighted substring counts ---------------------------
         subs = words.select(
             F.col("freq"),
@@ -298,8 +298,6 @@ def train_unigram(
             scores = _round_scores(counts)
             size = len(scores)
         return UnigramModel(scores, vocab_size, max_piece_len)
-    finally:
-        words.unpersist()
 
 
 def unigram_model_df(spark: SparkSession, model: UnigramModel) -> DataFrame:

@@ -41,21 +41,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-#: Same-session A/B seam for the persist decisions below
-#: (tools/ab_persist.py flips entries here and re-times the query under
-#: the bench posture). Site names listed here skip their
-#: tracked_persist; the frame flows through unpersisted and duplicated
-#: consumers recompute it as concurrent DAG branches. Empty in
-#: production — the committed persist set IS the measured winner.
-_PERSIST_OFF: set[str] = set()
-
-
-def _maybe_persist(df: DataFrame, site: str) -> DataFrame:
-    if site in _PERSIST_OFF:
-        return df
-    return tracked_persist(df)
-
-
 def _docs_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents, spread to cluster parallelism: the text queries are
     regex-CPU-bound projections, and a byte-small scan would otherwise
@@ -1152,9 +1137,7 @@ def dedup_exact_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     # loses (median 3.82 -> 4.09 at 32 cores) — segmentation is regex
     # CPU expensive enough to beat the cache barrier, unlike the span
     # subtree below.
-    segs = _maybe_persist(
-        dedup.segment_word_lines(d, "doc_id", "text", 8), "exact_fp_segs"
-    )
+    segs = tracked_persist(dedup.segment_word_lines(d, "doc_id", "text", 8))
     common = (
         dedup.dedup_lines(segs, "doc_id", "drop_common", 2)
         .groupBy("doc_id")
@@ -1169,7 +1152,7 @@ def dedup_exact_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # The duplicate-span subtree feeds BOTH substring arms but is NOT
     # persisted: the r11 persist regressed the driver's bench (median
-    # 2.67 -> 4.14 s); interleaved A/B (tools/ab_persist.py, r12)
+    # 2.67 -> 4.14 s); interleaved A/B (r12)
     # confirmed persisting loses on 32 cores (median 3.82 vs 3.38) and
     # 8 cores (2.97 vs 2.67) — the two span pipelines run as concurrent
     # DAG branches cheaper than one serialized cache build. Guide §5.
@@ -1725,7 +1708,7 @@ def sim_topk_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
     # query-doc slice, audiomatch base) but is NOT persisted: the r11
     # persist here was the round's biggest driver-measured regression
     # (BENCH_r11 median 3.71 -> 8.26 s). Interleaved same-session A/B
-    # (tools/ab_persist.py, r12) confirmed it on 32 cores (median 5.74
+    # (interleaved A/B, r12) confirmed it on 32 cores (median 5.74
     # persisted vs 3.33 not) AND 8 cores (5.29 vs 3.21): the cache build
     # serializes the scan+spread into a blocking unit and the cached
     # subtree loses AQE, while the duplicated scans run as concurrent
@@ -1780,7 +1763,7 @@ def sim_topk_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
     # by interleaved A/B r12: wash-to-slight-win) so the posexplode +
     # min/max fit over every vector runs once, and each _sq8_arrays
     # fold reads 64 cached rows
-    sq8_model = _maybe_persist(emb_ops.sq8_fit(e), "topk_sq8_model")
+    sq8_model = tracked_persist(emb_ops.sq8_fit(e))
     sq8 = emb_ops.sq8_search(
         e.filter(F.col("vec_id") < 5),
         emb_ops.sq8_encode(e, sq8_model),
@@ -1978,7 +1961,7 @@ def dedup_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the distinct shingle set is consumed by BOTH the minhash signature
     # agg and the verify stage's participant prune, but NOT persisted:
     # the r11 persist regressed the driver's bench (median 1.94 ->
-    # 2.57 s); interleaved A/B (tools/ab_persist.py, r12) shows
+    # 2.57 s); interleaved A/B (r12) shows
     # persisting is a wash at 32 cores and LOSES at 8 (median 1.67 vs
     # 1.41, > 2·sem) — recomputing the tokenize→explode→distinct
     # pipeline concurrently beats the cache barrier. Guide §5.

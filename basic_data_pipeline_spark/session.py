@@ -4,7 +4,7 @@ Mirrors the analytics environment the reference provisions
 (/root/reference/spark.sh:17-27: local[*] master, Arrow enabled, in-memory
 catalog) and adds the scale-conscious defaults the reference lacks: AQE with
 partition coalescing and skew-join handling, a shuffle-partition count sized
-to the local core count (overridable for a real cluster), and a pinned UTC
+to the session's own core count (overridable for a real cluster), and a pinned UTC
 session timezone so results compare bit-for-bit against the DuckDB oracle.
 
 On a real cluster the same builder applies — only ``master`` and the
@@ -15,6 +15,7 @@ plan declaratively so Catalyst + AQE re-plan at any scale.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -37,8 +38,9 @@ def get_spark(
     if master is None:
         master = f"local[{DEFAULT_CPUS}]"
     if shuffle_partitions is None:
-        cpus = os.cpu_count() or 8
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", cpus))
+        shuffle_partitions = int(
+            os.environ.get("SPARK_GRAFT_SHUFFLE", session_cores(master))
+        )
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -74,6 +76,14 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def session_cores(master: str) -> int:
+    """Task slots of a ``local[N]`` master (``SPARK_GRAFT_CPUS`` by
+    default); the host's core count for ``local[*]`` or a cluster master.
+    The shuffle width follows the session's slots, not the host's."""
+    m = re.fullmatch(r"local\[(\d+)(?:,\s*\d+)?\]", master)
+    return int(m.group(1)) if m else os.cpu_count() or 8
 
 
 def stop_spark() -> None:

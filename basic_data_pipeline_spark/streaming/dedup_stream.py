@@ -39,10 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pyspark.sql import functions as F
 
-from basic_data_pipeline_spark.caching import (
-    free_local_checkpoint,
-    release_persisted,
-)
+from basic_data_pipeline_spark.caching import release_persisted
 from basic_data_pipeline_spark.operators import indexspec
 from basic_data_pipeline_spark.operators.indexspec import read_ledger
 from basic_data_pipeline_spark.streaming import swapstore
@@ -100,10 +97,9 @@ def make_guarded_batch_fn(
     * tracked persists accumulated by the body's operators are released
       once the epoch ends, also when the body throws — foreachBatch has
       no @query wrapper to do it, and without this a long stream caches
-      frames without bound; a localCheckpoint'ed ``out``
-      (tracked_local_checkpoint) is freed too — plain unpersist is a
-      no-op for checkpoint blocks. A throwing epoch leaves its intent
-      marker set;
+      frames without bound; a lineage-cut ``out`` that the body's
+      builder kept (caching.py's session lifetime) is freed with them.
+      A throwing epoch leaves its intent marker set;
     * SINGLE WRITER (r9): the factory takes the swapstore writer lease
       on the index dir and renews it per batch — a double-launched
       second stream on the same index raises WriterLeaseHeld at
@@ -177,7 +173,6 @@ def make_guarded_batch_fn(
                 state["since_compact"] = state.get("since_compact", 0) + 1
             ledger[tag] = state
             _write_ledger(index_path, ledger)
-            free_local_checkpoint(out)
         finally:
             release_persisted()
 

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from basic_data_pipeline_spark.caching import tracked_local_checkpoint
+from basic_data_pipeline_spark import caching
 from basic_data_pipeline_spark.operators.rollup import hourly_rollup
 from basic_data_pipeline_spark.streaming import swapstore
 
@@ -157,23 +157,24 @@ def make_partitioned_rollup_batch_fn(
                 .filter(F.col("_d") >= F.col("_floor"))
                 .drop("_floor")
             )
-        partial = tracked_local_checkpoint(partial)
-        dates = sorted(
-            str(r["_d"]) for r in partial.select("_d").distinct().collect()
-        )
-        for d in dates:
-            dd = _date_dir(rollup_root, d)
-            if epoch_id <= swapstore.read_watermark(dd, tag, _PART_META):
-                continue  # this date completed before a mid-batch crash
-            old = spark.read.parquet(dd) if swapstore.has_data(dd) else None
-            merged = merge_rollups(
-                old, partial.filter(F.col("_d") == F.lit(d)).drop("_d")
+        with caching.held() as h:
+            partial = h.cut(partial)
+            dates = sorted(
+                str(r["_d"]) for r in partial.select("_d").distinct().collect()
             )
-            swapstore.replace_dir(
-                dd,
-                merged.write.mode("overwrite").parquet,
-                meta=(_PART_META, {tag: epoch_id}),
-            )
+            for d in dates:
+                dd = _date_dir(rollup_root, d)
+                if epoch_id <= swapstore.read_watermark(dd, tag, _PART_META):
+                    continue  # this date completed before a mid-batch crash
+                old = spark.read.parquet(dd) if swapstore.has_data(dd) else None
+                merged = merge_rollups(
+                    old, partial.filter(F.col("_d") == F.lit(d)).drop("_d")
+                )
+                swapstore.replace_dir(
+                    dd,
+                    merged.write.mode("overwrite").parquet,
+                    meta=(_PART_META, {tag: epoch_id}),
+                )
         swapstore.advance_watermark(rollup_root, epoch_id, tag, _META)
 
     return swapstore.attach_release(fn, rollup_root, lease_token)
