@@ -1708,7 +1708,7 @@ def sim_topk_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
     # query-doc slice, audiomatch base) but is NOT persisted: the r11
     # persist here was the round's biggest driver-measured regression
     # (BENCH_r11 median 3.71 -> 8.26 s). Interleaved same-session A/B
-    # (interleaved A/B, r12) confirmed it on 32 cores (median 5.74
+    # (r12) confirmed it on 32 cores (median 5.74
     # persisted vs 3.33 not) AND 8 cores (5.29 vs 3.21): the cache build
     # serializes the scan+spread into a blocking unit and the cached
     # subtree loses AQE, while the duplicated scans run as concurrent

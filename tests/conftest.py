@@ -10,6 +10,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from basic_data_pipeline_spark import get_spark
+from basic_data_pipeline_spark.caching import release_persisted
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
@@ -29,6 +30,17 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="module", autouse=True)
+def _release_session_storage():
+    """Frames with session lifetime (caching.py) live until the next
+    release_persisted(), which the @query wrapper and each guarded epoch
+    call in a long-lived process. Operator tests call operators
+    directly, so the suite calls it once per module: what a module's
+    tests kept does not accumulate over the whole run."""
+    yield
+    release_persisted()
 
 
 @pytest.fixture(scope="session")

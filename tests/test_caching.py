@@ -1,7 +1,9 @@
-"""Checkpoint lifecycle helpers (caching.py): DataFrame.unpersist is a
-NO-OP for localCheckpoint storage (the motivating bug — blocks
-accumulate across BPE/GD iterations), while free_local_checkpoint
-actually releases the blocks via the persistent-RDD registry.
+"""Storage lifetime (caching.py). DataFrame.unpersist is a NO-OP for
+localCheckpoint storage (the motivating bug — blocks accumulate across
+BPE/GD iterations), while free_local_checkpoint actually releases the
+blocks. Every operator's storage is back to its pre-call set after
+release_persisted, on success and on a raise, and no module outside
+caching.py takes or frees storage itself.
 
 Assertions are SET-DIFF based, never total-count based: earlier tests in
 a full-suite run leak checkpoint blocks that the JVM garbage-collects at
@@ -15,8 +17,15 @@ strangers' blocks.
 
 from __future__ import annotations
 
+import io
+import os
+import tokenize
+
+import pytest
+
 from basic_data_pipeline_spark.caching import (
     free_local_checkpoint,
+    release_persisted,
     tracked_local_checkpoint,
 )
 
@@ -38,7 +47,7 @@ def test_plain_unpersist_is_noop_for_checkpoints(spark):
     df.unpersist(blocking=True)
     # the documented trap: nothing was freed
     assert new <= _cached_ids(spark)
-    free_local_checkpoint(df)  # untracked frame: no ids — safe no-op
+    free_local_checkpoint(df)  # not a cut taken by caching: safe no-op
     assert new <= _cached_ids(spark)
 
 
@@ -76,14 +85,6 @@ def test_iteration_storage_stays_bounded(spark):
 
 # --- one owner: every operator's storage is back after release ----------
 
-import io
-import os
-import tokenize
-
-import pytest
-
-from basic_data_pipeline_spark.caching import release_persisted
-
 # a 4-node clique with a tail: coreness needs 3 rounds to settle, so
 # max_iters=1 raises CorenessNotConverged
 K4_TAIL = [("a", "b"), ("a", "c"), ("a", "d"), ("b", "c"), ("b", "d"),
@@ -106,44 +107,44 @@ def _docs(spark):
     return spark.createDataFrame(DOCS, "doc_id long, text string")
 
 
-def _pagerank(spark):
+def _pagerank(spark, tmp_path):
     from basic_data_pipeline_spark.operators import linkgraph as LG
 
     LG.pagerank(_graph(spark), iterations=1).collect()
 
 
-def _hits(spark):
+def _hits(spark, tmp_path):
     from basic_data_pipeline_spark.operators import linkgraph as LG
 
     LG.hits(_graph(spark), iterations=1).collect()
 
 
-def _lpa(spark):
+def _lpa(spark, tmp_path):
     from basic_data_pipeline_spark.operators import linkgraph as LG
 
     LG.label_propagation(_graph(spark), iterations=1).collect()
 
 
-def _coreness(spark):
+def _coreness(spark, tmp_path):
     from basic_data_pipeline_spark.operators import linkgraph as LG
 
     LG.coreness(_graph(spark)).collect()
 
 
-def _coreness_not_converged(spark):
+def _coreness_not_converged(spark, tmp_path):
     from basic_data_pipeline_spark.operators import linkgraph as LG
 
     with pytest.raises(LG.CorenessNotConverged):
         LG.coreness(_graph(spark), max_iters=1)
 
 
-def _bpe(spark):
+def _bpe(spark, tmp_path):
     from basic_data_pipeline_spark.operators import bpe
 
     assert bpe.train_bpe(_docs(spark), "text", n_merges=1)
 
 
-def _pack(spark):
+def _pack(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from basic_data_pipeline_spark.operators import packing
@@ -185,10 +186,7 @@ def test_release_returns_storage_to_pre_call_set(spark, tmp_path, case):
     session lifetime."""
     release_persisted()
     before = _persistent_ids(spark)
-    if case is _cdc_sink_raises:
-        case(spark, tmp_path)
-    else:
-        case(spark)
+    case(spark, tmp_path)
     release_persisted()
     assert not (_persistent_ids(spark) - before)
 

@@ -171,8 +171,9 @@ def test_stream_epoch_frees_checkpoint_storage(spark, tmp_path):
     """The r7-ADVICE leak: incremental_substring_dedup localCheckpoints
     two frames per micro-batch, and plain unpersist is a no-op for
     checkpoint blocks — a long-lived stream accumulated them until
-    driver GC. With tracked_local_checkpoint + the skeleton's
-    free_local_checkpoint, persistent-RDD storage returns to its
+    driver GC. The builder frees its intermediates on return and keeps
+    its result with session lifetime, which the skeleton's end-of-epoch
+    release_persisted frees, so persistent-RDD storage returns to its
     pre-epoch level after every completed epoch."""
     import time
 

@@ -20,14 +20,17 @@ def docs(spark):
 @pytest.fixture(autouse=True)
 def _release_pipeline_heap(spark):
     """Each test in this file runs a full corpus-prep pipeline whose
-    result frames pin localCheckpoint blocks on the DRIVER heap until
-    both the Python refs die AND the JVM garbage-collects — ~30 runs in
-    one session OOM'd an 8g driver at the suite's tail. Dropping the
-    refs and forcing a JVM GC after every test returns the heap to
-    baseline (measured: the whole file then runs flat)."""
+    result frames pin localCheckpoint blocks on the DRIVER heap — ~30
+    runs in one session OOM'd an 8g driver at the suite's tail. The
+    result has session lifetime (caching.py), so release it after every
+    test, as the @query wrapper does per query; dropping the refs and
+    forcing a JVM GC then returns the heap to baseline."""
     yield
     import gc
 
+    from basic_data_pipeline_spark.caching import release_persisted
+
+    release_persisted()
     gc.collect()
     spark.sparkContext._jvm.System.gc()
 

@@ -10,7 +10,8 @@ A bare name is an operator module (`dedup`, `entity`); a dotted name is
 relative to the package (`queries.llm_queries`). Modules import the name
 directly, so the patch targets each module's own binding and flips every
 session-lifetime persist in that module; persists held by a
-`caching.held()` scope are not flipped.
+`caching.held()` scope are not flipped. A module that does not import
+`tracked_persist` is refused.
 
 Timing replicates bench.py: fresh query construction per run (eager
 driver loops, outside the exec timer), noop-sink execution inside it,
@@ -43,16 +44,17 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def _module(name: str):
     pkg = "basic_data_pipeline_spark"
-    return importlib.import_module(
+    mod = importlib.import_module(
         f"{pkg}.{name}" if "." in name else f"{pkg}.operators.{name}"
     )
+    if getattr(mod, "tracked_persist", None) is not tracked_persist:
+        sys.exit(f"{mod.__name__} does not import tracked_persist")
+    return mod
 
 
-def _set_persists(all_names: set[str], off: set[str]) -> None:
-    for name in all_names:
-        _module(name).tracked_persist = (
-            (lambda df: df) if name in off else tracked_persist
-        )
+def _set_persists(mods: dict, off: set[str]) -> None:
+    for name, mod in mods.items():
+        mod.tracked_persist = (lambda df: df) if name in off else tracked_persist
 
 
 def _timed_noop(df) -> float:
@@ -75,23 +77,23 @@ def main() -> None:
         (spec, set() if spec == "-" else set(spec.split(",")))
         for spec in specs
     ]
-    all_names = set().union(*(off for _, off in configs))
+    mods = {m: _module(m) for m in set().union(*(off for _, off in configs))}
     spark = get_spark("ab")
     fn = queries()[name]
     for _, off in configs:  # warm: JVM classload, codegen, page cache
-        _set_persists(all_names, off)
+        _set_persists(mods, off)
         _timed_noop(fn(spark, SF_DIR))
     cons: dict[str, list[float]] = {s: [] for s, _ in configs}
     exe: dict[str, list[float]] = {s: [] for s, _ in configs}
     for rep in range(n):
         for spec, off in configs:
-            _set_persists(all_names, off)
+            _set_persists(mods, off)
             spark.sparkContext.setJobDescription(f"ab {name} [{spec}] #{rep}")
             t0 = time.perf_counter()
             df = fn(spark, SF_DIR)
             cons[spec].append(round(time.perf_counter() - t0, 3))
             exe[spec].append(_timed_noop(df))
-    _set_persists(all_names, set())
+    _set_persists(mods, set())
     print(f"\n=== {name} (n={n}, interleaved, sf={SF_DIR}) ===")
     for spec, _ in configs:
         c, e = cons[spec], exe[spec]
